@@ -9,11 +9,13 @@ raptor/cluster_tree_builder.py:50-131) with the geospatial recast:
   cluster→summary→parent step (reference :62-79, :84-129);
 - stop when a level has ≤ reduction_dimension + 1 nodes (reference :91-94)
   or resolution 0 is reached, or num_layers levels were built;
-- every level is an atomic checkpoint commit with lineage metrics; a killed
-  build resumes from max committed level (north-rule checkpoint/resume).
+- every level is an atomic checkpoint commit; a killed build resumes from
+  max committed level (north-rule checkpoint/resume).
 
 The loop itself is driver-side (inherently iterative, like Spark's own
-iterative algorithms); per-level ``count()`` is the only driver action.
+iterative algorithms). Checkpointed, a level costs one Spark job, its write,
+and the stop rule reads the manifest's ``rows``; uncheckpointed, each level
+is cached and ``count()``-ed. Metrics are appended once, at the end.
 """
 
 from __future__ import annotations
@@ -68,28 +70,24 @@ class TileTreeBuilder:
         cfg = self.config
         spark = docs.sparkSession
         ckpt = TreeCheckpoint(checkpoint_dir, cfg.config_hash()) if checkpoint_dir else None
-        metrics = (
-            MetricsTable(os.path.join(checkpoint_dir, "_metrics")) if checkpoint_dir else None
-        )
-        run_id = cfg.config_hash()[:12]
-
-        def record(kind: str, key: str, rows: int, wall_ms: int) -> None:
-            # S8 final-results / per-level metrics sink (reference
-            # benchmarks/_progress.py:24-58): one append commit per event
-            if metrics:
-                metrics.append(
-                    spark,
-                    [{"run_id": run_id, "kind": kind, "key": key, "rows": rows, "wall_ms": wall_ms}],
-                )
 
         if ckpt and resume and ckpt.is_complete():
             return ckpt.read_all(spark)
 
         start_level = ckpt.resume_level() if (ckpt and resume) else 0
-
         models = _models_arg(cfg)
+        lattice = getattr(cfg, "lattice", "quad")
+
+        def commit(df: DataFrame, level: int, extra: dict) -> DataFrame:
+            # checkpointed: one write job, read back without a job; otherwise
+            # cache to truncate lineage across the level loop
+            if not ckpt:
+                return df.cache()
+            ckpt.write_level(df, level, extra=extra)
+            return ckpt.read_level(spark, level)
+
         if start_level == 0:
-            current = leaf_nodes(
+            leaves = leaf_nodes(
                 docs,
                 id_col,
                 text_col,
@@ -97,48 +95,47 @@ class TileTreeBuilder:
                 cfg.max_resolution,
                 models=models,
                 cluster_model=cfg.cluster_embedding_model,
-                lattice=getattr(cfg, "lattice", "quad"),
+                lattice=lattice,
             )
-            if ckpt:
-                m = ckpt.write_level(current, 0, extra={"stage": "leaves", "res": cfg.max_resolution})
-                record("tree_level", "0", m.rows, m.wall_ms)
-                current = ckpt.read_level(spark, 0)
-            else:
-                current = current.cache()  # truncate lineage across the level loop
-            levels = [current]
-            start_level = 1
+            levels = [commit(leaves, 0, {"stage": "leaves", "res": cfg.max_resolution})]
         else:
             levels = [ckpt.read_level(spark, lv) for lv in range(start_level)]
-            current = levels[-1]
 
-        for level in range(start_level, cfg.num_layers + 1):
-            n_current = current.count()
+        for level in range(len(levels), cfg.num_layers + 1):
+            n_current = ckpt.manifest(level - 1)["rows"] if ckpt else levels[-1].count()
             if n_current <= cfg.reduction_dimension + 1:
                 break  # reference stop rule (cluster_tree_builder.py:91-94)
             res = cfg.max_resolution - (level - 1)
             if res - 1 < 0:
                 break
             parents = build_parent_nodes(
-                current,
+                levels[-1],
                 next_level=level,
                 summarization_length=cfg.summarization_length,
                 max_length_in_cluster=cfg.max_length_in_cluster,
                 models=models,
                 cluster_model=cfg.cluster_embedding_model,
-                lattice=getattr(cfg, "lattice", "quad"),
+                lattice=lattice,
             )
-            if ckpt:
-                m = ckpt.write_level(parents, level, extra={"res": res - 1})
-                record("tree_level", str(level), m.rows, m.wall_ms)
-                parents = ckpt.read_level(spark, level)
-            else:
-                parents = parents.cache()
-            levels.append(parents)
-            current = parents
+            levels.append(commit(parents, level, {"res": res - 1}))
 
         if ckpt:
             ckpt.mark_complete(len(levels))
-            record("final", "build", sum(1 for _ in levels), 0)
+            # S8 final-results / per-level metrics sink (reference
+            # benchmarks/_progress.py:24-58): one append for the whole build,
+            # levels committed by an earlier killed run included
+            run_id = cfg.config_hash()[:12]
+            manifests = [ckpt.manifest(lv) for lv in range(len(levels))]
+            MetricsTable(os.path.join(checkpoint_dir, "_metrics")).append(
+                spark,
+                [
+                    {"run_id": run_id, "kind": "tree_level", "key": str(m["level"]),
+                     "rows": m["rows"], "wall_ms": m["wall_ms"]}
+                    for m in manifests
+                ]
+                + [{"run_id": run_id, "kind": "final", "key": "build",
+                    "rows": len(levels), "wall_ms": 0}],
+            )
         out = levels[0]
         for df in levels[1:]:
             out = out.unionByName(df)

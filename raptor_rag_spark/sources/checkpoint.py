@@ -1,12 +1,16 @@
-"""Manifest-based level checkpoints with per-partition lineage + resume.
+"""Manifest-based level checkpoints with resume.
 
 Iceberg's runtime jar is not bundled with the sandbox pyspark (SURVEY.md
 §4.2), so checkpoints are parquet directories with an atomic JSON manifest
-carrying the lineage/metrics the north rule requires (per-partition rows,
-wall time, hot cells). The API is Iceberg-shaped: each level write is one
-atomic commit (manifest written via tmp-file + rename, which is atomic on
-POSIX), a killed job resumes from ``max(committed level)``, and re-running a
-committed level is a no-op.
+per level: ``rows`` observed on the write itself (one Spark job per commit),
+rows per written part file keyed by the write task's partition id (from the
+parquet footers, no job), ``wall_ms``, and the ``schema``, so reads skip
+parquet schema inference (a job per read; manifests of older builds without
+one still load through it). Hot cells come from ``rollup.tile_stats``. The
+API is Iceberg-shaped: each level write is one atomic commit (manifest
+written via tmp-file + rename, which is atomic on POSIX), a killed job
+resumes from ``max(committed level)``, and re-running a committed level is
+a no-op. Opening a checkpoint creates nothing on disk; only writes do.
 
 Reference role: the pickle save/load + config-keyed cache + incremental
 progress tracker (raptor/retrieval_augmentation.py:234-239,
@@ -21,8 +25,10 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -30,8 +36,8 @@ class LevelManifest:
     level: int
     rows: int
     partitions: list[dict] = field(default_factory=list)
-    hot_cells: list[int] = field(default_factory=list)
     wall_ms: int = 0
+    schema: dict | None = None
     committed: bool = True
     extra: dict = field(default_factory=dict)
 
@@ -44,7 +50,6 @@ class TreeCheckpoint:
         two configs' levels in one tree."""
         self.base_dir = base_dir
         self.manifest_dir = os.path.join(base_dir, "_manifests")
-        os.makedirs(self.manifest_dir, exist_ok=True)
         self.config_hash = config_hash
         existing = self._read_meta()
         if config_hash is not None:
@@ -67,6 +72,7 @@ class TreeCheckpoint:
             return json.load(f)
 
     def _write_meta(self, meta: dict) -> None:
+        os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = self._meta_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -99,30 +105,22 @@ class TreeCheckpoint:
 
     # ---------------------------------------------------------------- write
     def write_level(self, df: DataFrame, level: int, extra: dict | None = None) -> LevelManifest:
-        """Write one level partition + lineage manifest. Atomic commit: the
-        manifest rename is the commit point; data without manifest = dirty."""
+        """Write one level partition + manifest in one Spark job. Atomic
+        commit: the manifest rename is the commit point; data without
+        manifest = dirty."""
         t0 = time.monotonic()
         out = self.level_dir(level)
-        df.write.mode("overwrite").parquet(out)
-        written = df.sparkSession.read.parquet(out)
-        lineage = (
-            written.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .collect()
-        )
-        hot = (
-            written.groupBy("cell_id").count().orderBy(F.desc("count"), "cell_id").limit(5).collect()
-            if "cell_id" in written.columns
-            else []
-        )
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(out)
         manifest = LevelManifest(
             level=level,
-            rows=sum(r["rows_out"] for r in lineage),
-            partitions=[{"partition_id": r["partition_id"], "rows_out": r["rows_out"]} for r in lineage],
-            hot_cells=[r["cell_id"] for r in hot],
+            rows=rows.get["rows"],
+            partitions=_part_file_rows(out),
             wall_ms=int((time.monotonic() - t0) * 1000),
+            schema=df.schema.jsonValue(),
             extra=extra or {},
         )
+        os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = self._manifest_path(level) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest.__dict__, f)
@@ -150,7 +148,11 @@ class TreeCheckpoint:
             return json.load(f)
 
     def read_level(self, spark: SparkSession, level: int) -> DataFrame:
-        return spark.read.parquet(self.level_dir(level)).withColumn("level", F.lit(level))
+        """A committed level, read with its manifest's schema (no Spark job);
+        a manifest from an older build without one falls back to inference."""
+        schema = (self.manifest(level) or {}).get("schema")
+        reader = spark.read.schema(StructType.fromJson(schema)) if schema else spark.read
+        return reader.parquet(self.level_dir(level)).withColumn("level", F.lit(level))
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         levels = self.committed_levels()
@@ -165,3 +167,14 @@ class TreeCheckpoint:
         """First level that still needs building (= max committed + 1)."""
         levels = self.committed_levels()
         return (levels[-1] + 1) if levels else 0
+
+
+def _part_file_rows(out: str) -> list[dict]:
+    """Rows per parquet part file under ``out``, keyed by the write task's
+    partition id (``part-<id>-...``), from the footers alone."""
+    return [
+        {"partition_id": int(name.split("-")[1]), "file": name,
+         "rows": pq.read_metadata(os.path.join(out, name)).num_rows}
+        for name in sorted(os.listdir(out))
+        if name.startswith("part-")
+    ]

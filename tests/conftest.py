@@ -7,6 +7,8 @@ local[4] with AQE + Arrow enabled (the bench runs local[8]/local[32]).
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -85,3 +87,37 @@ def spark():
     s = get_spark(app_name="raptor-rag-spark-tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+class SparkJobs:
+    """Counts the Spark jobs run inside a ``with`` block: the block runs
+    under a job group of its own, read back from the status tracker once the
+    listener bus has delivered every job event."""
+
+    _PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.group = f"jobcount-{uuid.uuid4().hex}"
+        self.ids: list[int] = []
+
+    def __enter__(self):
+        self.saved = {p: self.sc.getLocalProperty(p) for p in self._PROPS}
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        self.ids = sorted(self.sc.statusTracker().getJobIdsForGroup(self.group))
+        for prop, value in self.saved.items():
+            self.sc.setLocalProperty(prop, value)
+        return False
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` then ``len(jobs)``."""
+    return lambda: SparkJobs(spark)

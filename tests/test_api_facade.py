@@ -75,12 +75,21 @@ def test_add_documents_string_and_overwrite_warn(spark, caplog):
 
 
 def test_save_and_reload(ra, tmp_path_factory, spark):
+    from raptor_rag_spark.sources.checkpoint import TreeCheckpoint
+
     path = str(tmp_path_factory.mktemp("ra_save"))
     ra.save(path)
+    ckpt = TreeCheckpoint(path)
+    for lv in ckpt.committed_levels():
+        m = ckpt.manifest(lv)
+        assert m["schema"] and m["partitions"]
+        assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
     r2 = RetrievalAugmentation(spark, tree=path)
     a = ra.tree.select("node_id").toPandas().sort_values("node_id").reset_index(drop=True)
     b = r2.tree.select("node_id").toPandas().sort_values("node_id").reset_index(drop=True)
     assert a.equals(b)
+    for q in ("spark join data", "customer data"):
+        assert r2.retrieve(q) == ra.retrieve(q)
 
 
 def test_gmm_cluster_operator(spark):

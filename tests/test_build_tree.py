@@ -4,8 +4,6 @@ Mirrors the reference's cluster_tree_builder contracts (stop rule, children
 coverage, per-level layering) plus the north rule's resume requirement.
 """
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,40 +74,135 @@ def test_n_leaves_conserved(tree):
         assert total == leaf_count, f"level {lv} must conserve leaf count"
 
 
-def test_checkpoint_resume_identical(spark, docs, tmp_path_factory):
-    d1 = str(tmp_path_factory.mktemp("tree_full"))
-    cfg = ClusterTreeConfig(**CFG)
-    full = build_tree(docs, cfg, checkpoint_dir=d1)
-    full_pdf = (
-        full.select("node_id", "level", "cell_id", "token_count")
+def _rows(tree):
+    return (
+        tree.select("node_id", "level", "cell_id", "token_count")
         .toPandas().sort_values("node_id").reset_index(drop=True)
     )
-    full_count = len(full_pdf)
 
-    # simulate a kill after level 1: drop manifests and data of levels > 1
-    ckpt = TreeCheckpoint(d1)
-    committed = ckpt.committed_levels()
-    assert committed[0] == 0 and len(committed) >= 3
-    for lv in committed:
-        if lv > 1:
-            shutil.rmtree(ckpt.level_dir(lv))
-            import os
 
-            os.remove(ckpt._manifest_path(lv))
-    assert ckpt.resume_level() == 2
+class Killed(RuntimeError):
+    pass
 
-    resumed = build_tree(docs, cfg, checkpoint_dir=d1)
-    resumed_pdf = (
-        resumed.select("node_id", "level", "cell_id", "token_count")
-        .toPandas().sort_values("node_id").reset_index(drop=True)
-    )
+
+def test_checkpoint_resume_identical(spark, docs, tmp_path_factory, monkeypatch):
+    """A build killed at every commit point k >= 1 resumes to the
+    uninterrupted tree, rebuilds no level below k and leaves one metrics
+    row per level plus one final row."""
+    import os
+
     import pandas as pd
 
-    pd.testing.assert_frame_equal(full_pdf, resumed_pdf)
-    # manifests carry lineage
+    import raptor_rag_spark.plans.build_tree as bt
+    from raptor_rag_spark.sources.metrics import MetricsTable
+
+    cfg = ClusterTreeConfig(**CFG)
+    full_pdf = _rows(build_tree(docs, cfg, checkpoint_dir=str(tmp_path_factory.mktemp("tree_full"))))
+    n_levels = int(full_pdf["level"].max()) + 1
+    assert n_levels >= 3
+
+    real_parents, real_write = bt.build_parent_nodes, TreeCheckpoint.write_level
+    for k in range(1, n_levels):
+        d = str(tmp_path_factory.mktemp(f"tree_kill_{k}"))
+
+        def parents_or_kill(df, next_level, **kw):
+            if next_level == k:
+                raise Killed(f"killed before level {k} committed")
+            return real_parents(df, next_level, **kw)
+
+        monkeypatch.setattr(bt, "build_parent_nodes", parents_or_kill)
+        with pytest.raises(Killed):
+            build_tree(docs, cfg, checkpoint_dir=d)
+        ckpt = TreeCheckpoint(d)
+        assert ckpt.resume_level() == k and not ckpt.is_complete()
+        monkeypatch.setattr(bt, "build_parent_nodes", real_parents)
+
+        written = []
+
+        def spy_write(self, df, level, extra=None):
+            written.append(level)
+            return real_write(self, df, level, extra)
+
+        monkeypatch.setattr(TreeCheckpoint, "write_level", spy_write)
+        resumed = build_tree(docs, cfg, checkpoint_dir=d)
+        monkeypatch.setattr(TreeCheckpoint, "write_level", real_write)
+
+        pd.testing.assert_frame_equal(full_pdf, _rows(resumed))
+        assert written == list(range(k, n_levels))  # levels below k not rebuilt
+        m = MetricsTable(os.path.join(d, "_metrics")).load(spark).toPandas()
+        assert sorted(m[m.kind == "tree_level"].key) == [str(lv) for lv in range(n_levels)]
+        assert list(m[m.kind == "final"].rows) == [n_levels]
+
+    # manifests carry the observed rows, rows per written file and schema
     m = ckpt.manifest(0)
-    assert m["rows"] > 0 and m["partitions"] and m["committed"]
-    assert load_tree(spark, d1).count() == full_count
+    assert m["rows"] > 0 and m["partitions"] and m["committed"] and m["schema"]
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+    assert "hot_cells" not in m
+    assert load_tree(spark, d).count() == len(full_pdf)
+
+
+def test_commit_is_one_job_and_reads_none(spark, docs, tmp_path, spark_jobs, monkeypatch):
+    """A checkpointed level commit runs one Spark job (the write); reading a
+    level or the whole tree back runs none; the build's stop rule reads the
+    committed manifests instead of running ``count()`` jobs."""
+    frame = type(docs)
+    real_count, count_jobs = frame.count, []
+
+    def spy_count(self):
+        with spark_jobs() as jobs:
+            n = real_count(self)
+        count_jobs.append(len(jobs))
+        return n
+
+    d = str(tmp_path / "tree")
+    monkeypatch.setattr(frame, "count", spy_count)
+    with spark_jobs() as build:
+        build_tree(docs, ClusterTreeConfig(**CFG), checkpoint_dir=d)
+    monkeypatch.setattr(frame, "count", real_count)
+    assert len(build) > 0
+    assert count_jobs == []
+
+    ckpt = TreeCheckpoint(d)
+    level = ckpt.read_level(spark, 1).cache()
+    level.count()
+    with spark_jobs() as write:
+        TreeCheckpoint(str(tmp_path / "one")).write_level(level, 1)
+    assert len(write) == 1
+    level.unpersist()
+
+    with spark_jobs() as read:
+        ckpt.read_level(spark, 1)
+        load_tree(spark, d)
+    assert len(read) == 0
+
+
+def test_read_level_schema_and_legacy_manifest(spark, docs, tmp_path):
+    """The manifest's schema reads back exactly what inference would; a
+    manifest without one (an older build) still loads through inference."""
+    import json
+
+    d = str(tmp_path / "tree")
+    build_tree(docs, ClusterTreeConfig(max_tokens=64, num_layers=1, max_resolution=5), d)
+    ckpt = TreeCheckpoint(d)
+    inferred = spark.read.parquet(ckpt.level_dir(1)).withColumn("level", F.lit(1))
+    assert ckpt.read_level(spark, 1).schema == inferred.schema
+
+    m = ckpt.manifest(1)
+    del m["schema"]
+    with open(ckpt._manifest_path(1), "w") as f:
+        json.dump(m, f)
+    legacy = ckpt.read_level(spark, 1)
+    assert legacy.schema == inferred.schema
+    assert sorted(legacy.collect()) == sorted(inferred.collect())
+
+
+def test_load_missing_path_creates_nothing(spark, tmp_path):
+    import os
+
+    missing = str(tmp_path / "typo")
+    with pytest.raises(FileNotFoundError):
+        load_tree(spark, missing)
+    assert not os.path.exists(missing)
 
 
 def test_hot_cell_salting(spark, docs):
