@@ -7,24 +7,30 @@ splits it:
 
 1. ``bm25_index``: explode(words) → (doc_id, term, tf) — ONE shuffle with
    map-side combine. At 100 TB this is the index-BUILD job: persist or write
-   the result once and pass it back in; every derived statistic (document
-   length, document frequency, corpus size) comes from the index, so ranking
-   never rescans the raw corpus.
-2. corpus stats: dl = Σtf per doc (exact integer), N and exact-decimal avgdl
-   broadcast as a 1-row literal. N counts docs with ≥1 token (empty docs
-   can't match and don't dilute avgdl).
-3. score: query terms (small, broadcast) equi-join the postings on term;
-   per-term BM25 contribution idf·(tf·(k1+1))/(tf + k1·(1-b+b·dl/avgdl))
-   with idf = ln((N-df+0.5)/(df+0.5)+1) via the sqlgen ln twin; per-(query,
-   doc) scores summed exactly in DECIMAL(28,15) (order-free), ranked by
-   (score desc, doc_id) with a per-query top-k window.
+   the result once and pass it back in, so ranking never rescans the raw
+   corpus.
+2. ``index_stats``: the ONE statistics path of every lexical ranker — a
+   dict of the checkpointed per-doc length table dl = Σtf, the checkpointed
+   per-term (df, cf) table from one ``groupBy("term")``, and the corpus
+   scalars N, avgdl (exact decimal mean) and |C| collected once to the
+   driver and used as literals. Build it once and pass it to every ranker
+   of a battery via ``shared=``; a ranker given only docs or postings
+   builds it itself.
+3. score: the query terms join the df-filtered term table, carry their idf
+   = ln((N-df+0.5)/(df+0.5)+1) and broadcast into ONE equi-join with the
+   postings; per-term BM25 contribution
+   idf·(tf·(k1+1))/(tf + k1·(1-b+b·dl/avgdl)); per-(query, doc) scores
+   summed exactly in DECIMAL(28,15) (order-free), ranked by (score desc,
+   doc_id) with a per-query top-k window.
 
 Hot terms (stopwords) are exactly the ones idf sends to ~0 — the
 ``max_df_ratio`` guard drops them before the join with a pure-integer
 df·den ≤ N·num comparison (same trick as the dedup family's frequency
 caps), keeping the candidate row count bounded on stopword-heavy corpora.
 
-Every float op is twin-pinned, so the DuckDB oracle hash-matches exactly.
+Every float op is twin-pinned — ln is the staged ``sqlgen.append_ln``
+twin, the same IEEE op sequence as the SQL side — so the DuckDB oracle
+hash-matches exactly.
 """
 
 from __future__ import annotations
@@ -58,41 +64,22 @@ def doc_top_terms(
     """(doc_id, term, tfidf, rank): top-k characteristic terms per document
     by tf·idf with idf = ln(N/df) — distributed keyword extraction, the
     labeling pass a corpus-exploration pipeline runs after dedup/quality.
-    Reuses the bm25_index postings; idf's ln is the sqlgen twin, so the
-    oracle is hash-exact. Terms present in every document get idf = ln(1)
-    = 0 exactly and rank last."""
-    if shared is not None:
-        # precomputed battery statistics (index_stats): zero index passes
-        n_docs = shared["stats"].select(F.col("n_docs"))
-        dfreq = shared["dfreq"]
-    elif postings is None:
-        postings = bm25_index(docs)
-        # count docs with >=1 token from the cheap words scan (no shuffle
-        # recompute of the postings DAG; identical value — see bm25_rank)
-        n_docs = (
-            docs.select(F.size(G.words_col(F.col("text"))).alias("n"))
-            .where(F.col("n") > 0)
-            .agg(F.count("*").cast("double").alias("n_docs"))
-        )
-        dfreq = postings.groupBy("term").agg(F.count("*").alias("df"))
-    else:
-        n_docs = (
-            postings.select("doc_id")
-            .distinct()
-            .agg(F.count("*").cast("double").alias("n_docs"))
-        )
-        dfreq = postings.groupBy("term").agg(F.count("*").alias("df"))
-    idf_arg = F.col("n_docs") / F.col("df").cast("double")
-    # no broadcast hint on dfreq: it is vocabulary-sized and needed for every
+    Statistics come from :func:`index_stats` (``shared=``, else computed
+    here); idf depends on df alone, so its twin ln runs once per vocabulary
+    term and the oracle is hash-exact. Terms present in every document get
+    idf = ln(1) = 0 exactly and rank last."""
+    st = _stats(docs, postings, shared)
+    idf = G.append_ln(
+        st["terms"].select(
+            "term", (F.lit(st["n_docs"]) / F.col("df").cast("double")).alias("idf_arg")
+        ),
+        "idf_arg", "idf", keep=["term"],
+    )
+    # no broadcast hint on idf: it is vocabulary-sized and needed for every
     # posting, so let AQE pick (auto-broadcast when small, shuffle join when
     # the vocab outgrows the threshold) instead of forcing a driver collect
-    scored = (
-        postings.join(dfreq, "term")
-        .join(F.broadcast(n_docs))
-        .withColumn("idf_arg", idf_arg)
-        .withColumn(
-            "tfidf", F.col("tf").cast("double") * G.ln_col(F.col("idf_arg"))
-        )
+    scored = st["postings"].join(idf, "term").withColumn(
+        "tfidf", F.col("tf").cast("double") * F.col("idf")
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
     return (
@@ -127,39 +114,69 @@ SELECT doc_id, term, tfidf, rank FROM (
 
 
 def index_stats(postings: DataFrame) -> dict:
-    """Precompute the statistics EVERY ranker re-derives from the postings —
-    per-doc length, document frequency, corpus aggregates — each eagerly
-    narrow-checkpointed, so a ranker battery (BM25 + QL + fusion + …) runs
-    O(1) passes over the index instead of O(rankers × derivations).
+    """The statistics every lexical ranker reads, computed once from the
+    postings (doc_id, term, tf) so a ranker battery (BM25 + QL + fusion + …)
+    runs O(1) passes over the index instead of O(rankers × derivations):
+
+    - ``postings``: the index itself, as given;
+    - ``dl``: (doc_id, dl_l) document length Σtf, narrow-checkpointed;
+    - ``terms``: (term, df, cf) document and collection frequency from ONE
+      ``groupBy("term")``, narrow-checkpointed — vocabulary-sized, so
+      rankers semi-join it to their query terms instead of broadcasting it;
+    - ``n_docs`` (float), ``n_long`` (int), ``avgdl`` and ``c_len`` (float,
+      None on an empty index): the corpus scalars, collected to the driver
+      in one job and spliced into plans as literals, so no ranker joins a
+      1-row frame. avgdl is the exact-decimal mean of dl; N counts docs
+      with ≥1 token (empty docs can't match and don't dilute avgdl).
 
     Round-5 scaling finding: with a 1M-page index, the bm25+ql+rrf battery
-    executed 12-16 full passes over the 120M-row postings (each ranker
-    re-deriving dl/df/stats, and unshared dl consumed twice per ranker);
-    those fixed passes dominated the wall and capped N→4N scaling at ~0.55
-    for the ranker phase. dl is N-docs rows, dfreq is vocabulary rows,
-    stats/coll one row — all tiny beside the postings, exactly the rollups
-    a persisted 100-TB index ships with (sources/searchindex.py pattern).
-    Pass the dict to bm25_rank/ql_rank via ``shared=``."""
+    executed 12-16 full passes over the 120M-row postings when each ranker
+    re-derived dl/df/stats; those fixed passes capped N→4N scaling at ~0.55
+    for the ranker phase. Every ranker takes this dict via ``shared=`` and
+    builds it itself when it is absent."""
     dl = (
         postings.groupBy("doc_id")
         .agg(F.sum("tf").alias("dl_l"))
         .localCheckpoint(eager=True)
     )
-    dfreq = (
+    terms = (
         postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
+        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
         .localCheckpoint(eager=True)
     )
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"),
+    corpus = dl.agg(
         F.count("*").alias("n_long"),
         (
             F.sum(F.col("dl_l").cast("decimal(28,6)")).cast("double")
             / F.count("*").cast("double")
         ).alias("avgdl"),
         F.sum(F.col("dl_l")).cast("double").alias("c_len"),
-    ).localCheckpoint(eager=True)
-    return {"dl": dl, "dfreq": dfreq, "stats": stats}
+    ).first()
+    return {
+        "postings": postings,
+        "dl": dl,
+        "terms": terms,
+        "n_docs": float(corpus["n_long"]),
+        "n_long": corpus["n_long"],
+        "avgdl": corpus["avgdl"],
+        "c_len": corpus["c_len"],
+    }
+
+
+def _stats(docs: DataFrame | None, postings: DataFrame | None, shared: dict | None) -> dict:
+    """A ranker's statistics: ``shared`` when given, else :func:`index_stats`
+    over ``postings`` — built from ``docs`` and checkpointed once when no
+    index is passed, so the statistics and the scoring read one copy."""
+    if shared is not None:
+        return shared
+    if postings is None:
+        postings = bm25_index(docs).localCheckpoint(eager=True)
+    return index_stats(postings)
+
+
+def _dlit(v: float | None):
+    """A corpus scalar as a DOUBLE literal (typed null on an empty index)."""
+    return F.lit(v).cast("double")
 
 
 def _bm25_matched(
@@ -176,79 +193,46 @@ def _bm25_matched(
     for every query-term posting that survives the df guards. Both
     :func:`bm25_rank` (full scoring) and :func:`maxscore_rank` (pruned
     scoring) consume this — the pruned path must produce identical top-k."""
-    if shared is not None:
-        # precomputed battery statistics (index_stats): zero index passes
-        dl = shared["dl"]
-        dfreq = shared["dfreq"]
-        stats = shared["stats"].drop("c_len")
-    elif postings is None:
-        postings = bm25_index(docs)
-        # doc length from the raw token arrays (scan + size(), no shuffle):
-        # Catalyst doesn't reuse subplans, so deriving dl from `postings`
-        # would re-execute the postings groupBy per consumer — measured 3-4x
-        # slower. sum(tf) == size(ws) for docs with >=1 token, so the two
-        # derivations are value-identical; N counts docs with >=1 token.
-        words = docs.select(F.col("doc_id"), G.words_col(F.col("text")).alias("ws"))
-        dl = (
-            words.select("doc_id", F.size("ws").cast("long").alias("dl_l"))
-            .where(F.col("dl_l") > 0)
-        )
-    else:
-        # prebuilt (persisted) index: everything derives from it, the raw
-        # corpus is never touched
-        dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl_l"))
-    if shared is None:
-        dfreq = postings.groupBy("term").agg(F.count("*").alias("df"))
-        stats = dl.agg(
-            F.count("*").cast("double").alias("n_docs"),
-            F.count("*").alias("n_long"),
-            (
-                F.sum(F.col("dl_l").cast("decimal(28,6)")).cast("double")
-                / F.count("*").cast("double")
-            ).alias("avgdl"),
-        )
+    st = _stats(docs, postings, shared)
+    terms = st["terms"]
     if df_cap is not None:
-        dfreq = dfreq.where(F.col("df") <= df_cap)
+        terms = terms.where(F.col("df") <= df_cap)
     if max_df_ratio is not None:
         num, den = max_df_ratio
-        dfreq = (
-            dfreq.join(F.broadcast(stats.select("n_long")))
-            .where(F.col("df") * F.lit(den) <= F.col("n_long") * F.lit(num))
-            .drop("n_long")
+        terms = terms.where(
+            F.col("df") * F.lit(den) <= F.lit(st["n_long"]).cast("long") * F.lit(num)
         )
-    stats = stats.drop("n_long")
-
     qterms = queries.select(
         "query_id", F.explode(G.words_col(F.col("qtext"))).alias("term")
     ).distinct()
-    # df only for query terms: the full dfreq is corpus-vocabulary-sized
-    # (hundreds of millions of rows on a web crawl) — broadcasting it whole
-    # would OOM the driver; semi-joined to the tiny query-term set it is
-    # bounded by query length
-    dfreq_q = dfreq.join(F.broadcast(qterms.select("term").distinct()), "term")
-
-    idf_arg = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (
+    # idf depends on df alone, so it is computed on the query side: the
+    # vocabulary-sized term table semi-joins the tiny query-term set, and
+    # that ONE (query_id, term, idf) table broadcasts into the postings join
+    idf_arg = (F.lit(st["n_docs"]) - F.col("df") + F.lit(0.5)) / (
         F.col("df") + F.lit(0.5)
     ) + F.lit(1.0)
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(dfreq_q), "term")
-        .join(F.broadcast(stats))
-        .join(dl, "doc_id")
-        .withColumn("tfd", F.col("tf").cast("double"))
-        .withColumn("dld", F.col("dl_l").cast("double"))
-        .withColumn("idf_arg", idf_arg)
+    qidf = G.append_ln(
+        terms.join(F.broadcast(qterms), "term").select(
+            "query_id", "term", idf_arg.alias("idf_arg")
+        ),
+        "idf_arg", "idf", keep=["query_id", "term"],
     )
-    contrib = G.ln_col(F.col("idf_arg")) * (
-        (F.col("tfd") * F.lit(k1 + 1.0))
+    tfd = F.col("tf").cast("double")
+    contrib = F.col("idf") * (
+        (tfd * F.lit(k1 + 1.0))
         / (
-            F.col("tfd")
+            tfd
             + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * (F.col("dld") / F.col("avgdl")))
+            * (
+                F.lit(1.0 - b)
+                + F.lit(b) * (F.col("dl_l").cast("double") / _dlit(st["avgdl"]))
+            )
         )
     )
-    return matched.withColumn("contrib", contrib).select(
-        "query_id", "term", "doc_id", "contrib"
+    return (
+        st["postings"].join(F.broadcast(qidf), "term")
+        .join(st["dl"], "doc_id")
+        .select("query_id", "term", "doc_id", contrib.alias("contrib"))
     )
 
 
@@ -282,8 +266,8 @@ def bm25_rank(
     drops terms with document frequency above an absolute cap;
     ``max_df_ratio=(num, den)`` is the corpus-relative form (keep terms with
     df·den ≤ N·num — pure-integer, engine-portable); e.g. (1, 2) drops terms
-    appearing in more than half the corpus. ``shared`` takes the
-    precomputed battery statistics from :func:`index_stats`."""
+    appearing in more than half the corpus. ``shared`` takes the battery
+    statistics from :func:`index_stats` (postings included)."""
     matched = _bm25_matched(docs, queries, k1, b, df_cap, max_df_ratio, postings, shared)
     return _rank_scored(matched, top_k)
 
@@ -521,65 +505,55 @@ def ql_rank(
     docs × terms cross join ever materializes. Out-of-vocabulary query terms
     (cf = 0 ⇒ ln 0) are dropped from both sums, per standard practice.
 
-    Scale shape mirrors :func:`bm25_rank`: ONE postings shuffle (reusable via
-    ``postings=`` — at 100 TB the index is built once and persisted),
-    collection frequency aggregated ONLY for the broadcast query-term set,
+    Scale shape mirrors :func:`bm25_rank`: statistics from
+    :func:`index_stats` (collection frequency from its term table, |C| a
+    literal), the query-term table broadcast into one postings join,
     per-(query, doc) contributions summed exactly in DECIMAL(28,15), twin ln
     throughout — the DuckDB oracle hash-matches bit-for-bit."""
-    if shared is not None:
-        # precomputed battery statistics (index_stats): zero index passes
-        # for dl/coll, and dl arrives checkpointed so its two consumers
-        # (collection length + the per-doc background term) share one copy
-        dl = shared["dl"]
-        coll = shared["stats"].select("c_len")
-    elif postings is None:
-        postings = bm25_index(docs)
-        # dl from the raw token arrays, not the postings DAG — same
-        # value-identical shortcut (and reason) as bm25_rank
-        words = docs.select(F.col("doc_id"), G.words_col(F.col("text")).alias("ws"))
-        dl = (
-            words.select("doc_id", F.size("ws").cast("long").alias("dl_l"))
-            .where(F.col("dl_l") > 0)
-        )
-        coll = dl.agg(F.sum("dl_l").cast("double").alias("c_len"))
-    else:
-        dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl_l"))
-        coll = dl.agg(F.sum("dl_l").cast("double").alias("c_len"))
+    st = _stats(docs, postings, shared)
     qtf = (
         queries.select("query_id", F.explode(G.words_col(F.col("qtext"))).alias("term"))
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("long").alias("qtf"))
     )
-    # collection frequency only for query terms: the full cf table is
-    # vocabulary-sized; semi-joined to the broadcast query-term set it is
-    # bounded by total query length
-    cf = (
-        postings.join(F.broadcast(qtf.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.sum("tf").cast("double").alias("cf"))
+    # in-vocabulary query terms (cf > 0 by construction) with their
+    # smoothing denominator μ·cf/|C|: the vocabulary-sized term table
+    # semi-joined to the broadcast query terms, bounded by query length
+    qv = st["terms"].join(F.broadcast(qtf), "term").select(
+        "query_id", "term", "qtf", F.col("qtf").cast("double").alias("wt"),
+        (F.lit(mu) * (F.col("cf").cast("double") / _dlit(st["c_len"]))).alias("bg_cf"),
     )
-    qv = qtf.join(cf, "term")  # in-vocabulary query terms (cf > 0 by construction)
-    qlen = qv.groupBy("query_id").agg(F.sum("qtf").cast("double").alias("qlen"))
-    matched = (
-        postings.join(F.broadcast(qv), "term")
-        .join(F.broadcast(coll))
-        .withColumn(
-            "arg",
-            F.lit(1.0)
-            + F.col("tf").cast("double")
-            / (F.lit(mu) * (F.col("cf") / F.col("c_len"))),
-        )
-        .withColumn("contrib", F.col("qtf").cast("double") * G.ln_col(F.col("arg")))
+    wsum = qv.groupBy("query_id").agg(F.sum("qtf").cast("double").alias("wsum"))
+    return _ql_scored(st, qv, wsum, mu, top_k)
+
+
+def _ql_scored(st: dict, qw: DataFrame, wsum: DataFrame, mu: float, top_k: int) -> DataFrame:
+    """Dirichlet-QL scoring shared by :func:`ql_rank` and :func:`rm3_rank`:
+    Σ wt·ln(1 + tf/bg_cf) over the matched postings of the weighted query
+    terms ``qw`` (query_id, term, wt, bg_cf), plus the doc-only background
+    term wsum·ln(μ/(dl + μ)), ranked per query."""
+    matched = G.append_ln(
+        st["postings"].join(F.broadcast(qw.select("query_id", "term", "wt", "bg_cf")), "term")
+        .select(
+            "query_id", "doc_id", "wt",
+            (F.lit(1.0) + F.col("tf").cast("double") / F.col("bg_cf")).alias("arg"),
+        ),
+        "arg", "ln_arg", keep=["query_id", "doc_id", "wt"],
     )
     s = matched.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("contrib").cast("decimal(28,15)")).cast("double").alias("s_match")
+        F.sum((F.col("wt") * F.col("ln_arg")).cast("decimal(28,15)"))
+        .cast("double")
+        .alias("s_match")
     )
-    scored = (
-        s.join(dl, "doc_id")
-        .join(F.broadcast(qlen), "query_id")
-        .withColumn("bg_arg", F.lit(mu) / (F.col("dl_l").cast("double") + F.lit(mu)))
-        .withColumn("score", F.col("s_match") + F.col("qlen") * G.ln_col(F.col("bg_arg")))
-    )
+    scored = G.append_ln(
+        s.join(st["dl"], "doc_id")
+        .join(F.broadcast(wsum), "query_id")
+        .select(
+            "query_id", "doc_id", "s_match", "wsum",
+            (F.lit(mu) / (F.col("dl_l").cast("double") + F.lit(mu))).alias("bg_arg"),
+        ),
+        "bg_arg", "ln_bg", keep=["query_id", "doc_id", "s_match", "wsum"],
+    ).withColumn("score", F.col("s_match") + F.col("wsum") * F.col("ln_bg"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -704,7 +678,7 @@ RM3_FB_TERMS = 10
 
 
 def rm3_rank(
-    docs: DataFrame,
+    docs: DataFrame | None,
     queries: DataFrame,
     top_k: int = 10,
     fb_docs: int = RM3_FB_DOCS,
@@ -735,26 +709,15 @@ def rm3_rank(
     second pass; the postings index is built ONCE and shared by both passes.
     All float reductions are DECIMAL(28,15) sums of deterministic IEEE ops,
     twin ln throughout — the DuckDB oracle hash-matches exactly."""
-    if postings is None:
-        postings = bm25_index(docs).localCheckpoint(eager=True)  # shared by both passes
-    if shared is not None:
-        # precomputed battery statistics (index_stats): dl arrives
-        # checkpointed, so the feedback join + second pass share one copy
-        dl = shared["dl"]
-        coll = shared["stats"].select("c_len")
-    else:
-        dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl_l"))
-        coll = dl.agg(F.sum("dl_l").cast("double").alias("c_len"))
-
+    st = _stats(docs, postings, shared)  # one index + statistics, both passes
     fb = bm25_rank(
-        None, queries, top_k=fb_docs, max_df_ratio=max_df_ratio, postings=postings,
-        shared=shared,
+        None, queries, top_k=fb_docs, max_df_ratio=max_df_ratio, shared=st
     ).select("query_id", "doc_id")
     nf = fb.groupBy("query_id").agg(F.count("*").alias("nf"))
     # P(t|R): every (feedback doc, term) posting contributes tf/dl
     prel_raw = (
-        fb.join(postings, "doc_id")
-        .join(dl, "doc_id")
+        fb.join(st["postings"], "doc_id")
+        .join(st["dl"], "doc_id")
         .withColumn(
             "c",
             (F.col("tf").cast("double") / F.col("dl_l").cast("double")).cast(
@@ -780,12 +743,7 @@ def rm3_rank(
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("long").alias("qtf"))
     )
-    vocab_q = (
-        postings.join(F.broadcast(qtf.select("term").distinct()), "term")
-        .select("term")
-        .distinct()
-    )
-    qv = qtf.join(F.broadcast(vocab_q), "term")
+    qv = st["terms"].select("term").join(F.broadcast(qtf), "term")
     qlen = qv.groupBy("query_id").agg(F.sum("qtf").cast("double").alias("qlen"))
     mle = qv.join(F.broadcast(qlen), "query_id").select(
         "query_id", "term", (F.col("qtf").cast("double") / F.col("qlen")).alias("mle")
@@ -803,37 +761,11 @@ def rm3_rank(
     wsum = wq.groupBy("query_id").agg(
         F.sum(F.col("wt").cast("decimal(28,15)")).cast("double").alias("wsum")
     )
-    cf = (
-        postings.join(F.broadcast(wq.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.sum("tf").cast("double").alias("cf"))
+    qw = st["terms"].join(F.broadcast(wq), "term").select(
+        "query_id", "term", "wt",
+        (F.lit(mu) * (F.col("cf").cast("double") / _dlit(st["c_len"]))).alias("bg_cf"),
     )
-    matched = (
-        postings.join(F.broadcast(wq.join(cf, "term")), "term")
-        .join(F.broadcast(coll))
-        .withColumn(
-            "arg",
-            F.lit(1.0)
-            + F.col("tf").cast("double")
-            / (F.lit(mu) * (F.col("cf") / F.col("c_len"))),
-        )
-        .withColumn("contrib", F.col("wt") * G.ln_col(F.col("arg")))
-    )
-    s = matched.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("contrib").cast("decimal(28,15)")).cast("double").alias("s_match")
-    )
-    scored = (
-        s.join(dl, "doc_id")
-        .join(F.broadcast(wsum), "query_id")
-        .withColumn("bg_arg", F.lit(mu) / (F.col("dl_l").cast("double") + F.lit(mu)))
-        .withColumn("score", F.col("s_match") + F.col("wsum") * G.ln_col(F.col("bg_arg")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return _ql_scored(st, qw, wsum, mu, top_k)
 
 
 def rm3_rank_sql(

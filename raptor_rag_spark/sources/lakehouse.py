@@ -44,10 +44,12 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,6 +99,22 @@ def zranges_for_bbox(
         else:
             merged.append([lo, hi])
     return [(lo, hi) for lo, hi in merged]
+
+
+def _footer_min_max(meta: pq.FileMetaData, col: str) -> list:
+    """[min, max] of top-level column ``col`` over a file's row groups from
+    the footer statistics; [None, None] when unknown or all null."""
+    rgs = [meta.row_group(i) for i in range(meta.num_row_groups)]
+    j = next(k for k in range(rgs[0].num_columns) if rgs[0].column(k).path_in_schema == col)
+    lo = hi = None
+    for rg in rgs:
+        st = rg.column(j).statistics
+        if st is not None and st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+            return [None, None]  # non-null values without statistics
+    return [lo, hi]
 
 
 class LakeTable:
@@ -224,19 +242,25 @@ class LakeTable:
         return files
 
     # ---------------------------------------------------------------- write
-    def _collect_file_stats(self, spark: SparkSession, path: str) -> list[dict]:
-        """Per-parquet-file (rows, min/max of stats_cols) — ONE metadata-scale
-        aggregation over the freshly written files, grouped by
-        input_file_name, the same stats Iceberg footers carry."""
-        df = spark.read.parquet(path)
-        aggs = [F.count("*").alias("rows")]
-        for c in self.stats_cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        rows = df.groupBy(F.input_file_name().alias("file")).agg(*aggs).collect()
+    def _collect_file_stats(self, path: str) -> list[dict]:
+        """Per-parquet-file (rows, min/max of stats_cols) of a freshly
+        written fileset, read driver-side from the parquet footers
+        (``pyarrow.parquet.read_metadata``) — no Spark job, the same stats
+        Iceberg manifests carry. A file's [min, max] folds its row groups'
+        footer statistics; a column with no non-null value in the file, or
+        a row group without statistics, gives [None, None] (unprunable).
+        Files with 0 rows are left out; ``path`` is the part file's
+        ``file:`` URI, the form ``input_file_name()`` reports."""
         out = []
-        for r in rows:
-            stats = {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in self.stats_cols}
-            out.append({"path": r["file"], "rows": r["rows"], "stats": stats})
+        for name in sorted(os.listdir(path)):
+            if not (name.startswith("part-") and name.endswith(".parquet")):
+                continue
+            f = os.path.abspath(os.path.join(path, name))
+            meta = pq.read_metadata(f)
+            if meta.num_rows == 0:
+                continue
+            stats = {c: _footer_min_max(meta, c) for c in self.stats_cols}
+            out.append({"path": pathlib.Path(f).as_uri(), "rows": meta.num_rows, "stats": stats})
         return out
 
     @contextmanager
@@ -388,7 +412,7 @@ class LakeTable:
             extra = {**(extra or {}), "epoch_id": epoch_id}
         base = self.current_snapshot_id()
         fileset = self._write_files(df, bucket_by, n_buckets)
-        added = self._collect_file_stats(df.sparkSession, fileset)
+        added = self._collect_file_stats(fileset)
         # expected_parent engages the optimistic-concurrency path: if
         # another writer committed while our files were writing, the append
         # is rebased onto the new current inside the commit lock (appends
@@ -412,7 +436,7 @@ class LakeTable:
         """Commit the rows as a full-table replacement (old files stay on
         disk for time travel until expire_snapshots)."""
         fileset = self._write_files(df, bucket_by, n_buckets)
-        added = self._collect_file_stats(df.sparkSession, fileset)
+        added = self._collect_file_stats(fileset)
         return self._commit("overwrite", added, extra)
 
     # ----------------------------------------------------------------- read
@@ -505,7 +529,7 @@ class LakeTable:
         base = self.current_snapshot_id()
         keyed = df.withColumn(self.ZKEY, zorder_key_col(ix, iy, res))
         fileset = self._write_files(keyed, None, n_files, range_by=self.ZKEY)
-        added = self._collect_file_stats(df.sparkSession, fileset)
+        added = self._collect_file_stats(fileset)
         return self._commit(
             "append", added, {**(extra or {}), "zorder_res": res}, expected_parent=base
         )
@@ -614,7 +638,7 @@ class LakeTable:
             merged = merge_upsert(base, updates, key_cols, value_cols).drop("action")
             extra = {"operation_detail": "merge", "keys": list(key_cols)}
             fileset = self._write_files(merged, bucket_by, n_buckets)
-            added = self._collect_file_stats(updates.sparkSession, fileset)
+            added = self._collect_file_stats(fileset)
             try:
                 return self._commit(
                     "overwrite", added, extra, expected_parent=base_sid
@@ -642,7 +666,7 @@ class LakeTable:
                 fileset = self._write_files(df, None, n_files, range_by=sort_by)
             else:
                 fileset = self._write_files(df.coalesce(n_files), None, n_files)
-            added = self._collect_file_stats(spark, fileset)
+            added = self._collect_file_stats(fileset)
             try:
                 return self._commit(
                     "overwrite", added, {"operation_detail": "compact"},
@@ -725,8 +749,8 @@ class LakeTable:
                     json.dump(oldest, f)
                 os.replace(tmp, path)
         def _local(p: str) -> str:
-            # input_file_name() yields file:///... URIs; manifests store them
-            # verbatim, so normalize to a plain local path before comparing
+            # manifests store file:///... URIs (the input_file_name() form),
+            # so normalize to a plain local path before comparing
             from urllib.parse import urlparse
 
             return urlparse(p).path if p.startswith("file:") else p

@@ -451,9 +451,9 @@ def test_concurrent_append_rebases_no_data_loss(spark, docs, tmp_path):
     # writer B's append (expected_parent=base) must rebase onto A's commit
     fs_a = t1._write_files(a, None, 2)
     fs_b = t2._write_files(b, None, 2)
-    sid_a = t1._commit("append", t1._collect_file_stats(spark, fs_a), None,
+    sid_a = t1._commit("append", t1._collect_file_stats(fs_a), None,
                        expected_parent=base)
-    sid_b = t2._commit("append", t2._collect_file_stats(spark, fs_b), None,
+    sid_b = t2._commit("append", t2._collect_file_stats(fs_b), None,
                        expected_parent=base)
     assert sid_b > sid_a
     snap_b = t1.snapshot(sid_b)
@@ -478,7 +478,7 @@ def test_concurrent_derived_commit_aborts_then_retry_succeeds(spark, docs, tmp_p
     # writer B prepares an overwrite-class commit derived from `base`
     derived = t2.read(spark, base).withColumn("lang", F.lit("xx"))
     fs_b = t2._write_files(derived, None, 2)
-    added_b = t2._collect_file_stats(spark, fs_b)
+    added_b = t2._collect_file_stats(fs_b)
     # writer A lands an append in between
     t1.append(docs.filter("doc_id >= 10 AND doc_id < 15"))
     with pytest.raises(CommitConflictError):
@@ -513,3 +513,44 @@ def test_commit_lock_breaks_stale_and_times_out(tmp_path):
         with t._commit_lock(timeout_s=0.3, stale_s=120.0):
             pass
     os.unlink(lock)
+
+
+def test_commit_stats_from_footers_read_nothing_back(spark, tmp_path, spark_jobs):
+    """A commit's per-file (rows, [min, max]) come from the parquet footers:
+    0 Spark jobs, and the same values a groupBy(input_file_name()) over the
+    fileset gives. A stats column that is all null in a file rolls up to
+    None; 0-row files are left out; paths stay file: URIs, so orphan and
+    snapshot GC still match them."""
+    root = str(tmp_path / "t")
+    t = LakeTable(root, stats_cols=("doc_id", "k"))
+    nulls = spark.range(0, 10).select(F.col("id").alias("doc_id"), F.lit(None).cast("long").alias("k"))
+    vals = spark.range(10, 40).select(F.col("id").alias("doc_id"), (F.col("id") * 3).alias("k"))
+    fileset = t._write_files(nulls.repartition(1).union(vals.repartition(3)), None, 4)
+    with spark_jobs() as jobs:
+        added = t._collect_file_stats(fileset)
+    assert len(jobs) == 0
+
+    want = {
+        r["path"]: (r["rows"], {"doc_id": [r["lo"], r["hi"]], "k": [r["klo"], r["khi"]]})
+        for r in spark.read.parquet(fileset)
+        .groupBy(F.input_file_name().alias("path"))
+        .agg(F.count("*").alias("rows"), F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
+             F.min("k").alias("klo"), F.max("k").alias("khi"))
+        .collect()
+    }
+    assert {e["path"]: (e["rows"], e["stats"]) for e in added} == want
+    assert len(added) == 4 and all(e["path"].startswith("file:") for e in added)
+    assert [None, None] in [e["stats"]["k"] for e in added]
+    assert t._rollup(added) == {"doc_id": [0, 39], "k": None}
+
+    empty_fs = t._write_files(nulls.limit(0), None, 1)
+    assert t._collect_file_stats(empty_fs) == []
+
+    sid = t._commit("append", added)
+    assert t.read(spark, sid).count() == 40
+    assert t.scan(spark, "doc_id", 12, 14).count() == 3
+    # the empty fileset is referenced by no manifest: an orphan
+    assert t.vacuum_orphans() == [empty_fs]
+    t.append(vals.limit(5))
+    t.overwrite(vals.limit(2))
+    assert fileset in t.expire_snapshots(keep_last=1)

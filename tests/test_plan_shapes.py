@@ -495,3 +495,25 @@ def test_codegen_fallback_families_compile(tmp_path):
             ln for ln in proc.stderr.splitlines() if "Compiling" in ln
         )[:3000]
     )
+
+
+def test_shared_stats_rankers_join_no_stats_frame(spark):
+    """With index_stats passed via shared=, the corpus scalars are literals:
+    neither BM25 nor QL nested-loop-joins a 1-row statistics frame, and QL
+    takes collection frequency from the statistics' term table instead of
+    aggregating the postings by term."""
+    from raptor_rag_spark.operators.ranking import bm25_index, bm25_rank, index_stats, ql_rank
+
+    docs = spark.createDataFrame(
+        [(1, "spark joins data"), (2, "tiles roll up data"), (3, "spark tiles")],
+        "doc_id long, text string",
+    )
+    qs = spark.createDataFrame([(0, "spark data"), (1, "tiles")], "query_id long, qtext string")
+    shared = index_stats(bm25_index(docs))
+    bm25 = explain_str(bm25_rank(None, qs, max_df_ratio=(9, 10), shared=shared))
+    ql = explain_str(ql_rank(None, qs, shared=shared))
+    for plan in (bm25, ql):
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+    # the postings' own aggregate (doc_id, term) is still there
+    assert "Keys [2]: [doc_id#" in ql, ql
+    assert "Keys [1]: [term#" not in ql, ql
