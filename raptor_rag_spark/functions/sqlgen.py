@@ -199,43 +199,16 @@ def _unsupported(metric: str) -> ValueError:
     )
 
 
-def dist_cols(a: Column, b: Column, dim: int, metric: str = "cosine") -> Column:
-    if metric == "cosine":
-        return F.lit(1.0) - cosine_sim_cols(a, b, dim)
-    if metric == "L1":
-        z = F.lit(0.0)
-        for i in range(dim):
-            z = z + F.abs(
-                F.element_at(a, i + 1).cast("double") - F.element_at(b, i + 1).cast("double")
-            )
-        return z
-    if metric == "L2":
-        z = F.lit(0.0)
-        for i in range(dim):
-            d = F.element_at(a, i + 1).cast("double") - F.element_at(b, i + 1).cast("double")
-            z = z + d * d
-        return F.sqrt(z)
-    if metric == "Linf":
-        return F.greatest(
-            *[
-                F.abs(
-                    F.element_at(a, i + 1).cast("double") - F.element_at(b, i + 1).cast("double")
-                )
-                for i in range(dim)
-            ]
-        )
-    raise _unsupported(metric)
-
-
 def dist_expr_cols(a: str, b: str, dim: int, metric: str = "cosine") -> Column:
-    """:func:`dist_cols` built as ONE Spark-SQL string parse instead of
-    ~dim·6 py4j Column calls. The parsed tree evaluates the identical IEEE
-    op sequence (left-assoc folds starting at 0.0D, CAST AS DOUBLE per
-    element, same metric dispatch), so results are bit-identical — but
-    driver-side construction drops from ~1.3 s to milliseconds per call
-    (measured on the warm single-question retrieve path, round-5; the same
-    string-parse rationale as srp_pairs' band keys). ``a``/``b`` are Spark
-    SQL expression strings (a column name, or ``embeddings['model']``)."""
+    """Metric-dispatched distance built as ONE Spark-SQL string parse
+    instead of ~dim·6 py4j Column calls: building the expression takes
+    milliseconds, not ~1.3 s per call (measured on the warm single-question
+    retrieve path; the same string-parse rationale as srp_pairs' band
+    keys). The parsed tree evaluates the IEEE op sequence of its DuckDB twin
+    :func:`dist_sql` (left-assoc folds starting at 0.0, CAST AS DOUBLE per
+    element, same metric dispatch), so results are bit-identical. ``a``/``b``
+    are Spark SQL expression strings (a column name, or
+    ``embeddings['model']``)."""
     el = lambda v, i: f"CAST(element_at({v}, {i + 1}) AS DOUBLE)"  # noqa: E731
     if metric == "cosine":
         dot = " + ".join(f"{el(a, i)} * {el(b, i)}" for i in range(dim))

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
 from ..kernels.chunker import split_text
-from ..kernels.embedder import DEFAULT_DIM, embed_texts
+from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
 from ..kernels.tokenizer import RegexTokenizer
 
 
@@ -37,15 +37,16 @@ def make_embed_udf(dim: int = DEFAULT_DIM, model=None):
     cache inside embed_texts).
 
     Reference role: BaseEmbeddingModel.create_embedding
-    (raptor/embedding_models.py:7-10), L2-normalized (:48). Passing a
-    ``model`` (BaseEmbeddingModel) routes through its ``embed_batch`` —
-    the pluggable-model path; None is the stock hash-ngram kernel.
+    (raptor/embedding_models.py:7-10), L2-normalized (:48). Rows go
+    through ``model.embed_batch`` (a BaseEmbeddingModel); None is the stock
+    ``HashNgramEmbeddingModel(dim)``, the tree operators' default too.
     """
+    model = model if model is not None else HashNgramEmbeddingModel(dim)
 
     @F.pandas_udf(ArrayType(FloatType()))
     def embed_udf(texts: pd.Series) -> pd.Series:
         batch = texts.fillna("").tolist()
-        mat = embed_texts(batch, dim) if model is None else model.embed_batch(batch)
+        mat = model.embed_batch(batch)
         return pd.Series(list(mat))
 
     return embed_udf

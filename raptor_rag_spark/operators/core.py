@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import sqlgen as G
 from ..functions.udfs import make_chunk_udf, make_embed_udf
 from ..kernels.chunker import split_text
-from ..kernels.embedder import DEFAULT_DIM, embed_texts
+from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
 from ..kernels.tokenizer import RegexTokenizer
 
 
@@ -66,6 +66,53 @@ def with_cell(
     return df.withColumn("cell_id", G.cell_col(F.col(x_col), F.col(y_col), res))
 
 
+def batch_embedder(models: dict | None, cluster_model: str = "default", dim: int = DEFAULT_DIM):
+    """The one embedding path of the tree operators: ``(embed, multi)``.
+
+    ``models`` maps names to BaseEmbeddingModel; None is the stock
+    ``{"default": HashNgramEmbeddingModel(dim)}``. ``embed(texts)`` returns
+    the ``embedding`` column, the ``cluster_model``'s vectors — the ones that
+    drive cell assignment (reference retrieval_augmentation.py:56-64
+    routing) — and, when ``multi`` (more than one model), an ``embeddings``
+    column of name → vector maps (reference multi-model surface,
+    raptor/tree_structures.py:9 and tree_builder.py:125-127).
+
+    The xy projection reads the first ``dim`` entries of the cluster
+    vector, so a narrower cluster model is refused: up front when it
+    declares its width (``model.dim``), otherwise on the executor at its
+    first batch. No model is called on the driver — backends load on
+    executors only (kernels/adapters.py)."""
+    if models is None:
+        models = {"default": HashNgramEmbeddingModel(dim)}
+    if cluster_model not in models:
+        raise ValueError("cluster_embedding_model must be a key in the embedding_models dictionary")
+
+    def check_width(width: int) -> None:
+        if width < dim:
+            raise ValueError(
+                f"cluster embedding model {cluster_model!r} gives {width}-dimensional "
+                f"vectors, but the tile tree projects {dim}-dimensional ones"
+            )
+
+    declared = getattr(models[cluster_model], "dim", None)
+    if declared is not None:
+        check_width(declared)
+    multi = len(models) > 1
+
+    def embed(texts: list[str]) -> dict[str, list]:
+        per_model = {name: m.embed_batch(texts) for name, m in models.items()}
+        if texts:
+            check_width(len(per_model[cluster_model][0]))
+        out = {"embedding": list(per_model[cluster_model])}
+        if multi:
+            out["embeddings"] = [
+                {name: vecs[i] for name, vecs in per_model.items()} for i in range(len(texts))
+            ]
+        return out
+
+    return embed, multi
+
+
 def chunk_embed_fused(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -75,7 +122,6 @@ def chunk_embed_fused(
     overlap: int = 0,
     models: dict | None = None,
     cluster_model: str = "default",
-    lattice: str = "quad",
 ) -> DataFrame:
     """Chunk + embed in ONE Python round trip (mapInPandas).
 
@@ -85,16 +131,11 @@ def chunk_embed_fused(
     hosts). Kernels are identical (split_text + embed_texts), so output is
     bit-identical to the composed path.
 
-    With >1 entry in ``models`` (name → BaseEmbeddingModel), an extra
-    ``embeddings MAP<STRING, ARRAY<FLOAT>>`` column carries every model's
-    vector (reference multi-model surface, raptor/tree_structures.py:9 and
-    tree_builder.py:125-127) and the flat ``embedding`` is the
-    ``cluster_model`` entry — the one that drives cell assignment
-    (reference retrieval_augmentation.py:56-64 routing)."""
+    Embeddings come from :func:`batch_embedder`; with >1 entry in ``models``
+    an extra ``embeddings MAP<STRING, ARRAY<FLOAT>>`` column carries every
+    model's vector."""
     base = docs.select(F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text"))
-    multi = models is not None and len(models) > 1
-    if models is not None and cluster_model not in models:
-        raise ValueError("cluster_embedding_model must be a key in the embedding_models dictionary")
+    embed, multi = batch_embedder(models, cluster_model, dim)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tok = RegexTokenizer()
@@ -107,18 +148,7 @@ def chunk_embed_fused(
                 ids.extend([did] * len(chunks))
                 idxs.extend(range(len(chunks)))
                 texts.extend(chunks)
-            out = {"doc_id": ids, "chunk_idx": idxs, "text": texts}
-            if models is None:
-                out["embedding"] = list(embed_texts(texts, dim))
-            else:
-                per_model = {name: m.embed_batch(texts) for name, m in models.items()}
-                out["embedding"] = list(per_model[cluster_model])
-                if multi:
-                    out["embeddings"] = [
-                        {name: per_model[name][i] for name in per_model}
-                        for i in range(len(texts))
-                    ]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({"doc_id": ids, "chunk_idx": idxs, "text": texts, **embed(texts)})
 
     schema = "doc_id STRING, chunk_idx INT, text STRING, embedding ARRAY<FLOAT>"
     if multi:

@@ -28,10 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
-from ..kernels.embedder import DEFAULT_DIM, embed_texts
+from ..kernels.embedder import DEFAULT_DIM
 from ..kernels.summarize import extractive_summary, get_text
 from ..kernels.textstats import portable_hash63
 from ..kernels.tokenizer import RegexTokenizer
+from .core import batch_embedder
 
 NODES_SCHEMA = (
     "node_id LONG, level INT, cell_id LONG, url STRING, chunk_idx INT, text STRING, "
@@ -40,16 +41,17 @@ NODES_SCHEMA = (
 )
 
 
-def _parent_cell_expr(lattice: str) -> F.Column:
-    """Packed parent-cell expression on the configured lattice (both are
-    pure column arithmetic with the same id layout)."""
+def parent_cell(cell: F.Column, lattice: str) -> F.Column:
+    """Packed id of ``cell``'s parent one resolution coarser on the
+    configured lattice (both are pure column arithmetic with the same id
+    layout)."""
     if lattice == "hex":
         from ..functions.hexgen import hex_parent_packed_col
 
-        return hex_parent_packed_col(F.col("cell_id"))
+        return hex_parent_packed_col(cell)
     if lattice != "quad":
         raise ValueError(f"unknown lattice {lattice!r} (expected 'quad' or 'hex')")
-    return G.cell_parent_col(F.col("cell_id"), 1)
+    return G.cell_parent_col(cell, 1)
 
 
 def _salt_map(nodes: DataFrame, parent_cell: F.Column, max_length_in_cluster: int) -> DataFrame:
@@ -90,12 +92,12 @@ def build_parent_nodes(
     With >1 entry in ``models``, every parent also gets the full per-model
     ``embeddings`` map computed on its summary text (reference
     tree_builder.py:125-127: parent embeddings are re-embedded per model)."""
-    multi = models is not None and len(models) > 1
-    parent_cell = _parent_cell_expr(lattice)
-    salt_df = F.broadcast(_salt_map(nodes, parent_cell, max_length_in_cluster))
+    embed, multi = batch_embedder(models, cluster_model, dim)
+    pcell = parent_cell(F.col("cell_id"), lattice)
+    salt_df = F.broadcast(_salt_map(nodes, pcell, max_length_in_cluster))
 
     staged = (
-        nodes.withColumn("parent_cell", parent_cell)
+        nodes.withColumn("parent_cell", pcell)
         .join(salt_df, "parent_cell", "left")
         .withColumn(
             "salt",
@@ -146,19 +148,11 @@ def build_parent_nodes(
                 "node_id", "level", "cell_id", "url", "chunk_idx", "text",
                 "embedding", "x", "y", "children", "token_count", "n_leaves",
             ]
-            if models is None:
-                embs = embed_texts(summaries, dim)  # one vectorized call per batch
-                for row, emb in zip(rows, embs):
-                    row["embedding"] = emb
-            else:
-                per_model = {name: m.embed_batch(summaries) for name, m in models.items()}
-                for i, row in enumerate(rows):
-                    row["embedding"] = per_model[cluster_model][i]
-                    if multi:
-                        row["embeddings"] = {name: per_model[name][i] for name in per_model}
-                if multi:
-                    cols.append("embeddings")
-            yield pd.DataFrame(rows, columns=cols)
+            vecs = embed(summaries)  # one vectorized call per model per batch
+            for i, row in enumerate(rows):
+                for name, col in vecs.items():
+                    row[name] = col[i]
+            yield pd.DataFrame(rows, columns=cols + (["embeddings"] if multi else []))
 
     schema = NODES_SCHEMA + (", embeddings MAP<STRING, ARRAY<FLOAT>>" if multi else "")
     return grouped.mapInPandas(summarize_batches, schema)

@@ -47,7 +47,7 @@ def brute_force_topk_dist(
     """Exact top-k by ascending distance under any supported metric
     (cosine/L1/L2/Linf — reference raptor/utils.py:84-102 dispatch, here as
     the distributed retrieval path rather than a dead kernel)."""
-    d = G.dist_cols(F.col("q_embedding"), F.col("embedding"), dim, metric)
+    d = G.dist_expr_cols("q_embedding", "embedding", dim, metric)
     w = Window.partitionBy("query_id").orderBy("dist", id_col)
     return (
         vecs.join(F.broadcast(queries))

@@ -16,9 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import sqlgen as G
 from ..kernels.embedder import DEFAULT_DIM
-from .knn import RESULT_COLS
+from .knn import RESULT_COLS, _distance
 
 
 def traversal_retrieve(
@@ -38,8 +37,7 @@ def traversal_retrieve(
     if num_layers > start_layer + 1:
         raise ValueError("num_layers must be less than or equal to start_layer + 1")
 
-    emb = F.col("embeddings").getItem(model) if model else F.col("embedding")
-    dist = G.dist_cols(F.col("q_embedding"), emb, dim, distance_metric)
+    dist = _distance(dim, distance_metric, model)
     w = Window.partitionBy("query_id").orderBy("dist", "node_id")
 
     # candidate set for round 0: whole start layer for every query

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import ClusterTreeConfig
+from raptor_rag_spark.kernels.embedder import HashNgramEmbeddingModel
 from raptor_rag_spark.operators.rollup import build_parent_nodes, level_stats, salt_bucket_count, tile_stats
 from raptor_rag_spark.plans.build_tree import build_tree, load_tree
 from raptor_rag_spark.sources.checkpoint import TreeCheckpoint
@@ -312,6 +313,77 @@ def test_update_tree_matches_full_rebuild(spark):
     full = build_tree(docs.filter("doc_id < 40"), cfg)
     updated = update_tree(build_tree(base, cfg), extra, cfg)
     assert sig(updated) == sig(full)
+    # the stock config and the same model named explicitly build one tree
+    explicit = ClusterTreeConfig(
+        max_tokens=64, num_layers=3, max_resolution=6,
+        embedding_models={"default": HashNgramEmbeddingModel()},
+    )
+    assert sig(build_tree(docs.filter("doc_id < 40"), explicit)) == sig(full)
+
+
+def test_uncheckpointed_levels_count_nothing_and_cache_nothing(spark, monkeypatch):
+    """Without a checkpoint dir, build_tree and update_tree observe each
+    level's rows in the job that materializes it: no ``count()`` call, and
+    no cached plan left registered in the SparkSession."""
+    from raptor_rag_spark.plans.build_tree import update_tree
+
+    cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=6)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    frame = type(docs)
+    real_count, calls = frame.count, []
+
+    def spy_count(self):
+        calls.append(1)
+        return real_count(self)
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.cachedData().size()
+    monkeypatch.setattr(frame, "count", spy_count)
+    base = build_tree(docs.filter("doc_id < 30"), cfg)
+    updated = update_tree(base, docs.filter("doc_id >= 30 AND doc_id < 40"), cfg)
+    monkeypatch.setattr(frame, "count", real_count)
+    assert calls == []
+    assert cache.cachedData().size() == cached
+    assert updated.agg(F.max("level")).first()[0] >= 2
+
+
+def test_narrower_cluster_model_is_refused(docs):
+    """The xy projection reads 64 entries of the cluster vector: a narrower
+    model fails, naming the model and both widths — before any job when it
+    declares its width, else at its first executor batch."""
+    from raptor_rag_spark.kernels.adapters import RetryingEmbeddingModel
+    from raptor_rag_spark.kernels.embedder import embed_texts
+
+    msg = "model 'default' gives 32-dimensional vectors, but the tile tree projects 64-dimensional ones"
+    cfg = ClusterTreeConfig(embedding_models={"default": HashNgramEmbeddingModel(dim=32)}, **CFG)
+    with pytest.raises(ValueError, match=msg):
+        build_tree(docs, cfg)
+    undeclared = RetryingEmbeddingModel(lambda: lambda texts: embed_texts(texts, 32), attempts=1)
+    cfg = ClusterTreeConfig(embedding_models={"default": undeclared}, **CFG)
+    with pytest.raises(Exception, match=msg):
+        build_tree(docs.filter("doc_id < 10"), cfg)
+
+
+def test_wider_model_builds_and_loads_only_on_executors(docs):
+    """A cluster model wider than 64 builds (the projection reads its first
+    64 entries), and the build never loads a model backend on the driver:
+    the loader's calls on executors do not reach this process's list."""
+    from raptor_rag_spark.kernels.adapters import RetryingEmbeddingModel
+    from raptor_rag_spark.kernels.embedder import embed_texts
+
+    loads = []
+
+    def loader():
+        loads.append(1)
+        return lambda texts: embed_texts(texts, 128)
+
+    model = RetryingEmbeddingModel(loader, attempts=1)
+    cfg = ClusterTreeConfig(embedding_models={"default": model}, **CFG)
+    tree = build_tree(docs.filter("doc_id < 40"), cfg)
+    widths = tree.select(F.size("embedding").alias("w")).distinct().collect()
+    assert [r["w"] for r in widths] == [128]
+    assert tree.agg(F.max("level")).first()[0] >= 1
+    assert loads == [] and model._encode is None
 
 
 def test_update_tree_touches_only_dirty_cells(spark):
@@ -448,8 +520,9 @@ def test_hex_lattice_tree(spark):
 
 
 def test_update_tree_hex_lattice_matches_rebuild(spark):
-    """Incremental update on the HEX lattice (driver dirty-set hops via
-    hex_parent_packed_py) is node-for-node identical to a full rebuild."""
+    """Incremental update on the HEX lattice (dirty-set hops via
+    ``rollup.parent_cell`` on hex ids) is node-for-node identical to a full
+    rebuild."""
     from raptor_rag_spark.config import ClusterTreeConfig
     from raptor_rag_spark.plans.build_tree import build_tree, update_tree
 
