@@ -103,9 +103,10 @@ def main() -> None:
 
     # interactive single-question retrieve latency (the reference's only
     # published performance number: 0.29-1.15 s/query retrieval_time_s in
-    # benchmarks/results_quality_*.json). Warm path = facade metadata cached,
-    # one Spark action per question (tests/test_api_facade.py asserts the
-    # action count); p50/p95 over 20 distinct questions lands in the JSON as
+    # benchmarks/results_quality_*.json). Warm path = the warm-up question
+    # collected the tree to the driver (when under the broadcast bound), so
+    # each question runs no Spark action (tests/test_api_facade.py asserts
+    # the action count); p50/p95 over 20 distinct questions lands in the JSON as
     # retrieve_latency and BASELINE.md quotes it next to the reference's.
     def _interactive():
         from raptor_rag_spark.api import RetrievalAugmentation

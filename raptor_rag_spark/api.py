@@ -8,6 +8,14 @@ is a level-partitioned DataFrame built by the distributed plan, retrieval is
 a batch broadcast kNN join, and persistence is the manifest checkpoint (an
 atomic, resumable commit per level) instead of a pickle blob (:234-239).
 
+Single questions on a small tree run on the driver: the first one collects
+the tree once (``kernels/resident.py``) and every later one is answered by
+one numpy fold, with no Spark job, byte-identical to the Spark plan.
+"Small" is Spark's own broadcast bound: the tree's optimized-plan
+``sizeInBytes`` at most ``spark.sql.autoBroadcastJoinThreshold`` (``-1``
+turns the driver path off). Batches, ``collapse_tree="cell"``, a configured
+reranker and larger trees run the Spark plan.
+
 ``answer_question`` composes retrieve with a pluggable QA callable; the
 default is deterministic-extractive (LLM QA stays outside the engine core,
 SURVEY.md §3.3).
@@ -16,7 +24,9 @@ SURVEY.md §3.3).
 from __future__ import annotations
 
 import logging
+import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +36,8 @@ from .config import (
     TreeRetrieverConfig,
     default_qa_model,
 )
+from .kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
+from .kernels.resident import ResidentTree
 from .operators.core import with_embedding
 from .operators.knn import collapsed_knn, retrieval_context
 from .operators.traverse import traversal_retrieve
@@ -82,12 +94,50 @@ class RetrievalAugmentation:
         self._max_level: int | None = None
         self._levels_res: dict[int, int] | None = None
         self._cell_counts: DataFrame | None = None
+        self._resident: ResidentTree | None = None
+        self._tree_bytes: int | None = None
+        self._over_bound_logged = False
+
+    def _resident_tree(self, model: str | None) -> ResidentTree | None:
+        """The driver-resident copy of the tree, collected on first use, or
+        None while the tree's optimized-plan ``sizeInBytes`` exceeds
+        ``spark.sql.autoBroadcastJoinThreshold``: the statistic and bound
+        Spark itself uses to collect a relation for a broadcast. Reading
+        both runs no job; a bound of -1 keeps every question on Spark."""
+        if self._tree_bytes is None:
+            stats = self._tree._jdf.queryExecution().optimizedPlan().stats()
+            self._tree_bytes = int(stats.sizeInBytes())
+        bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if self._tree_bytes > bound:
+            if not self._over_bound_logged:
+                logger.info(
+                    "tree stays on Spark: plan sizeInBytes %d > autoBroadcastJoinThreshold %d",
+                    self._tree_bytes, bound,
+                )
+                self._over_bound_logged = True
+            return None
+        if self._resident is None:
+            t0 = time.perf_counter()
+            vector = F.expr(f"embeddings['{model}']") if model else F.col("embedding")
+            table = self._tree.select(
+                "node_id", "level", "cell_id", "token_count", "text", "children",
+                vector.alias("vector"),
+            ).toArrow()
+            self._resident = ResidentTree(table, DEFAULT_DIM)
+            self._levels_res = self._resident.levels_res()
+            self._max_level = max(self._levels_res, default=None)
+            logger.info(
+                "resident tree loaded: %d rows, %d Arrow bytes, plan sizeInBytes %d, %.0f ms",
+                table.num_rows, table.nbytes, self._tree_bytes,
+                (time.perf_counter() - t0) * 1e3,
+            )
+        return self._resident
 
     def _warm(self) -> None:
         """One metadata-scale collect caches max level + per-level
-        resolutions; one localCheckpoint materializes corpus_cell_counts.
-        After this, single-question retrieve issues exactly ONE Spark
-        action (the result collect)."""
+        resolutions (the resident tree fills both without it). After this,
+        a single question on the Spark plan issues one Spark action, the
+        result collect."""
         from .kernels.grid import RES_SHIFT
 
         if self._max_level is None:
@@ -128,9 +178,7 @@ class RetrievalAugmentation:
             )
         if isinstance(docs, str):
             docs = self.spark.createDataFrame([(0, docs)], f"{id_col} long, {text_col} string")
-        self.tree = build_tree(
-            docs, self.config, checkpoint_dir, id_col=id_col, text_col=text_col
-        ).cache()
+        self.tree = build_tree(docs, self.config, checkpoint_dir, id_col=id_col, text_col=text_col)
 
     def update_documents(
         self,
@@ -149,9 +197,7 @@ class RetrievalAugmentation:
             return
         from .plans.build_tree import update_tree
 
-        self.tree = update_tree(
-            self.tree, docs, self.config, id_col=id_col, text_col=text_col
-        ).cache()
+        self.tree = update_tree(self.tree, docs, self.config, id_col=id_col, text_col=text_col)
 
     # --------------------------------------------------------------- retrieve
     def _context_model(self) -> tuple[str | None, object]:
@@ -171,7 +217,7 @@ class RetrievalAugmentation:
             return name, q_model
         return None, q_model
 
-    def _query_df(self, question: str | list[str], q_model=None) -> DataFrame:
+    def _query_vectors(self, question: str | list[str], q_model=None) -> np.ndarray:
         """Interactive query-side embedding runs ON THE DRIVER with the same
         kernel the Arrow UDF wraps (functions/udfs.py:make_embed_udf) — the
         question list here is always interactive-scale (one, or a handful),
@@ -182,16 +228,10 @@ class RetrievalAugmentation:
         round-to-nearest double→float), so retrieval results are identical —
         tests/test_api_facade.py's byte-identical-context checks cover it.
         Batch-scale embedding stays distributed via retrieve_batch."""
-        import numpy as np
-
-        from .kernels.embedder import embed_texts
-
         questions = [question] if isinstance(question, str) else list(question)
         batch = ["" if q is None else q for q in questions]
-        mat = embed_texts(batch) if q_model is None else q_model.embed_batch(batch)
-        mat = np.asarray(mat, dtype=np.float32)
-        rows = [(i, [float(v) for v in mat[i]]) for i in range(len(batch))]
-        return self.spark.createDataFrame(rows, "query_id long, q_embedding array<float>")
+        model = q_model or HashNgramEmbeddingModel(DEFAULT_DIM)
+        return np.asarray(model.embed_batch(batch), dtype=np.float32)
 
     def retrieve(
         self,
@@ -205,17 +245,72 @@ class RetrievalAugmentation:
     ):
         """Returns (context, layer_information) for one question, or the
         per-query result DataFrame for a batch (the engine's native shape).
+        An empty selection gives ``("", [])`` (the reference's get_text of
+        no nodes).
 
-        Routed through the same plan as ``retrieve_batch`` (round-3 audit:
-        the batch engine is the right surface for both): on a warm facade
-        (tree metadata cached by _warm) a single question costs exactly one
-        Spark action — the result collect."""
+        A single question on a small tree (``_resident_tree``) is answered
+        on the driver: after the first question collects the tree, it runs
+        no Spark job. Everything else goes through the same plan as
+        ``retrieve_batch``; on a warm facade (tree metadata cached by
+        _warm) a single question then costs one Spark action, the result
+        collect."""
         if self.tree is None:
             raise ValueError(
                 "There are no trees to retrieve, please add documents first."
             )  # reference message shape (:187-189)
         model, q_model = self._context_model()
-        queries = self._query_df(question, q_model)
+        vectors = self._query_vectors(question, q_model)
+        found = None
+        if (
+            isinstance(question, str)
+            and collapse_tree != "cell"
+            and self.retriever_config.reranker is None
+        ):
+            found = self._resident_retrieve(
+                vectors[0], model, top_k, max_tokens, collapse_tree, start_layer, num_layers
+            )
+        if found is None:
+            found = self._spark_retrieve(
+                question, vectors, model, top_k, max_tokens, collapse_tree, start_layer, num_layers
+            )
+        if isinstance(question, list):
+            return found
+        context, layer_info = found
+        return (context, layer_info) if return_layer_information else context
+
+    def _resident_retrieve(
+        self, vector, model, top_k, max_tokens, collapse_tree, start_layer, num_layers
+    ) -> tuple[str, list[dict]] | None:
+        """(context, layer information) from the resident tree, or None when
+        the tree stays on Spark. A NaN distance (a zero vector) is also left
+        to the Spark plan, which alone decides that case: DIVIDE_BY_ZERO
+        under ANSI, a NULL distance ranked first without it."""
+        resident = self._resident_tree(model)
+        if resident is None:
+            return None
+        dist = resident.distances(vector)
+        if np.isnan(dist).any():
+            return None
+        if collapse_tree:
+            rows = resident.collapsed(dist, top_k, max_tokens)
+        else:
+            sl = self._max_level if start_layer is None else start_layer
+            rc = self.retriever_config
+            rows = resident.traversal(
+                dist, sl, sl + 1 if num_layers is None else num_layers,
+                rc.top_k, rc.selection_mode, rc.threshold,
+            )
+        return resident.context(rows)
+
+    def _spark_retrieve(
+        self, question, vectors, model, top_k, max_tokens, collapse_tree, start_layer, num_layers
+    ):
+        """The Spark plan of ``retrieve``: the context DataFrame for a
+        batch, (context, layer information) for a single question."""
+        queries = self.spark.createDataFrame(
+            [(i, [float(v) for v in vec]) for i, vec in enumerate(vectors)],
+            "query_id long, q_embedding array<float>",
+        )
         results = self._results(
             queries,
             top_k=top_k,
@@ -249,17 +344,17 @@ class RetrievalAugmentation:
         conf.set("spark.sql.shuffle.partitions", "1")
         conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            row = ctx.collect()[0]
+            rows = ctx.collect()
         finally:
             conf.set("spark.sql.shuffle.partitions", prev_sp)
             conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if return_layer_information:
-            layer_info = [
-                {"node_index": r["node_id"], "layer_number": r["level"]}
-                for r in row["layer_information"]
-            ]
-            return row["context"], layer_info
-        return row["context"]
+        if not rows:
+            return "", []
+        layer_info = [
+            {"node_index": r["node_id"], "layer_number": r["level"]}
+            for r in rows[0]["layer_information"]
+        ]
+        return rows[0]["context"], layer_info
 
     def _results(
         self,

@@ -14,33 +14,47 @@ import numpy as np
 SUPPORTED_METRICS = ("cosine", "L1", "L2", "Linf")
 
 
-def distance_matrix(query: np.ndarray, embeddings: np.ndarray, metric: str = "cosine") -> np.ndarray:
+def distance_matrix(
+    query: np.ndarray, embeddings: np.ndarray, metric: str = "cosine", dim: int | None = None
+) -> np.ndarray:
     """Distances from one query vector to each row of ``embeddings``.
 
     query: shape (d,); embeddings: shape (n, d); returns shape (n,) float64.
+    ``dim`` reads only the first ``dim`` entries of each vector (all when
+    None), as ``sqlgen.dist_expr_cols`` does.
+
+    Each metric is the left-associated float64 fold of its Spark twin
+    ``sqlgen.dist_expr_cols`` (``acc = 0.0; acc = acc + term(d)`` for d in
+    order, then the same closing ops), so the IEEE op sequence and the
+    result are the JVM's bit for bit. No BLAS: a matrix product sums in its
+    own order. A zero vector gives a NaN cosine distance (0/0), as scipy
+    does; Spark raises DIVIDE_BY_ZERO there under ANSI and gives NULL
+    without it.
     """
     q = np.asarray(query, dtype=np.float64)
     e = np.asarray(embeddings, dtype=np.float64)
     if e.ndim == 1:
         e = e[None, :]
-    if metric == "cosine":
-        qn = np.linalg.norm(q)
-        en = np.linalg.norm(e, axis=1)
-        denom = qn * en
-        # scipy semantics: cosine distance = 1 - dot/(|q||e|)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            sim = (e @ q) / denom
-        sim = np.where(denom == 0, 0.0, sim)
-        return 1.0 - sim
-    if metric == "L1":
-        return np.abs(e - q).sum(axis=1)
-    if metric == "L2":
-        return np.sqrt(((e - q) ** 2).sum(axis=1))
+    width = min(q.shape[0], e.shape[1]) if dim is None else dim
+    if metric not in SUPPORTED_METRICS:
+        raise ValueError(
+            f"Unsupported distance metric '{metric}'. Supported metrics are: {list(SUPPORTED_METRICS)}"
+        )
     if metric == "Linf":
-        return np.abs(e - q).max(axis=1)
-    raise ValueError(
-        f"Unsupported distance metric '{metric}'. Supported metrics are: {list(SUPPORTED_METRICS)}"
-    )
+        return np.abs(q[:width] - e[:, :width]).max(axis=1)
+    acc = np.zeros(e.shape[0])
+    if metric == "cosine":
+        nq, ne = 0.0, np.zeros(e.shape[0])
+        for d in range(width):
+            acc = acc + q[d] * e[:, d]
+            nq = nq + q[d] * q[d]
+            ne = ne + e[:, d] * e[:, d]
+        with np.errstate(invalid="ignore", divide="ignore"):
+            return 1.0 - (acc / (np.sqrt(nq) * np.sqrt(ne)))
+    for d in range(width):
+        diff = q[d] - e[:, d]
+        acc = acc + (np.abs(diff) if metric == "L1" else diff * diff)
+    return acc if metric == "L1" else np.sqrt(acc)
 
 
 def distances_from_embeddings(

@@ -1,6 +1,8 @@
 """RetrievalAugmentation facade tests — mirror the reference lifecycle
 behaviors (raptor/retrieval_augmentation.py guards + retrieve shapes)."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +12,26 @@ from raptor_rag_spark.config import ClusterTreeConfig
 pytestmark = pytest.mark.spark
 
 SF = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def spark_plan_only(spark):
+    """Every question runs the Spark plan: a broadcast bound of -1 keeps
+    the tree off the driver."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def both_paths(spark, fn):
+    """fn() with the driver-resident tree, then on the Spark plan."""
+    resident = fn()
+    with spark_plan_only(spark):
+        return resident, fn()
 
 
 @pytest.fixture(scope="module")
@@ -38,6 +60,53 @@ def test_retrieve_returns_context_and_layers(ra):
     assert isinstance(context, str) and context.endswith("\n\n")
     assert 1 <= len(layers) <= 5
     assert {"node_index", "layer_number"} == set(layers[0])
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        dict(top_k=5),
+        dict(top_k=10, max_tokens=300),
+        dict(top_k=None, max_tokens=500),
+        dict(collapse_tree=False),
+        dict(collapse_tree=False, start_layer=1, num_layers=2),
+    ],
+)
+def test_resident_retrieve_matches_spark_plan(ra, spark, kwargs):
+    """Single questions answered from the driver-resident tree give the
+    Spark plan's context and layer list, byte for byte."""
+    for q in ("spark join data", "customer order data", "shuffle partitions"):
+        resident, planned = both_paths(spark, lambda: ra.retrieve(q, **kwargs))
+        assert resident == planned, (q, kwargs)
+
+
+def test_resident_threshold_traversal_matches_spark_plan(ra, spark):
+    from raptor_rag_spark.config import TreeRetrieverConfig
+
+    r = RetrievalAugmentation(
+        spark, config=ra.config, tree=ra.tree,
+        retriever_config=TreeRetrieverConfig(selection_mode="threshold", threshold=0.8),
+    )
+    resident, planned = both_paths(
+        spark, lambda: r.retrieve("spark join data", collapse_tree=False)
+    )
+    assert resident == planned and resident[1]
+
+
+@pytest.mark.parametrize("max_tokens", [0, 1])
+def test_empty_selection_returns_empty_context(ra, spark, max_tokens):
+    """Nothing fits the budget: ("", []), or "" without layer information,
+    as the reference's get_text of no nodes — on both paths."""
+    for info, want in ((True, ("", [])), (False, "")):
+        got = both_paths(
+            spark,
+            lambda: ra.retrieve(
+                "spark join data", max_tokens=max_tokens, return_layer_information=info
+            ),
+        )
+        assert got == (want, want)
+    empty = RetrievalAugmentation(spark, config=ra.config, tree=ra.tree.filter("false"))
+    assert both_paths(spark, lambda: empty.retrieve("spark join data")) == (("", []), ("", []))
 
 
 def test_retrieve_batch_returns_dataframe(ra):
@@ -139,7 +208,9 @@ def test_multi_model_embeddings_build_and_route(spark):
         row = ra.tree.filter("level = 0").select("embedding", "embeddings").first()
         assert list(row["embeddings"].keys()) and len(row["embeddings"]) == 2
         assert row["embedding"] == row["embeddings"]["default"]  # cluster model drives cells
-        ctx, info = ra.retrieve("customer order data", top_k=5, max_tokens=None)
+        ask = lambda: ra.retrieve("customer order data", top_k=5, max_tokens=None)  # noqa: E731
+        (ctx, info), planned = both_paths(spark, ask)
+        assert (ctx, info) == planned  # the resident copy keeps the routed vector
         return ctx, tuple(sorted((d["node_index"], d["layer_number"]) for d in info))
 
     ctx_a, nodes_a = run("default")
@@ -192,9 +263,12 @@ def test_update_documents_matches_rebuild(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=6)
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.cachedData().size()
     ra_inc = RetrievalAugmentation(spark, cfg)
     ra_inc.add_documents(docs.filter("doc_id < 30"))
     ra_inc.update_documents(docs.filter("doc_id >= 30 AND doc_id < 40"))
+    assert cache.cachedData().size() == cached  # both trees are committed already
 
     ra_full = RetrievalAugmentation(spark, cfg)
     ra_full.add_documents(docs.filter("doc_id < 40"))
@@ -318,29 +392,34 @@ def _count_actions(monkeypatch, fn, df_cls):
     return out, calls
 
 
-def test_single_question_retrieve_is_one_action_warm(ra, monkeypatch):
+def test_single_question_retrieve_is_one_action_warm(ra, spark, monkeypatch):
     """Round-3 audit item: interactive retrieve must not pay per-call driver
-    work. On a warm facade (tree metadata cached) a single question costs
-    exactly ONE Spark action — the result collect — in both collapsed and
-    traversal modes, and the context is byte-identical to a cold call."""
+    work. On a warm facade a single question under the broadcast bound runs
+    NO Spark action, in both collapsed and traversal modes (the first
+    question collected the tree). With the bound at -1 it costs exactly ONE
+    action — the result collect — and the context is byte-identical to a
+    cold call."""
     cold_ctx, cold_layers = ra.retrieve("spark join data", top_k=5)
     ra._warm()  # warm the per-tree metadata cache
 
     df_cls = type(ra.tree)
-    (got, calls) = _count_actions(
-        monkeypatch, lambda: ra.retrieve("spark join data", top_k=5), df_cls
+    collapsed = lambda: ra.retrieve("spark join data", top_k=5)  # noqa: E731
+    traversal = lambda: ra.retrieve(  # noqa: E731
+        "spark join data", collapse_tree=False, return_layer_information=False
     )
-    ctx, layers = got
-    assert ctx == cold_ctx and layers == cold_layers
-    assert len(calls) == 1 and calls[0] == "collect", calls
+    (got, calls) = _count_actions(monkeypatch, collapsed, df_cls)
+    assert got == (cold_ctx, cold_layers) and calls == []
+    (got_t, calls_t) = _count_actions(monkeypatch, traversal, df_cls)
+    assert isinstance(got_t, str) and len(got_t) > 0 and calls_t == []
+    monkeypatch.undo()
 
-    (got_t, calls_t) = _count_actions(
-        monkeypatch,
-        lambda: ra.retrieve(
-            "spark join data", collapse_tree=False, return_layer_information=False
-        ),
-        df_cls,
-    )
+    with spark_plan_only(spark):
+        (got, calls) = _count_actions(monkeypatch, collapsed, df_cls)
+        ctx, layers = got
+        assert ctx == cold_ctx and layers == cold_layers
+        assert len(calls) == 1 and calls[0] == "collect", calls
+
+        (got_t, calls_t) = _count_actions(monkeypatch, traversal, df_cls)
     assert isinstance(got_t, str) and len(got_t) > 0
     # traversal is the bounded-rounds descent: one localCheckpoint per
     # descended level (plan truncation, metadata-scale) + the result collect.

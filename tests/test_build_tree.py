@@ -282,6 +282,28 @@ def test_metrics_table_sink_and_resume(spark, docs, tmp_path_factory):
     assert [r["level"] for r in left] == ["99"]
 
 
+def test_metrics_append_runs_no_job(spark, tmp_path, spark_jobs):
+    """An append writes its file on the driver: no Spark job, and rows with
+    missing fields load back as NULLs in the table's schema."""
+    import os
+
+    from raptor_rag_spark.sources.metrics import METRICS_SCHEMA, MetricsTable
+
+    mt = MetricsTable(str(tmp_path / "_metrics"))
+    with spark_jobs() as jobs:
+        mt.append(spark, [{"run_id": "r", "kind": "tree_level", "key": "0", "rows": 7,
+                           "wall_ms": 12, "extra": "{}"}])
+        mt.append(spark, [{"kind": "final", "key": "build"}])
+    assert len(jobs) == 0
+    m = mt.load(spark)
+    assert m.schema.simpleString() == spark.createDataFrame([], METRICS_SCHEMA).schema.simpleString()
+    assert sorted((tuple(r) for r in m.collect()), key=lambda r: r[1]) == [
+        (None, "final", "build", None, None, None),
+        ("r", "tree_level", "0", 7, 12, "{}"),
+    ]
+    assert all(f.startswith("part-") for f in os.listdir(tmp_path / "_metrics"))
+
+
 def test_update_tree_matches_full_rebuild(spark):
     """Incremental dirty-tile update must be node-for-node identical to a
     full rebuild over the union corpus — ids, cells, levels, texts, children

@@ -85,8 +85,39 @@ def test_collapsed_knn_matches_kernel(spark, leaves):
         dists = distance_matrix(q, mat, "cosine")
         order = np.lexsort(([r["node_id"] for r in node_rows], dists))[:5]
         expect = [node_rows[i]["node_id"] for i in order]
-        mine = got[got.query_id == qid].sort_values("rank")["node_id"].tolist()
-        assert mine == expect
+        mine = got[got.query_id == qid].sort_values("rank")
+        assert mine["node_id"].tolist() == expect
+        assert np.array_equal(mine["dist"].to_numpy(), dists[order])  # bit for bit
+
+
+@pytest.mark.parametrize("metric", ["cosine", "L1", "L2", "Linf"])
+def test_distance_matrix_is_dist_expr_cols_bit_for_bit(spark, metric):
+    """The numpy kernel is the Spark expression's fold, so the two agree
+    bit for bit: 128-wide vectors (both read the first 64 entries), a
+    duplicate vector (a tie) and a zero vector, read through a multi-model
+    map key. The zero vector's cosine is NaN in numpy; Spark gives NULL
+    with ANSI off and raises DIVIDE_BY_ZERO with it on."""
+    rng = np.random.default_rng(11)
+    q = rng.standard_normal(128).astype(np.float32)
+    nodes = rng.standard_normal((6, 128)).astype(np.float32)
+    nodes[1] = nodes[0]
+    nodes[2] = 0.0
+    rows = [(i, q.tolist(), {"alt": (-v).tolist(), "m": v.tolist()}) for i, v in enumerate(nodes)]
+    df = spark.createDataFrame(
+        rows, "node_id long, q_embedding array<float>, embeddings map<string, array<float>>"
+    )
+    dist = G.dist_expr_cols("q_embedding", "embeddings['m']", 64, metric).alias("d")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = [r["d"] for r in df.select("node_id", dist).orderBy("node_id").collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    mine = distance_matrix(q, nodes, metric, 64)
+    spark_d = np.array([np.nan if d is None else d for d in got])
+    assert np.array_equal(mine, spark_d, equal_nan=True)
+    assert mine[0] == mine[1]
+    assert (got[2] is None) == np.isnan(mine[2]) == (metric == "cosine")
 
 
 def test_knn_token_budget(spark, leaves):
