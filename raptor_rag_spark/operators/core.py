@@ -5,8 +5,14 @@ Spark-first shapes (SURVEY.md §3.1 Spark lifecycle):
   reference: raptor/tree_builder.py:149-162);
 - embedding: Arrow-batched pandas UDF (reference thread-pool fan-out at
   raptor/tree_builder.py:136-147 becomes partition parallelism);
-- xy + cell id: pure column expressions from functions/sqlgen.py — JVM-side,
-  whole-stage-codegen'd, bit-identical to the DuckDB oracle;
+- the tree's leaves chunk, embed, project to xy and hash their node ids in
+  ONE Arrow batch pass (:func:`chunk_embed_fused`), which already holds
+  every vector in numpy: ``kernels.reduce.project_xy`` and
+  ``kernels.textstats.portable_hash63`` are the bit-exact twins of
+  ``sqlgen.xy_cols`` and ``sqlgen.hash63_col``, whose 128-term fold and
+  15-step hex parse took ~750 py4j Column calls to plan on every build;
+- cell id and token count: pure column expressions from functions/sqlgen.py
+  — JVM-side, whole-stage-codegen'd, bit-identical to the DuckDB oracle;
 - node ids: 60-bit portable hash of (doc id, chunk idx) — stable across runs
   and partitionings, which is what makes resume and the N-vs-4N exact-match
   checks possible.
@@ -16,6 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,6 +31,8 @@ from ..functions import sqlgen as G
 from ..functions.udfs import make_chunk_udf, make_embed_udf
 from ..kernels.chunker import split_text
 from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
+from ..kernels.reduce import project_xy
+from ..kernels.textstats import portable_hash63
 from ..kernels.tokenizer import RegexTokenizer
 
 
@@ -43,11 +52,6 @@ def with_embedding(
 ) -> DataFrame:
     embed_udf = make_embed_udf(dim, model)
     return df.withColumn("embedding", embed_udf(F.col(text_col)))
-
-
-def with_xy(df: DataFrame, dim: int = DEFAULT_DIM, embedding_col: str = "embedding") -> DataFrame:
-    x, y = G.xy_cols(F.col(embedding_col), dim)
-    return df.withColumn("x", x).withColumn("y", y)
 
 
 def with_cell(
@@ -123,13 +127,19 @@ def chunk_embed_fused(
     models: dict | None = None,
     cluster_model: str = "default",
 ) -> DataFrame:
-    """Chunk + embed in ONE Python round trip (mapInPandas).
+    """Chunk + embed + project + id in ONE Python round trip (mapInPandas).
 
     The split chunk-UDF → posexplode → embed-UDF pipeline pays two JVM↔Python
     Arrow pipes over the full text volume; fusing them halves the IPC, which
     measurably dominates at high parallelism (syscall-heavy virtualized
     hosts). Kernels are identical (split_text + embed_texts), so output is
     bit-identical to the composed path.
+
+    Each batch also gets ``x, y`` from ``project_xy`` over the cluster
+    vector's first ``dim`` entries, rounded to float32 first since that is
+    what ``ARRAY<FLOAT>`` stores (= ``sqlgen.xy_cols`` on the stored
+    column), and ``node_id`` = ``portable_hash63("doc_id:chunk_idx")``
+    (= ``hash63_col(concat_ws(":", …))``, which skips a null doc id).
 
     Embeddings come from :func:`batch_embedder`; with >1 entry in ``models``
     an extra ``embeddings MAP<STRING, ARRAY<FLOAT>>`` column carries every
@@ -148,9 +158,24 @@ def chunk_embed_fused(
                 ids.extend([did] * len(chunks))
                 idxs.extend(range(len(chunks)))
                 texts.extend(chunks)
-            yield pd.DataFrame({"doc_id": ids, "chunk_idx": idxs, "text": texts, **embed(texts)})
+            if not texts:
+                continue  # empty lists become float64 columns Arrow cannot cast to arrays
+            vecs = embed(texts)
+            e = np.asarray(vecs["embedding"], dtype=np.float32)[:, :dim]
+            xy = project_xy(e.astype(np.float64))
+            node_ids = [
+                portable_hash63(f"{did}:{i}" if did is not None else str(i))
+                for did, i in zip(ids, idxs)
+            ]
+            yield pd.DataFrame(
+                {"doc_id": ids, "chunk_idx": idxs, "text": texts, "x": xy[:, 0], "y": xy[:, 1],
+                 "node_id": node_ids, **vecs}
+            )
 
-    schema = "doc_id STRING, chunk_idx INT, text STRING, embedding ARRAY<FLOAT>"
+    schema = (
+        "doc_id STRING, chunk_idx INT, text STRING, x DOUBLE, y DOUBLE, node_id LONG, "
+        "embedding ARRAY<FLOAT>"
+    )
     if multi:
         schema += ", embeddings MAP<STRING, ARRAY<FLOAT>>"
     return base.mapInPandas(gen, schema)
@@ -170,13 +195,13 @@ def leaf_nodes(
 ) -> DataFrame:
     """Full leaf pipeline → level-0 nodes DataFrame (SURVEY.md §1.2 schema).
 
-    One fused Python pass (chunk+embed), then everything else — xy
-    projection, cell encode, node ids, token counts — is JVM column
-    expressions inside whole-stage codegen."""
+    One fused Python pass (chunk, embed, xy projection, node ids), then the
+    cell encode and token counts are JVM column expressions inside
+    whole-stage codegen."""
     nodes = chunk_embed_fused(docs, id_col, text_col, max_tokens, dim, overlap, models, cluster_model)
-    nodes = with_cell(with_xy(nodes, dim), res, lattice=lattice)
+    nodes = with_cell(nodes, res, lattice=lattice)
     cols = [
-        G.hash63_col(F.concat_ws(":", F.col("doc_id"), F.col("chunk_idx"))).alias("node_id"),
+        F.col("node_id"),
         F.lit(0).alias("level"),
         F.col("cell_id"),
         F.col("doc_id").alias("url"),

@@ -12,10 +12,10 @@ splits it:
 2. ``index_stats``: the ONE statistics path of every lexical ranker — a
    dict of the checkpointed per-doc length table dl = Σtf, the checkpointed
    per-term (df, cf) table from one ``groupBy("term")``, and the corpus
-   scalars N, avgdl (exact decimal mean) and |C| collected once to the
-   driver and used as literals. Build it once and pass it to every ranker
-   of a battery via ``shared=``; a ranker given only docs or postings
-   builds it itself.
+   scalars N, avgdl (exact decimal mean) and |C|, observed by the job that
+   checkpoints dl and used as literals. Build it once and pass it to every
+   ranker of a battery via ``shared=``; a ranker given only docs or
+   postings builds it itself.
 3. score: the query terms join the df-filtered term table, carry their idf
    = ln((N-df+0.5)/(df+0.5)+1) and broadcast into ONE equi-join with the
    postings; per-term BM25 contribution
@@ -35,7 +35,7 @@ hash-matches exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
@@ -124,34 +124,38 @@ def index_stats(postings: DataFrame) -> dict:
       ``groupBy("term")``, narrow-checkpointed — vocabulary-sized, so
       rankers semi-join it to their query terms instead of broadcasting it;
     - ``n_docs`` (float), ``n_long`` (int), ``avgdl`` and ``c_len`` (float,
-      None on an empty index): the corpus scalars, collected to the driver
-      in one job and spliced into plans as literals, so no ranker joins a
-      1-row frame. avgdl is the exact-decimal mean of dl; N counts docs
-      with ≥1 token (empty docs can't match and don't dilute avgdl).
+      None on an empty index): the corpus scalars, observed on the driver
+      by the job that checkpoints ``dl`` (no job of their own) and spliced
+      into plans as literals, so no ranker joins a 1-row frame. avgdl is
+      the exact-decimal mean of dl; N counts docs with ≥1 token (empty docs
+      can't match and don't dilute avgdl).
 
     Round-5 scaling finding: with a 1M-page index, the bm25+ql+rrf battery
     executed 12-16 full passes over the 120M-row postings when each ranker
     re-derived dl/df/stats; those fixed passes capped N→4N scaling at ~0.55
     for the ranker phase. Every ranker takes this dict via ``shared=`` and
     builds it itself when it is absent."""
+    observed = Observation()
     dl = (
         postings.groupBy("doc_id")
         .agg(F.sum("tf").alias("dl_l"))
+        .observe(
+            observed,
+            F.count(F.lit(1)).alias("n_long"),
+            (
+                F.sum(F.col("dl_l").cast("decimal(28,6)")).cast("double")
+                / F.count(F.lit(1)).cast("double")
+            ).alias("avgdl"),
+            F.sum(F.col("dl_l")).cast("double").alias("c_len"),
+        )
         .localCheckpoint(eager=True)
     )
+    corpus = observed.get
     terms = (
         postings.groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
         .localCheckpoint(eager=True)
     )
-    corpus = dl.agg(
-        F.count("*").alias("n_long"),
-        (
-            F.sum(F.col("dl_l").cast("decimal(28,6)")).cast("double")
-            / F.count("*").cast("double")
-        ).alias("avgdl"),
-        F.sum(F.col("dl_l")).cast("double").alias("c_len"),
-    ).first()
     return {
         "postings": postings,
         "dl": dl,

@@ -64,6 +64,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        # pyspark 4.1 records the Python call site of every Column/functions
+        # call for DataFrame error context: an `inspect` stack walk and ~3
+        # py4j round trips per call, and its first use imports IPython.
+        # Measured planning one leaf level, one parent level and one
+        # `xy_cols` select (local[2], 4-core host): 7.7-8.4k → 2.5-3.3k py4j
+        # round trips and 0.91-0.93 → 0.53-0.59 s warm; the first plan, IPython
+        # import included, 2.50 → 1.43 s. Cost: DataFrame errors no longer
+        # name the Python line that built the failing expression (the JVM
+        # message and stack are unchanged).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local mode = one JVM for driver + all executor threads; at 32
         # concurrent tasks an 8g heap spends >30% of task time in GC
         # (measured via event logs: cached leaves + collect_list buffers).

@@ -5,18 +5,25 @@ on DuckDB at the given sf dir, compares row count + column names + an
 order-insensitive value hash, and prints one line per query.
 
 Usage: python scripts/check_contract.py [sf_dir] [query ...]
+
+Runs on local[$SPARK_GRAFT_CPUS] (default: the host's core count).
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, whatever the working directory:
+# on the driver's path, and on the Python workers' (they inherit PYTHONPATH)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -44,7 +51,8 @@ def main() -> int:
     import __spark_entry__ as E
     from raptor_rag_spark.session import get_spark
 
-    spark = get_spark("contract-check", cores=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = get_spark("contract-check", cores=cores)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

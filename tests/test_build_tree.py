@@ -217,6 +217,28 @@ def test_hot_cell_salting(spark, docs):
     assert n_salted > n_plain  # hot cells split into multiple parents
     # salted parents still conserve leaves
     assert parents_salted.agg(F.sum("n_leaves")).first()[0] == leaves.count()
+
+    # exact buckets from the Python twin: a hot cell's member goes to
+    # node_id % salt_bucket_count(tok_sum, n_members, max), a cold one to 0;
+    # a parent's node_id is the hash of its (cell, salt), its children the
+    # bucket's sorted members
+    from collections import defaultdict
+
+    from raptor_rag_spark.kernels.grid import cell_parent
+    from raptor_rag_spark.kernels.textstats import portable_hash63
+
+    for max_len, parents in ((100, parents_salted), (10**9, parents_plain)):
+        cells = defaultdict(list)
+        for r in leaves.select("node_id", "cell_id", "token_count").collect():
+            cells[int(cell_parent(r["cell_id"], 1))].append((r["node_id"], r["token_count"]))
+        want = defaultdict(list)
+        for cell, members in cells.items():
+            tok_sum = sum(t for _, t in members)
+            n = salt_bucket_count(tok_sum, len(members), max_len) if tok_sum > max_len else 1
+            for nid, _ in members:
+                want[(cell, portable_hash63(f"L1|{cell}|{nid % n}"))].append(nid)
+        got = {(r["cell_id"], r["node_id"]): list(r["children"]) for r in parents.collect()}
+        assert got == {k: sorted(v) for k, v in want.items()}
     assert salt_bucket_count(1000, 7, 100) == 7
     assert salt_bucket_count(1000, 50, 100) == 10
 

@@ -51,11 +51,29 @@ def test_leaf_schema_and_counts(leaves, docs):
 
 
 def test_leaf_partition_invariance(docs):
+    cols = ["node_id", "cell_id", "token_count", "x", "y"]
     a = leaf_nodes(docs, max_tokens=64, res=6)
     b = leaf_nodes(docs.repartition(16), max_tokens=64, res=6)
-    pa = a.select("node_id", "cell_id", "token_count").toPandas().sort_values("node_id").reset_index(drop=True)
-    pb = b.select("node_id", "cell_id", "token_count").toPandas().sort_values("node_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb)
+    pa = a.select(*cols).toPandas().sort_values("node_id").reset_index(drop=True)
+    pb = b.select(*cols).toPandas().sort_values("node_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
+
+
+def assert_leaf_twins(leaves, dim=64):
+    """The leaves' x, y and node_id, made in the Arrow batch, equal
+    ``sqlgen.xy_cols`` over the stored embedding column and ``hash63_col``
+    over ``concat_ws(":", doc id, chunk_idx)``, bit for bit. Returns the
+    row count."""
+    x, y = G.xy_cols(F.col("embedding"), dim)
+    nid = G.hash63_col(F.concat_ws(":", F.col("url"), F.col("chunk_idx")))
+    rows = leaves.select(
+        "node_id", "x", "y", nid.alias("s_id"), x.alias("s_x"), y.alias("s_y")
+    ).collect()
+    for mine, twin in (("node_id", "s_id"), ("x", "s_x"), ("y", "s_y")):
+        got = np.array([r[mine] for r in rows])
+        want = np.array([r[twin] for r in rows])
+        assert got.dtype == want.dtype and np.array_equal(got.view(np.int64), want.view(np.int64)), mine
+    return len(rows)
 
 
 def test_leaf_embeddings_match_kernel(leaves):
@@ -67,6 +85,32 @@ def test_leaf_embeddings_match_kernel(leaves):
     xy = project_xy(kern)
     got = np.array([[r["x"], r["y"]] for r in rows])
     assert np.array_equal(xy, got)
+    assert assert_leaf_twins(leaves) == leaves.count()
+
+
+def test_leaf_twins_wide_multi_model_and_empty_batch(spark, docs):
+    """A 128-wide float64 cluster model in a multi-model map: the batch
+    rounds to the stored float32 and reads the first 64 entries, as the
+    Spark fold over the stored column does. A batch whose documents give
+    no chunk yields no rows; a null doc id hashes as concat_ws skips it."""
+    from raptor_rag_spark.kernels.embedder import BaseEmbeddingModel, HashNgramEmbeddingModel
+
+    class Wide(BaseEmbeddingModel):  # float64 entries float32 cannot hold
+        def embed_batch(self, texts):
+            return embed_texts(texts, 128).astype(np.float64) / 3.0
+
+    models = {"default": HashNgramEmbeddingModel(), "wide": Wide()}
+    multi = leaf_nodes(docs.filter("doc_id < 20"), max_tokens=64, res=6, models=models, cluster_model="wide")
+    assert multi.select(F.size("embedding")).distinct().collect()[0][0] == 128
+    assert assert_leaf_twins(multi) > 0
+
+    odd = spark.createDataFrame(
+        [(1, ""), (2, None), (None, "one short sentence.")], "doc_id long, text string"
+    )
+    assert assert_leaf_twins(leaf_nodes(odd.filter("doc_id IS NOT NULL"), max_tokens=64, res=6)) == 0
+    null_id = leaf_nodes(odd.filter("doc_id IS NULL"), max_tokens=64, res=6)
+    assert assert_leaf_twins(null_id) == 1
+    assert null_id.first()["node_id"] == T.portable_hash63("0")
 
 
 def test_collapsed_knn_matches_kernel(spark, leaves):

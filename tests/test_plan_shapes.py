@@ -117,8 +117,9 @@ def test_text_analysis_stays_in_codegen(spark, pages_pq):
 
 
 def test_leaf_pipeline_single_python_pass(spark, pages_pq):
-    """Chunk+embed is ONE fused Arrow round trip; everything after it (cells,
-    token counts) must be JVM expressions — exactly one Python eval node."""
+    """Chunk, embed, xy projection and node ids are ONE fused Arrow round
+    trip; everything after it (cells, token counts) must be JVM expressions
+    — exactly one Python eval node."""
     from raptor_rag_spark.operators.core import leaf_nodes
 
     docs = spark.read.parquet(pages_pq).select(
@@ -130,6 +131,22 @@ def test_leaf_pipeline_single_python_pass(spark, pages_pq):
         for tag in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython")
     )
     assert n_python == 1, plan
+
+
+def test_parent_level_one_shuffle_no_broadcast(spark, pages_pq):
+    """One tree level shuffles once: the salt's window over parent_cell and
+    the (parent_cell, salt) member gather share one hash partitioning, and
+    no salt map is broadcast."""
+    from raptor_rag_spark.operators.core import leaf_nodes
+    from raptor_rag_spark.operators.rollup import build_parent_nodes
+
+    docs = spark.read.parquet(pages_pq).select(
+        F.abs(F.hash("url")).cast("long").alias("doc_id"), "text"
+    )
+    plan = explain_str(build_parent_nodes(leaf_nodes(docs, "doc_id", "text", 64, 8), 1), "simple")
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1 and "hashpartitioning(parent_cell" in exchanges[0], plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_phrase_search_broadcasts_phrases(spark, pages_pq):
