@@ -9,13 +9,12 @@ Spark-first shapes (SURVEY.md §3.1 Spark lifecycle):
   ONE Arrow batch pass (:func:`chunk_embed_fused`), which already holds
   every vector in numpy: ``kernels.reduce.project_xy`` and
   ``kernels.textstats.portable_hash63`` are the bit-exact twins of
-  ``sqlgen.xy_cols`` and ``sqlgen.hash63_col``, whose 128-term fold and
-  15-step hex parse took ~750 py4j Column calls to plan on every build;
+  ``sqlgen.xy_cols`` and ``sqlgen.hash63_col``. A node id is the 60-bit
+  portable hash of (doc id, chunk idx), stable across runs and
+  partitionings, which is what makes resume and the N-vs-4N exact-match
+  checks possible;
 - cell id and token count: pure column expressions from functions/sqlgen.py
-  — JVM-side, whole-stage-codegen'd, bit-identical to the DuckDB oracle;
-- node ids: 60-bit portable hash of (doc id, chunk idx) — stable across runs
-  and partitionings, which is what makes resume and the N-vs-4N exact-match
-  checks possible.
+  — JVM-side, whole-stage-codegen'd, bit-identical to the DuckDB oracle.
 """
 
 from __future__ import annotations

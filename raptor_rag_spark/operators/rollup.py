@@ -7,11 +7,10 @@ text is a deterministic extractive summary, embedding is the summary's
 embedding, children = sorted member ids. Hot cells (token sum >
 max_length_in_cluster, reference's recluster gate at
 raptor/cluster_utils.py:116-122) are *salted* into deterministic sub-buckets —
-the explicit skew handling the north rule demands: each node's salt comes
-from its cell's token sum and member count, a window over the parent cell
-that shares the member gather's ONE shuffle (no salt-map aggregate, no
-broadcast: a level is 2 Spark jobs, not 4), and the expensive grouped-map
-then runs on (cell, salt) keys with bounded group size.
+the explicit skew handling the north rule demands: the salt map is tiny
+(only hot cells) and broadcast, and the member gather shuffles on
+(cell, salt), so a hot cell's buckets go to different tasks and the
+expensive grouped-map runs on bounded groups.
 
 ``tile_stats`` is A5 (per-level tile rollup → raster bands): pure JVM
 aggregations, no UDF.
@@ -26,7 +25,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
@@ -56,6 +55,21 @@ def parent_cell(cell: F.Column, lattice: str) -> F.Column:
     return G.cell_parent_col(cell, 1)
 
 
+def _salt_map(nodes: DataFrame, parent_cell: F.Column, max_length_in_cluster: int) -> DataFrame:
+    """(parent_cell, n_buckets) for hot cells only — broadcastable."""
+    return (
+        nodes.groupBy(parent_cell.alias("parent_cell"))
+        .agg(F.sum("token_count").alias("tok_sum"), F.count("*").alias("n_members"))
+        .filter(F.col("tok_sum") > max_length_in_cluster)
+        .select(
+            "parent_cell",
+            F.least(
+                F.ceil(F.col("tok_sum") / F.lit(max_length_in_cluster)), F.col("n_members")
+            ).cast("int").alias("n_buckets"),
+        )
+    )
+
+
 def build_parent_nodes(
     nodes: DataFrame,
     next_level: int,
@@ -67,14 +81,6 @@ def build_parent_nodes(
     lattice: str = "quad",
 ) -> DataFrame:
     """One parent node per (parent cell, salt bucket) of the given nodes.
-
-    A node's salt is ``pmod(node_id, n)`` in a hot cell, with
-    ``n = least(ceil(tok_sum / max_length_in_cluster), n_members)``
-    (:func:`salt_bucket_count`), else 0. ``tok_sum`` and ``n_members`` are a
-    window over ``parent_cell``, whose hash partitioning the
-    ``groupBy("parent_cell", "salt")`` reuses: one shuffle per level. The
-    window keeps a hot cell's rows in one shuffle partition; the salt bounds
-    each group, not the partition.
 
     Two-stage shape chosen for scale: the shuffle-side grouping is a pure JVM
     hash aggregation (``collect_list`` of (node_id, text, x, y) structs,
@@ -88,14 +94,19 @@ def build_parent_nodes(
     ``embeddings`` map computed on its summary text (reference
     tree_builder.py:125-127: parent embeddings are re-embedded per model)."""
     embed, multi = batch_embedder(models, cluster_model, dim)
-    cell = Window.partitionBy("parent_cell")
-    tok_sum = F.sum("token_count").over(cell)
-    n_buckets = F.least(F.ceil(tok_sum / F.lit(max_length_in_cluster)), F.count("*").over(cell))
-    staged = nodes.withColumn("parent_cell", parent_cell(F.col("cell_id"), lattice)).withColumn(
-        "salt",
-        F.when(
-            tok_sum > max_length_in_cluster, F.pmod(F.col("node_id"), n_buckets).cast("int")
-        ).otherwise(F.lit(0)),
+    pcell = parent_cell(F.col("cell_id"), lattice)
+    salt_df = F.broadcast(_salt_map(nodes, pcell, max_length_in_cluster))
+
+    staged = (
+        nodes.withColumn("parent_cell", pcell)
+        .join(salt_df, "parent_cell", "left")
+        .withColumn(
+            "salt",
+            F.when(
+                F.col("n_buckets").isNotNull(),
+                F.pmod(F.col("node_id"), F.col("n_buckets").cast("long")).cast("int"),
+            ).otherwise(F.lit(0)),
+        )
     )
 
     grouped = staged.groupBy("parent_cell", "salt").agg(

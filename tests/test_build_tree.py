@@ -243,6 +243,32 @@ def test_hot_cell_salting(spark, docs):
     assert salt_bucket_count(1000, 50, 100) == 10
 
 
+def test_hot_cell_buckets_spread_over_tasks(spark, docs):
+    """Salting must spread a hot cell's work, not only cap its group size:
+    with nine in ten leaves in one cell, that cell's salt buckets are
+    summarized in more than one task (shuffle partition)."""
+    from raptor_rag_spark.kernels.grid import cell_parent
+    from raptor_rag_spark.operators.core import leaf_nodes
+
+    leaves = leaf_nodes(docs, max_tokens=64, res=3).cache()
+    hot_cell = leaves.select("cell_id").first()[0]
+    skewed = leaves.withColumn(
+        "cell_id", F.when(F.col("node_id") % 10 != 0, F.lit(hot_cell)).otherwise(F.col("cell_id"))
+    )
+    parents = build_parent_nodes(skewed, 1, max_length_in_cluster=100)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # else AQE folds this tiny input into one task
+    try:
+        hot = parents.filter(F.col("cell_id") == int(cell_parent(hot_cell, 1)))
+        tasks = [r["task"] for r in hot.select(F.spark_partition_id().alias("task")).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert len(tasks) > 4  # the hot cell is salted into several buckets
+    assert len(set(tasks)) > 1
+    leaves.unpersist()
+
+
 def test_tile_and_level_stats(tree):
     tiles = tile_stats(tree)
     assert tiles.filter("n <= 0").count() == 0
