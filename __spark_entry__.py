@@ -9,12 +9,13 @@ rules (decimal sums, twin IEEE expression order, string-formatted timestamps).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from raptor_rag_spark.plans import contract  # noqa: E402
 

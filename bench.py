@@ -1,44 +1,250 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Registry timer: the headline legs at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "pages_per_sec": ...}
+Every leg in ``LEGS`` names a registry query (``plans/contract.py``
+``QUERIES``). Its number is the minimum of ``RUNS`` runs of
+``QUERIES[name](spark, sf_dir)`` collected to pandas, and the last run's
+output is then compared with the query's DuckDB ``oracle_sql()`` twin by
+``scripts/check_contract.py``'s ``check_query``. The tree oracles read the
+``.tree_dumps/sf0.01_*`` dumps, so at any other scale those legs print
+``unchecked (oracle pinned to sf0.01)``. Registry queries
+that keep a built structure per session (the tree, lake and tile-stats
+tables) time its reuse after the first run.
 
-The headline is the north-rule pipeline: documents → chunk → embed (Arrow UDF)
-→ xy-project → cell encode → soft assignment (PIP) → per-level tile rollup
-(tree build), plus the retrieval joins and the dedup/similarity/text operator
-families. Scaling study (N vs 4N cores on identical input + exact-match
-outputs) lives in scripts/scaling_bench.py → BENCH.md.
+The legs no registry query covers:
+  - ``tree_build`` / ``tree_build_hex``: the flagship build, quad and hex;
+  - ``incremental_update``: a 1% delta folded into the built tree;
+  - ``interactive_retrieve``: single-question p50/p95 and the per-question
+    cost of a 200-question batch (``retrieve_latency``);
+  - ``marginal_scaling``: the ``MARGINAL`` legs over a 1x and a ``MULT``x
+    replica of the sf directory (ids shifted, embeddings jittered per copy,
+    each table written as ``cpus`` part files so both sizes read one input
+    split per core), and the Knox test at 1x and ``DENSITY_MULT``x event
+    density in the same extent. A marginal leg that leaves no rows (or
+    no Knox points) to work on fails its check.
+
+Prints one JSON line (``metric``, ``value`` = the sum of the legs, ``unit``,
+``queries``, ``checks``, ``sf``, ``cpus``, ``pages_per_sec``,
+``retrieve_latency``, ``marginal_scaling``) and exits 1 when a check fails.
+Progress and one status line per leg go to stderr.
+
+Usage: python bench.py
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from raptor_rag_spark.plans.contract import ORACLES, QUERIES
+from scripts.check_contract import TABLES, check_query, oracle_views
 
-from pyspark.sql import functions as F  # noqa: E402
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
-from raptor_rag_spark.config import ClusterTreeConfig  # noqa: E402
-from raptor_rag_spark.operators import dedup as D  # noqa: E402
-from raptor_rag_spark.operators import similarity as S  # noqa: E402
-from raptor_rag_spark.operators import textops as T  # noqa: E402
-from raptor_rag_spark.operators.core import with_embedding  # noqa: E402
-from raptor_rag_spark.operators.knn import cell_pruned_knn, collapsed_knn  # noqa: E402
-from raptor_rag_spark.operators.pipjoin import pip_join, soft_assignments  # noqa: E402
-from raptor_rag_spark.operators.rollup import tile_stats  # noqa: E402
-from raptor_rag_spark.plans.build_tree import build_tree  # noqa: E402
-from raptor_rag_spark.plans.contract import DIM, PIP_POLYS, QUERY_TEXTS  # noqa: E402
-from raptor_rag_spark.functions import sqlgen as G  # noqa: E402
-from raptor_rag_spark.session import get_spark, warm_python_workers  # noqa: E402
-
+RUNS = 3
+MULT = 10
+DENSITY_MULT = 100
+DENSITY_BASE = 2000  # events at 1x density
 MAX_RES = 8
+PINNED = ".tree_dumps/sf0.01_"
+UNCHECKED = "unchecked (oracle pinned to sf0.01)"
+
+# one registry query per leg, in the order of the suite this replaced (BENCH.md)
+LEGS = [
+    "tree_collapsed_knn", "tree_cell_knn", "tree_tile_stats", "pip_join", "soft_assign",
+    "exact_dedup", "minhash_pairs", "dedup_clusters", "simhash", "emb_topk", "emb_ivf_topk",
+    "grid_knn", "multimodal_decode", "bm25_rank", "ql_rank", "rrf_hybrid", "rm3_rank",
+    "mmr_diversify", "snippet_extract", "sdm_rank", "kde_heatmap", "kde_focal", "kde_pyramid",
+    "doc_lm_score", "doc_top_terms", "corpus_shards", "zonal_stats", "grid_dbscan", "idw_surface",
+    "para_dedup", "pii_scrub", "url_canon", "link_graph", "phrase_search", "cell_extremes",
+    "srp_pairs", "getis_ord", "merge_upsert", "token_quantiles", "dup_spans", "link_pagerank",
+    "zorder_layout", "hilbert_layout", "region_boundary", "distance_transform", "tile_hulls",
+    "skyline", "triangle_count", "kcore", "bigram_lm", "funnel", "event_transitions",
+    "cohort_retention", "doc_tokens", "doc_lang", "doc_quality", "hex_pyramid", "winnow_matches",
+    "geo_chord", "s2_cells", "hex_soft", "geo_bearing", "path_rollup", "host_distances",
+    "term_bursts", "host_recency", "host_communities", "quality_rank", "simhash_near", "cdc_dup",
+    "stay_points", "lake_zorder_scan", "tile_incremental", "sd_ellipse", "knox_test", "knox_capped",
+    "gravity_model", "headtail_breaks", "quadtree_leaves", "quadtree_assign", "voronoi_raster",
+    "voronoi_route", "kmeans_silhouette", "containment", "colocation", "clark_evans",
+    "trend_surface", "cost_distance", "spatial_scan", "join_counts", "quadrat_test",
+    "spacetime_scan", "box_dimension", "mercator_tiles", "wand_rank", "term_drift", "theil_sen",
+    "host_gini", "str_layout", "tile_geomedian", "huff_model", "accessibility_2sfca",
+    "segregation", "bootstrap_ci", "clarity_score", "interval_overlap", "attribution_linear",
+    "sequence_pack", "rake_keywords", "dd_quantiles", "mixture_sample", "gwr_local",
+    "radiation_model", "c4_gopher_filters", "text_tiling", "readability", "kaplan_meier",
+    "hll_overlap", "betweenness", "robustness_curve", "stylometry_delta", "benford_digits",
+]
+# the heaviest corpus passes, timed again over the 1x and MULTx replicas
+MARGINAL = ["bm25_rank", "sdm_rank", "spatial_scan", "spacetime_scan", "knox_test", "srp_pairs"]
+DENSITY_LEG = "knox_test"
+ID_COL = {"documents": "doc_id", "embeddings": "vec_id", "events": "event_id"}
+
+QUESTIONS = [
+    "spark join data", "customer order totals", "streaming watermark state",
+    "partition shuffle skew", "broadcast hash join", "parquet column pruning",
+    "window rank filter", "tile rollup summary", "cell pruned candidates",
+    "embedding nearest neighbor", "token budget cutoff", "crawl frontier hosts",
+    "merge sort batch", "query scan filter", "group agg value", "fast row column",
+    "big data line", "hash key group", "stream batch slow", "order customer part",
+]
 
 
-def main() -> None:
+def timed(spark, name, fn):
+    """(min wall over RUNS runs, last result) of fn(); jobs carry the leg's
+    name as their group, so an event log attributes them."""
+    spark.sparkContext.setJobGroup(name, name)
+    best, out = float("inf"), None
+    for _ in range(RUNS):
+        t0 = time.perf_counter()
+        out = fn()
+        best = min(best, time.perf_counter() - t0)
+    spark.sparkContext.setJobGroup("", "")
+    return round(best, 3), out
+
+
+def run_leg(spark, name, sf_dir, con):
+    """(seconds or None, check status, last output) of registry leg
+    ``name`` at ``sf_dir``."""
+    walls = []
+
+    def run():
+        wall, out = timed(spark, name, lambda: QUERIES[name](spark, sf_dir).toPandas())
+        walls.append(wall)
+        return out
+
+    pinned = PINNED in ORACLES[name] and os.path.basename(sf_dir.rstrip("/")) != "sf0.01"
+    status, msg, got = check_query(name, run, con, None if pinned else ORACLES[name])
+    if status == "weak":
+        status = UNCHECKED
+    elif status == "FAIL":
+        status = f"FAIL ({msg.splitlines()[0][:200]})"
+    return (walls[0] if walls else None), status, got
+
+
+def write_replica(spark, sf_dir, out, mult, tables, parts, head=None):
+    """``sf_dir`` as another sf directory at ``out``: each of ``tables`` (its
+    first ``head`` rows by id, when given) repeated ``mult`` times, ids
+    shifted by the row count per copy and embeddings jittered per copy so
+    cells fill up instead of stacking duplicates, written as ``parts`` part
+    files (one input split each); other tables linked."""
+    from pyspark.sql import functions as F
+
+    os.makedirs(out)
+    rep = spark.range(mult).select(F.col("id").alias("rep"))
+    for t in TABLES:
+        path = f"{out}/{t}.parquet"
+        if t not in tables:
+            os.symlink(f"{sf_dir}/{t}.parquet", path)
+            continue
+        key = ID_COL[t]
+        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        if head is not None:
+            df = df.orderBy(key).limit(head)
+        n = df.count()
+        big = df.crossJoin(F.broadcast(rep)).withColumn(
+            key, (F.col(key) + F.col("rep") * F.lit(n)).cast(df.schema[key].dataType)
+        )
+        if t == "embeddings":
+            jitter = lambda v, i: (  # noqa: E731
+                v + F.sin((i + F.lit(1)) * (F.col("rep") + F.lit(1))) * F.lit(0.03)
+            ).cast("float")
+            big = big.withColumn("embedding", F.transform("embedding", jitter))
+        big.drop("rep").repartition(parts).write.parquet(path)
+
+
+def marginal_scaling(spark, sf_dir, cpus, checks):
+    """Per-doc cost of the MARGINAL legs at MULTx input against 1x, and of
+    the Knox test at DENSITY_MULTx event density in the same extent."""
+
+    def leg(name, d, tag):
+        wall, status, got = run_leg(spark, name, d, oracle_views(d))
+        if status == "ok" and (got.empty or ("n" in got and not (got["n"] > 0).all())):
+            status = "FAIL (no rows left to time)"
+        checks[f"{name}@{tag}"] = status
+        log(f"{status:<8} {name}@{tag}: {wall} s")
+        return wall
+
+    def ratio(key, w1, wm, mult):
+        if w1 and wm:
+            out["legs"][key] = {
+                "wall_small_s": w1,
+                "wall_big_s": wm,
+                "per_doc_ratio": round((wm / mult) / w1, 3),
+                "marginal_ratio": round((wm - w1) / ((mult - 1) * w1), 3),
+            }
+
+    scratch = tempfile.mkdtemp(prefix="bench_replica_")
+    try:
+        small, big, base, dense = (
+            os.path.join(scratch, d) for d in ("small", "big", "base", "dense")
+        )
+        corpus = ("documents", "embeddings", "events")
+        write_replica(spark, sf_dir, small, 1, corpus, cpus)
+        write_replica(spark, sf_dir, big, MULT, corpus, cpus)
+        write_replica(spark, sf_dir, base, 1, ("events",), cpus, head=DENSITY_BASE)
+        write_replica(spark, sf_dir, dense, DENSITY_MULT, ("events",), cpus, head=DENSITY_BASE)
+        n_small, n_big = (spark.read.parquet(f"{d}/documents.parquet").count() for d in (small, big))
+        out = {"mult": MULT, "n_docs_small": n_small, "n_docs_big": n_big, "legs": {}}
+        for name in MARGINAL:
+            ratio(name, leg(name, small, "1x"), leg(name, big, f"{MULT}x"), MULT)
+        ratio(
+            f"{DENSITY_LEG}_density{DENSITY_MULT}", leg(DENSITY_LEG, base, "1x"),
+            leg(DENSITY_LEG, dense, f"{DENSITY_MULT}x"), DENSITY_MULT,
+        )
+        return out
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def retrieve_latency(spark, tree) -> dict:
+    """Warm single-question latency over QUESTIONS, and the per-question
+    wall of one 200-question batch on the same facade."""
+    from raptor_rag_spark.api import RetrievalAugmentation
+    from raptor_rag_spark.config import ClusterTreeConfig
+
+    ra = RetrievalAugmentation(spark, ClusterTreeConfig(max_tokens=64), tree=tree)
+    ra.retrieve("warm up the retrieval path", top_k=5)
+    lat = []
+    for q in QUESTIONS:
+        t0 = time.perf_counter()
+        ra.retrieve(q, top_k=5)
+        lat.append(time.perf_counter() - t0)
+    lat.sort()
+    qdf = spark.createDataFrame(
+        [(i, QUESTIONS[i % len(QUESTIONS)]) for i in range(200)], "query_id long, qtext string"
+    )
+    t0 = time.perf_counter()
+    ra.retrieve_batch(qdf, top_k=5).count()
+    batch = time.perf_counter() - t0
+    return {
+        "n": len(lat),
+        "p50_s": round(lat[len(lat) // 2], 4),
+        "p95_s": round(lat[int(len(lat) * 0.95)], 4),
+        "min_s": round(lat[0], 4),
+        "max_s": round(lat[-1], 4),
+        "mean_s": round(sum(lat) / len(lat), 4),
+        "batch_n": 200,
+        "batch_per_q_s": round(batch / 200, 4),
+    }
+
+
+def log(msg: str) -> None:
+    print(msg, file=sys.stderr, flush=True)
+
+
+def main() -> int:
+    # the Python workers import this checkout too, whatever the working
+    # directory (this process finds it as the script's own directory)
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
+    from pyspark.sql import functions as F
+
+    from raptor_rag_spark.config import ClusterTreeConfig
+    from raptor_rag_spark.plans.build_tree import build_tree, update_tree
+    from raptor_rag_spark.session import get_spark, warm_python_workers
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
@@ -47,1222 +253,64 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     warm_python_workers(spark)
 
-    # The sf parquet files are a single input split (<1 MB), which would pin
-    # every map stage to ONE core — a local artifact a real corpus never has
-    # (100 TB = thousands of splits). Spread the cached input like a real
-    # scan would be.
+    # the sf parquet file is one input split; spread the corpus over the
+    # cores as a real scan would (untimed corpus prep)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus).cache()
     n_docs = docs.count()
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus).cache()
-    embs.count()
+    cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=MAX_RES)
+    hex_cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=5, lattice="hex")
+
+    def build(c):
+        # each level is committed (checkpointed) as it is built; count reads them
+        tree = build_tree(docs, c)
+        tree.count()
+        return tree
 
     timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    state: dict[str, object] = {}
-    # r2 adjudication: leg times absorbed Python-worker/codegen warm-up
-    # depending on suite ORDER (exact_dedup read 12 s cold / 0.37 s warm),
-    # making round-over-round deltas unusable. Default: run each leg twice,
-    # report the warm time as the leg's number and keep the cold one in
-    # queries_cold for the latency-curious. SPARK_GRAFT_BENCH_RUNS=1 restores
-    # the old single-shot behavior.
-    runs = max(int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")), 1)
-
-    def timed(name, fn):
-        # job-group label → event-log stages attribute to the query when
-        # profiling with SPARK_GRAFT_EVENTLOG=1
-        spark.sparkContext.setJobGroup(name, name)
-        best = None
-        for i in range(runs):
-            t0 = time.time()
-            fn()
-            dt = round(time.time() - t0, 3)
-            if i == 0:
-                cold[name] = dt
-            best = dt if best is None else min(best, dt)
-        timings[name] = best
-        spark.sparkContext.setJobGroup("", "")
-
-    # 1. headline: full tile-tree build (chunk→embed→cell→per-level rollup)
-    def _build():
-        cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=MAX_RES)
-        tree = build_tree(docs, cfg).cache()
-        state["tree"] = tree
-        state["n_nodes"] = tree.count()
-
-    timed("tree_build", _build)
-    tree = state["tree"]
-
-    # the same build on the HEXAGONAL lattice (res 5 ~ quad res 8 cell size)
-    def _build_hex():
-        cfg = ClusterTreeConfig(
-            max_tokens=64, num_layers=3, max_resolution=5, lattice="hex"
-        )
-        build_tree(docs, cfg).count()
-
-    timed("tree_build_hex", _build_hex)
-
-    # interactive single-question retrieve latency (the reference's only
-    # published performance number: 0.29-1.15 s/query retrieval_time_s in
-    # benchmarks/results_quality_*.json). Warm path = the warm-up question
-    # collected the tree to the driver (when under the broadcast bound), so
-    # each question runs no Spark action (tests/test_api_facade.py asserts
-    # the action count); p50/p95 over 20 distinct questions lands in the JSON as
-    # retrieve_latency and BASELINE.md quotes it next to the reference's.
-    def _interactive():
-        from raptor_rag_spark.api import RetrievalAugmentation
-
-        ra = RetrievalAugmentation(spark, ClusterTreeConfig(max_tokens=64), tree=tree)
-        ra.retrieve("warm up the retrieval path", top_k=5)  # warm: metadata + codegen
-        qs = [
-            "spark join data", "customer order totals", "streaming watermark state",
-            "partition shuffle skew", "broadcast hash join", "parquet column pruning",
-            "window rank filter", "tile rollup summary", "cell pruned candidates",
-            "embedding nearest neighbor", "token budget cutoff", "crawl frontier hosts",
-            "merge sort batch", "query scan filter", "group agg value",
-            "fast row column", "big data line", "hash key group",
-            "stream batch slow", "order customer part",
-        ]
-        lat = []
-        for q in qs:
-            t0 = time.time()
-            ra.retrieve(q, top_k=5)
-            lat.append(time.time() - t0)
-        lat.sort()
-        # the engine's NATIVE interactive surface is batch: one kNN join
-        # amortizes over every question (api.retrieve_batch docstring), so
-        # report the per-question amortized wall next to the single-question
-        # p50/p95 — the pair brackets the latency story vs the reference's
-        # one-question-at-a-time 0.29-1.15 s loop
-        qdf = spark.createDataFrame(
-            [(i, qs[i % len(qs)]) for i in range(200)], "query_id long, qtext string"
-        )
-        t0 = time.time()
-        ra.retrieve_batch(qdf, top_k=5).count()
-        batch_wall = time.time() - t0
-        state["retrieve_latency"] = {
-            "n": len(lat),
-            "p50_s": round(lat[len(lat) // 2], 4),
-            "p95_s": round(lat[int(len(lat) * 0.95)], 4),
-            "min_s": round(lat[0], 4),
-            "max_s": round(lat[-1], 4),
-            "mean_s": round(sum(lat) / len(lat), 4),
-            "batch_n": 200,
-            "batch_per_q_s": round(batch_wall / 200, 4),
-        }
-
-    # run ONCE outside timed() (the leg's own p50 is the metric — timing the
-    # whole 20-question loop twice would double-charge the suite total);
-    # report the p50 as the leg's number, detail in retrieve_latency
-    spark.sparkContext.setJobGroup("interactive_retrieve", "interactive_retrieve")
-    _interactive()
-    rl = state["retrieve_latency"]
-    timings["interactive_retrieve"] = rl["p50_s"]
-    cold["interactive_retrieve"] = rl["max_s"]
-    spark.sparkContext.setJobGroup("", "")
-
-    # incremental maintenance: fold a 1% crawl delta into the built tree by
-    # recomputing only the dirty-cell cone (plans/build_tree.py:update_tree)
-    def _incr():
-        from raptor_rag_spark.plans.build_tree import update_tree
-
-        cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=MAX_RES)
-        delta = docs.limit(max(n_docs // 100, 50)).select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-        )
-        state["n_updated"] = update_tree(tree, delta, cfg).count()
-
-    timed("incremental_update", _incr)
-
-    qdf = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(QUERY_TEXTS * 4)], "query_id long, qtext string"
-    ).withColumn("query_id", F.monotonically_increasing_id())
-    queries = with_embedding(qdf, "qtext").select(
-        "query_id", F.col("embedding").alias("q_embedding")
-    ).cache()
-    queries.count()
-
-    # 2. retrieval joins over the built tree. Retrieval reads a COMPACTED
-    # tree: the raw build output is a union of per-level shuffle outputs
-    # (128 partitions of ~70 rows each at sf0.1 — a local artifact; a real
-    # deployment stores the tree in the lakehouse with right-sized files,
-    # sources/lakehouse.py + operators/compact.py). Scanning the inflated
-    # union made every retrieval call pay ~100 near-empty task launches per
-    # pass (measured 19 s vs 5 s warm for cell_knn). Like cell_counts below,
-    # compaction is per-corpus, not per-query — untimed corpus prep.
-    rtree = tree.repartition(cpus).localCheckpoint(eager=True)
-    timed("collapsed_knn", lambda: collapsed_knn(rtree, queries, top_k=10).count())
-    levels = [r["level"] for r in tree.select("level").distinct().collect()]
-    levels_res = {lv: max(MAX_RES - lv, 0) for lv in levels}
-    # cell_counts is corpus-dependent, not query-dependent: computed ONCE per
-    # corpus (untimed, like the tree build artifacts) and reused by every
-    # retrieval call — the amortization the operator's cell_counts param exists
-    # for. The leg then times what an interactive caller actually pays.
-    from raptor_rag_spark.operators.knn import corpus_cell_counts
-
-    tree_cell_counts = corpus_cell_counts(rtree)
-    timed(
-        "cell_knn",
-        lambda: cell_pruned_knn(
-            rtree, queries, levels_res, top_k=10, cell_counts=tree_cell_counts
-        ).count(),
+    timings["tree_build"], tree = timed(spark, "tree_build", lambda: build(cfg))
+    timings["tree_build_hex"], _ = timed(spark, "tree_build_hex", lambda: build(hex_cfg))
+    latency = retrieve_latency(spark, tree)
+    timings["interactive_retrieve"] = latency["p50_s"]
+    delta = docs.limit(max(n_docs // 100, 50)).select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
     )
-
-    # 3. spatial joins + rollups over the embeddings table
-    x, y = G.xy_cols(F.col("embedding"), DIM)
-    pts = embs.select(F.col("vec_id").alias("node_id"), x.alias("x"), y.alias("y")).cache()
-    pts.count()
-    polys = spark.createDataFrame(PIP_POLYS, "cell_id long, ring array<array<double>>")
-    timed("pip_join", lambda: pip_join(pts, polys).count())
-    timed("soft_assign", lambda: soft_assignments(pts, res=6, buffer_frac=0.1).count())
-    timed("tile_rollup", lambda: tile_stats(tree).count())
-
-    # 4. dedup family (pairs → connected components → keep-list)
-    timed("exact_dedup", lambda: D.exact_dedup(docs).count())
-    timed("minhash_pairs", lambda: D.minhash_band_pairs(docs).count())
-    timed(
-        "dedup_clusters",
-        lambda: D.apply_dedup(docs, D.dedup_clusters(D.minhash_band_pairs(docs))).count(),
+    timings["incremental_update"], _ = timed(
+        spark, "incremental_update", lambda: update_tree(tree, delta, cfg).count()
     )
-    timed("simhash", lambda: D.simhash_fingerprints(docs).count())
+    for name in timings:
+        log(f"{'-':<8} {name}: {timings[name]} s")
+
+    con = oracle_views(sf_dir)
+    checks: dict[str, str] = {}
+    for name in LEGS:
+        wall, checks[name], _ = run_leg(spark, name, sf_dir, con)
+        if wall is not None:
+            timings[name] = wall
+        log(f"{checks[name]:<8} {name}: {wall} s")
+    marginal = marginal_scaling(spark, sf_dir, cpus, checks)
 
-    # skew-bomb guard: a corpus with a 2000x-duplicated boilerplate text must
-    # produce BOUNDED candidate pairs (band-bucket cap), not C(2000,2)≈2M
-    def _dup_heavy():
-        boiler = spark.range(2000).select(
-            (F.col("id") + 10_000_000).alias("doc_id"),
-            F.lit("identical boiler plate page body repeated across the crawl").alias("text"),
-        )
-        mixed = docs.select("doc_id", "text").unionByName(boiler)
-        state["dup_heavy_pairs"] = D.minhash_band_pairs(mixed).count()
-
-    timed("minhash_pairs_dup_heavy", _dup_heavy)
-
-    # 5. similarity search
-    eq = embs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    timed("emb_topk", lambda: S.brute_force_topk(embs, eq, k=10, dim=DIM).count())
-    timed("emb_ivf_topk", lambda: S.ivf_topk(embs, eq, k=10, res=3, dim=DIM).count())
-
-    # exact tile-space kNN (grid ring search, covering-radius guarantee)
-    from raptor_rag_spark.operators.knn import grid_knn
-
-    gq = pts.filter(F.col("node_id") < 8).select(
-        F.col("node_id").alias("query_id"), "x", "y"
-    )
-    timed(
-        "grid_knn",
-        lambda: grid_knn(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), gq, res=6, k=10
-        ).count(),
-    )
-
-    # real multimodal decode (BMP pixels + WAV samples, pure numpy)
-    from raptor_rag_spark.operators.multimodal import decode_media_features, synth_media
-
-    timed("multimodal_decode", lambda: decode_media_features(synth_media(docs)).count())
-
-    # full-text BM25 (inverted-index postings + twin-ln idf + per-query top-k)
-    from raptor_rag_spark.operators.ranking import bm25_rank
-
-    bq = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(QUERY_TEXTS)], "query_id int, qtext string"
-    )
-    timed(
-        "bm25_rank",
-        lambda: bm25_rank(
-            docs.select("doc_id", "text"), bq, top_k=10, max_df_ratio=(9, 10)
-        ).count(),
-    )
-
-    # round-3 search stack over ONE shared postings index: Dirichlet-QL,
-    # BM25⊕QL reciprocal-rank fusion, RM3 feedback expansion, MMR
-    # diversification, result-page snippets — the index is built once
-    # (the persisted-index amortization every leg here exists to showcase)
-    from raptor_rag_spark.operators.ranking import (
-        bm25_index,
-        index_stats,
-        ql_rank,
-        rm3_rank,
-        rrf_fuse,
-        snippet_extract,
-    )
-    from raptor_rag_spark.operators.rerank import mmr_select
-
-    def _search_stack():
-        d2 = docs.select("doc_id", "text")
-        postings = bm25_index(d2).localCheckpoint(eager=True)
-        # battery statistics once (round-5: unshared, each ranker re-derived
-        # dl/df/stats with full index passes)
-        st = index_stats(postings)
-        a = bm25_rank(None, bq, top_k=10, max_df_ratio=(9, 10), postings=postings,
-                      shared=st)
-        b = ql_rank(None, bq, top_k=10, postings=postings, shared=st)
-        rrf_fuse(a, b, top_k=10).count()
-        rm3_rank(d2, bq, top_k=10, max_df_ratio=(9, 10), postings=postings,
-                 shared=st).count()
-        cand = a.select("query_id", "doc_id", F.col("score").alias("rel"))
-        mmr_select(cand, d2, k=5, lam=0.7).count()
-        snippet_extract(d2, bq, window=20, cand=a).count()
-
-    timed("search_stack", _search_stack)
-
-    # sequential-dependence proximity retrieval (unigram + ordered-bigram +
-    # unordered-window components; positional pair join pre-filtered to the
-    # broadcast query-bigram vocabulary)
-    from raptor_rag_spark.operators.ranking import sdm_rank
-
-    timed("sdm_rank", lambda: sdm_rank(docs.select("doc_id", "text"), bq).count())
-
-    # Gaussian KDE heatmap raster over the embedding plane (twin-exp kernel)
-    from raptor_rag_spark.operators.heatmap import kde_heatmap
-
-    timed(
-        "kde_heatmap",
-        lambda: kde_heatmap(
-            embs.select(x.alias("x"), y.alias("y")), res=6, bandwidth=0.03
-        ).count(),
-    )
-
-    # map-algebra focal mean over the KDE raster (3×3 smoothing)
-    from raptor_rag_spark.operators.heatmap import focal_mean
-
-    timed(
-        "kde_focal",
-        lambda: focal_mean(
-            kde_heatmap(embs.select(x.alias("x"), y.alias("y")), res=6, bandwidth=0.03),
-            res=6,
-        ).count(),
-    )
-
-    # full tile pyramid over the KDE raster (per-level quadtree rollup)
-    from raptor_rag_spark.operators.heatmap import build_pyramid
-
-    timed(
-        "kde_pyramid",
-        lambda: build_pyramid(
-            kde_heatmap(embs.select(x.alias("x"), y.alias("y")), res=6, bandwidth=0.03),
-            res=6,
-            min_res=2,
-        ).count(),
-    )
-
-    # unigram-LM quality gate (postings + twin-ln log-likelihood)
-    from raptor_rag_spark.operators.textops import lm_scores
-
-    timed("doc_lm_score", lambda: lm_scores(docs.select("doc_id", "text")).count())
-
-    # TF-IDF keyword extraction (top-5 characteristic terms per doc)
-    from raptor_rag_spark.operators.ranking import doc_top_terms
-
-    timed("doc_top_terms", lambda: doc_top_terms(docs.select("doc_id", "text"), top_k=5).count())
-
-    # token-budget sharding (scalable two-level prefix sum, hash order)
-    from raptor_rag_spark.operators.sampling import corpus_shards
-
-    timed(
-        "corpus_shards",
-        lambda: corpus_shards(docs.select("doc_id", "text"), token_budget=4096).count(),
-    )
-
-    # zonal statistics (exact-PIP membership → per-polygon aggregates)
-    from raptor_rag_spark.operators.pipjoin import zonal_stats
-
-    timed("zonal_stats", lambda: zonal_stats(pts.select("node_id", "x", "y"), polys).count())
-
-    # density clustering (cell-granular DBSCAN: CC over cells, not points)
-    from raptor_rag_spark.operators.spatial import grid_dbscan
-
-    timed(
-        "grid_dbscan",
-        lambda: grid_dbscan(pts, res=4, min_pts=4, id_col="node_id").count(),
-    )
-
-    # IDW interpolation raster (Shepard power-2, 9× bounded fan-out)
-    from raptor_rag_spark.operators.heatmap import idw_surface
-
-    timed(
-        "idw_surface",
-        lambda: idw_surface(
-            pts.withColumn("v", (F.col("node_id") % 7).cast("double")), res=5
-        ).count(),
-    )
-
-    # 6. web-corpus curation sweep over synthetic Common-Crawl pages
-    from raptor_rag_spark.operators.curation import (
-        canonical_dedup,
-        extract_links,
-        line_dedup,
-        pii_scrub,
-    )
-    from raptor_rag_spark.sources.pages import generate_pages
-
-    pages = generate_pages(spark, max(2 * n_docs, 2000)).cache()
-    timed("pages_gen", lambda: pages.count())
-    timed("para_dedup", lambda: line_dedup(pages).count())
-    timed("pii_scrub", lambda: pii_scrub(pages).count())
-    timed("url_canon", lambda: canonical_dedup(pages).count())
-    timed("link_graph", lambda: extract_links(pages).count())
-
-    # exact phrase search over the positional index (3 phrases incl. a 3-gram)
-    from raptor_rag_spark.operators.phrases import phrase_search
-    from raptor_rag_spark.plans.contract import PHRASES
-
-    pq = spark.createDataFrame(PHRASES, "phrase_id INT, qtext STRING")
-    timed("phrase_search", lambda: phrase_search(docs.select("doc_id", "text"), pq).count())
-
-    # per-cell directional extremes (approx convex hull of each tile)
-    from raptor_rag_spark.operators.extremes import cell_extremes
-
-    timed(
-        "cell_extremes",
-        lambda: cell_extremes(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), res=3
-        ).count(),
-    )
-
-    # SRP-LSH cosine near-dup candidates (32 sign bits, 8-bit bands, verify)
-    from raptor_rag_spark.operators.similarity import srp_pairs
-
-    timed("srp_pairs", lambda: srp_pairs(embs, min_sim=0.4).count())
-
-    # Getis-Ord Gi* hotspot z-scores over the KDE raster
-    from raptor_rag_spark.operators.heatmap import getis_ord
-
-    timed(
-        "getis_ord",
-        lambda: getis_ord(
-            kde_heatmap(embs.select(x.alias("x"), y.alias("y")), res=6, bandwidth=0.03),
-            res=6,
-            value_col="density",
-        ).count(),
-    )
-
-    # lakehouse MERGE decision dataflow (one full-outer join)
-    from raptor_rag_spark.operators.merge import merge_upsert
-
-    def _merge():
-        updates = docs.where(F.col("doc_id") % 5 == 0).select(
-            "doc_id", F.upper("text").alias("text")
-        )
-        merge_upsert(docs.select("doc_id", "text"), updates, ["doc_id"], ["text"]).count()
-
-    timed("merge_upsert", _merge)
-
-    # exact per-language token-length quantiles (rank selection, no sketch)
-    from raptor_rag_spark.operators.stats import group_quantiles
-
-    timed(
-        "token_quantiles",
-        lambda: group_quantiles(
-            docs.select("lang", G.token_count_col(F.col("text")).alias("v")), "lang", "v"
-        ).count(),
-    )
-
-    # windowed exact-substring duplicate spans (Lee et al. 2022)
-    from raptor_rag_spark.operators.dedup import duplicate_spans
-
-    timed("dup_spans", lambda: duplicate_spans(docs.select("doc_id", "text"), w=8).count())
-
-    # PageRank over the REAL extracted link graph
-    from raptor_rag_spark.operators.graph import link_pagerank
-
-    timed("link_pagerank", lambda: link_pagerank(extract_links(pages), iterations=5).count())
-
-    # Z-order (Morton) lakehouse layout assignment
-    from raptor_rag_spark.operators.layout import zorder_layout
-
-    timed(
-        "zorder_layout",
-        lambda: zorder_layout(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), res=6, bucket_bits=4
-        ).count(),
-    )
-
-    # Hilbert-curve lakehouse layout (locality-tighter sibling of Z-order)
-    from raptor_rag_spark.operators.layout import hilbert_layout
-
-    timed(
-        "hilbert_layout",
-        lambda: hilbert_layout(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), res=6, bucket_bits=4
-        ).count(),
-    )
-
-    # raster→vector: hotspot outline extraction + BFS distance transform
-    from raptor_rag_spark.operators.vectorize import distance_transform, region_boundary
-
-    def _vectorize():
-        raster = kde_heatmap(
-            embs.select(x.alias("x"), y.alias("y")), res=6, bandwidth=0.03
-        ).localCheckpoint(eager=True)
-        region_boundary(raster, res=6, threshold=1.5).count()
-        distance_transform(raster, res=6, threshold=1.5, max_dist=8).count()
-
-    timed("vectorize_raster", _vectorize)
-
-    # per-tile convex hulls (prune + monotone-chain kernel per tile)
-    from raptor_rag_spark.operators.hull import tile_hulls
-
-    timed(
-        "tile_hulls",
-        lambda: tile_hulls(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), res=3
-        ).count(),
-    )
-
-    # grid-pruned exact Pareto skyline
-    from raptor_rag_spark.operators.spatial import skyline
-
-    timed(
-        "skyline",
-        lambda: skyline(
-            pts.select(F.col("node_id").alias("vec_id"), "x", "y"), res=6
-        ).count(),
-    )
-
-    # graph analytics over the real link graph: triangles + 2-core
-    from raptor_rag_spark.operators.graph import kcore, triangle_count
-
-    timed("triangle_count", lambda: triangle_count(extract_links(pages)).count())
-    timed("kcore", lambda: kcore(extract_links(pages), k=2, rounds=8).count())
-
-    # bigram-LM perplexity quality gate
-    from raptor_rag_spark.operators.textops import bigram_lm_scores
-
-    timed("bigram_lm", lambda: bigram_lm_scores(docs.select("doc_id", "text")).count())
-
-    # event-sequence analytics: funnel + Markov transitions + cohorts
-    from raptor_rag_spark.operators.funnel import cohort_retention, event_transitions, funnel
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(cpus).cache()
-    events.count()
-
-    def _events():
-        funnel(events, ["view", "click", "purchase"], window_s=7 * 24 * 3600).count()
-        event_transitions(events).count()
-        cohort_retention(events).count()
-
-    timed("event_analytics", _events)
-
-    # 7. text analysis sweep
-    def _text():
-        T.token_counts(docs).agg(F.sum("n_tokens")).collect()
-        T.language_id(docs).groupBy("lang_guess").count().collect()
-        T.quality_scores(docs).agg(F.avg("quality")).collect()
-
-    timed("text_analysis", _text)
-
-    # hexagonal (H3-style) lattice: pyramid rollup over the embedding xy
-    from raptor_rag_spark.operators.hexgrid import hex_pyramid
-
-    x, y = G.xy_cols(F.col("embedding"), DIM)
-    hpts = embs.select(x.alias("x"), y.alias("y"))
-    timed("hex_pyramid", lambda: hex_pyramid(hpts, res=8, levels=4).count())
-
-    # winnowing fingerprints + MOSS match step
-    timed("winnow_matches", lambda: D.winnow_matches(docs.select("doc_id", "text")).count())
-
-    # geodesic chord distances via the twin sin/cos
-    from raptor_rag_spark.functions import trig as TR
-
-    geo_pts = embs.select(
-        "vec_id",
-        ((x - F.lit(0.5)) * F.lit(6.283185307179586)).alias("lon"),
-        ((y - F.lit(0.5)) * F.lit(3.141592653589793)).alias("lat"),
-    )
-    timed(
-        "geo_chord",
-        lambda: geo_pts.select(
-            TR.chord_dist_col(F.lit(0.7), F.lit(-2.1), F.col("lat"), F.col("lon")).alias("chord")
-        ).agg(F.sum("chord")).collect(),
-    )
-
-    # S2 spherical cells (twin-trig face chart + Hilbert walk, zero shuffles)
-    from raptor_rag_spark.operators.s2 import s2_cells
-
-    timed(
-        "s2_cells",
-        lambda: s2_cells(
-            geo_pts.select("vec_id", "lon", "lat"), res=10
-        ).agg(F.sum("s2_id")).collect(),
-    )
-
-    # hex soft assignment (7x fan-out hexagon PIP collar)
-    from raptor_rag_spark.operators.hexgrid import hex_soft_assign
-
-    timed(
-        "hex_soft",
-        lambda: hex_soft_assign(
-            embs.select("vec_id", x.alias("x"), y.alias("y")), res=8, eps=0.2
-        ).count(),
-    )
-
-    # great-circle bearings via the twin atan2 (narrow barrier before atan)
-    def _bearing():
-        from raptor_rag_spark.plans.contract import GEO_LAT0, GEO_LON0, RAD2DEG
-
-        s1, c1 = TR.sin_py(GEO_LAT0), TR.cos_py(GEO_LAT0)
-        dlon = F.col("lon") - F.lit(GEO_LON0)
-        staged = geo_pts.select(
-            "vec_id",
-            (TR.sin_col(dlon) * TR.cos_col(F.col("lat"))).alias("yc"),
-            (
-                F.lit(c1) * TR.sin_col(F.col("lat"))
-                - F.lit(s1) * (TR.cos_col(F.col("lat")) * TR.cos_col(dlon))
-            ).alias("xc"),
-        ).localCheckpoint(eager=False)
-        deg = TR.atan2_col(F.col("yc"), F.col("xc")) * F.lit(RAD2DEG)
-        staged.select(F.when(deg < 0, deg + F.lit(360.0)).otherwise(deg)).agg(
-            F.count("*")
-        ).collect()
-
-    timed("geo_bearing", _bearing)
-
-    # URL path pyramid + Bellman-Ford host distances over the link graph
-    from raptor_rag_spark.operators.graph import host_distances
-    from raptor_rag_spark.operators.webops import path_rollup
-
-    timed("path_rollup", lambda: path_rollup(pages).count())
-    timed("host_distances", lambda: host_distances(extract_links(pages)).count())
-
-    # round-2 continuation legs: bursts, communities, CDC, ECDF, near-probes
-    from raptor_rag_spark.operators.graph import host_communities
-    from raptor_rag_spark.operators.sampling import quality_rank
-    from raptor_rag_spark.operators.webops import host_recency, term_bursts
-
-    timed("term_bursts", lambda: term_bursts(pages).count())
-    timed("host_recency", lambda: host_recency(pages).count())
-    timed("host_communities", lambda: host_communities(extract_links(pages)).count())
-    timed("quality_rank", lambda: quality_rank(docs.select("doc_id", "text")).count())
-    timed("simhash_near", lambda: D.simhash_near_pairs(docs.select("doc_id", "text")).count())
-    timed("cdc_dup", lambda: D.cdc_dup_stats(docs.select("doc_id", "text")).count())
-    from raptor_rag_spark.operators.spacetime import stay_points as _sp
-
-    def _stay():
-        ev2 = events.join(
-            F.broadcast(embs.select("vec_id", x.alias("x0"), y.alias("y0"))),
-            events["user_id"] % 5000 == F.col("vec_id"),
-        ).select(
-            "user_id", "event_id", "ts",
-            F.greatest(F.least(F.col("x0"), F.lit(1.0)), F.lit(0.0)).alias("x"),
-            F.greatest(F.least(F.col("y0"), F.lit(1.0)), F.lit(0.0)).alias("y"),
-        )
-        _sp(ev2, res=4, min_events=2).count()
-
-    timed("stay_points", _stay)
-
-    # snapshot lakehouse: z-order clustered write + bbox scan w/ file skipping
-    from raptor_rag_spark.sources.lakehouse import LakeTable
-
-    import shutil
-    import tempfile
-
-    lake_dir = tempfile.mkdtemp(prefix="bench_lake_")
-
-    def _lake():
-        shutil.rmtree(lake_dir, ignore_errors=True)
-        t = LakeTable(lake_dir, stats_cols=(LakeTable.ZKEY,))
-        t.append_zordered(pts.withColumnRenamed("node_id", "pid"), res=8, n_files=32)
-        n = t.scan_bbox(spark, 0.2, 0.3, 0.5, 0.6, res=8).count()
-        state["lake_files"] = dict(t.last_scan_stats, rows=n)
-
-    timed("lake_zorder_rw", _lake)
-    shutil.rmtree(lake_dir, ignore_errors=True)
-
-    # incremental tile-stats view maintenance: build per-cell state from the
-    # corpus, then fold a 1% delta — the delta cost is O(delta + occupied
-    # cells), not O(corpus) (sources/tilestats.py)
-    from raptor_rag_spark.sources.tilestats import TileStatsTable
-
-    ts_dir = tempfile.mkdtemp(prefix="bench_tiles_")
-
-    def _tile_view():
-        shutil.rmtree(ts_dir, ignore_errors=True)
-        t = TileStatsTable(ts_dir, res=8)
-        t.build(pts.select("x", "y"))
-        delta = pts.limit(max(pts.count() // 100, 50)).select("x", "y")
-        t.add_points(delta)
-        t.read_stats(spark, res=4).count()
-
-    timed("tile_view_maintain", _tile_view)
-    shutil.rmtree(ts_dir, ignore_errors=True)
-
-    # classical spatial statistics: directional ellipse (one groupBy),
-    # Knox space-time interaction (cell + time-bucket pair joins),
-    # gravity-model OD fit (cell-pair metadata), head/tail breaks
-    from raptor_rag_spark.operators.geostats import (
-        gravity_model,
-        headtail_breaks,
-        knox_test,
-        sd_ellipse,
-    )
-
-    def _geostats():
-        sd_ellipse(hpts, res=2).count()
-        jx = ((F.col("event_id") % 199) - 99) / 1000.0
-        jy = ((F.col("event_id") % 211) - 105) / 1000.0
-        ev3 = events.join(
-            F.broadcast(embs.select("vec_id", x.alias("x0"), y.alias("y0"))),
-            events["user_id"] % 5000 == F.col("vec_id"),
-        ).select(
-            "user_id", "event_id", "ts",
-            F.greatest(F.least(F.col("x0") + jx, F.lit(1.0)), F.lit(0.0)).alias("x"),
-            F.greatest(F.least(F.col("y0") + jy, F.lit(1.0)), F.lit(0.0)).alias("y"),
-        )
-        knox_test(ev3, s_eps=0.02, t_eps=3600, res=5).count()
-        gravity_model(ev3, res=3).count()
-        headtail_breaks(docs, "n_chars", levels=4).count()
-
-    timed("geostats", _geostats)
-
-    # adaptive quadtree: variable-resolution leaf partition from per-level
-    # counts (one corpus groupBy + metadata rollups), then point→leaf routing
-    from raptor_rag_spark.operators.quadtree import adaptive_tiles, quadtree_assign
-
-    def _quadtree():
-        leaves = adaptive_tiles(hpts, max_pts=200, min_res=2, max_res=10)
-        quadtree_assign(
-            pts.withColumnRenamed("node_id", "vec_id"), leaves, min_res=2, max_res=10
-        ).count()
-
-    timed("quadtree", _quadtree)
-
-    # Voronoi service areas + point routing through the precomputed raster;
-    # k-means cluster-quality silhouette; directional containment dedup
-    from raptor_rag_spark.operators.dedup import containment_pairs
-    from raptor_rag_spark.operators.kmeans import kmeans_silhouette
-    from raptor_rag_spark.operators.voronoi import nearest_site_join, voronoi_raster
-
-    def _voronoi():
-        seeds = (
-            embs.orderBy("vec_id")
-            .limit(32)
-            .select(F.col("vec_id").alias("sid"), x.alias("sx"), y.alias("sy"))
-        )
-        voronoi_raster(seeds, res=6).count()
-        nearest_site_join(
-            pts.withColumnRenamed("node_id", "vec_id"), seeds, res=6
-        ).count()
-
-    timed("voronoi", _voronoi)
-    timed(
-        "kmeans_silhouette",
-        lambda: kmeans_silhouette(
-            pts.withColumnRenamed("node_id", "vec_id"), k=8, iters=3
-        ).count(),
-    )
-    timed(
-        "containment",
-        lambda: containment_pairs(docs.select("doc_id", "text"), 0.3).count(),
-    )
-
-    # co-presence contact join + Clark-Evans NN verdict over the corpus plane
-    from raptor_rag_spark.operators.spacetime import colocation_pairs
-    from raptor_rag_spark.operators.stats import clark_evans
-
-    def _colocation():
-        jx = ((F.col("event_id") % 199) - 99) / 1000.0
-        jy = ((F.col("event_id") % 211) - 105) / 1000.0
-        ev4 = events.join(
-            F.broadcast(embs.select("vec_id", x.alias("x0"), y.alias("y0"))),
-            events["user_id"] % 5000 == F.col("vec_id"),
-        ).select(
-            "user_id", "event_id", "ts",
-            F.greatest(F.least(F.col("x0") + jx, F.lit(1.0)), F.lit(0.0)).alias("x"),
-            F.greatest(F.least(F.col("y0") + jy, F.lit(1.0)), F.lit(0.0)).alias("y"),
-        )
-        colocation_pairs(ev4, res=5, t_eps=3600, min_contacts=2).count()
-
-    timed("colocation", _colocation)
-    timed(
-        "clark_evans",
-        lambda: clark_evans(
-            pts.withColumnRenamed("node_id", "vec_id"), res=6
-        ).count(),
-    )
-
-    # OLS trend surface (one aggregate) + cost-distance raster (bounded-round
-    # relaxation over the implicit 8-neighbor cell graph)
-    from raptor_rag_spark.operators.costdist import cost_distance
-    from raptor_rag_spark.operators.geostats import trend_surface
-
-    def _costdist():
-        trend_surface(
-            embs.select(
-                x.alias("x"), y.alias("y"),
-                F.element_at("embedding", 3).cast("double").alias("z"),
-            )
-        ).count()
-        n16 = 16
-        counts = (
-            pts.select(
-                F.greatest(
-                    F.least(F.floor(F.col("x") * n16).cast("long"), F.lit(n16 - 1)),
-                    F.lit(0),
-                ).alias("ix"),
-                F.greatest(
-                    F.least(F.floor(F.col("y") * n16).cast("long"), F.lit(n16 - 1)),
-                    F.lit(0),
-                ).alias("iy"),
-            )
-            .groupBy("ix", "iy")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        cells16 = spark.range(n16 * n16).select(
-            (F.col("id") / n16).cast("long").alias("ix"),
-            (F.col("id") % n16).cast("long").alias("iy"),
-        )
-        grid = cells16.join(counts, ["ix", "iy"], "left").select(
-            "ix", "iy",
-            (F.lit(1.0) + F.coalesce(F.col("c"), F.lit(0)).cast("double")).alias("cost"),
-        )
-        cost_distance(grid, src_ix=8, src_iy=8, res=4, rounds=24).count()
-
-    timed("trend_costdist", _costdist)
-
-    # Kulldorff scan + join counts + quadrat CSR (cell-metadata statistics)
-    from raptor_rag_spark.operators.pointpattern import join_counts, quadrat_test
-    from raptor_rag_spark.operators.scanstat import spatial_scan
-
-    def _scanstats():
-        p3 = pts.select(
-            "x", "y", (F.pmod(F.col("node_id"), F.lit(11)) == 0).alias("is_case")
-        )
-        spatial_scan(p3, res=4, rmax=2, top_k=15).count()
-        join_counts(p3.withColumnRenamed("is_case", "mark"), res=4).count()
-        quadrat_test(p3.select("x", "y"), res=3).count()
-
-    timed("scan_pointpattern", _scanstats)
-
-    # space-time scan cylinders + box-counting dimension + Web-Mercator
-    from raptor_rag_spark.operators.pointpattern import box_dimension
-    from raptor_rag_spark.operators.projection import mercator_project
-    from raptor_rag_spark.operators.scanstat import spacetime_scan
-
-    def _scan2():
-        jx = ((F.col("event_id") % 199) - 99) / 1000.0
-        jy = ((F.col("event_id") % 211) - 105) / 1000.0
-        ev5 = events.join(
-            F.broadcast(embs.select("vec_id", x.alias("x0"), y.alias("y0"))),
-            events["user_id"] % 5000 == F.col("vec_id"),
-        ).select(
-            "ts",
-            F.greatest(F.least(F.col("x0") + jx, F.lit(1.0)), F.lit(0.0)).alias("x"),
-            F.greatest(F.least(F.col("y0") + jy, F.lit(1.0)), F.lit(0.0)).alias("y"),
-            (F.col("event_type") == "error").alias("is_case"),
-        )
-        spacetime_scan(ev5, res=4, rmax=2, wmax=7, top_k=15).count()
-        box_dimension(pts.select("x", "y"), res_lo=2, res_hi=8).count()
-        lon = (F.col("x") - 0.5) * F.lit(2.0 * 3.141592653589793)
-        lat = (F.col("y") - 0.5) * F.lit(3.141592653589793)
-        mercator_project(
-            pts.select(
-                F.col("node_id").alias("vec_id"), lon.alias("lon"), lat.alias("lat")
-            ),
-            zoom=6,
-        ).count()
-
-    timed("scan_spacetime_fractal", _scan2)
-
-    # MaxScore-pruned BM25 (exact vs full scoring, skipping non-essential
-    # postings) — same queries as the bm25 leg
-    from raptor_rag_spark.operators.ranking import maxscore_rank
-
-    def _maxscore():
-        from raptor_rag_spark.plans.contract import BM25_QUERIES
-
-        qs = spark.createDataFrame(BM25_QUERIES, "query_id INT, qtext STRING")
-        maxscore_rank(
-            docs.select("doc_id", "text"), qs, top_k=10, max_df_ratio=(9, 10)
-        ).count()
-
-    timed("maxscore_rank", _maxscore)
-
-    # crawl evolution (term-drift JSD, Theil-Sen trends, host Gini) and the
-    # STR R-tree packing layout
-    from raptor_rag_spark.operators.drift import host_gini, term_drift, theil_sen_hosts
-    from raptor_rag_spark.operators.layout import str_layout
-    from raptor_rag_spark.operators.webops import URL_RE
-
-    def _drift():
-        term_drift(pages).count()
-        theil_sen_hosts(pages, URL_RE).count()
-        host_gini(pages, URL_RE).count()
-
-    timed("crawl_drift", _drift)
-    timed(
-        "str_layout",
-        lambda: str_layout(
-            pts.withColumnRenamed("node_id", "vec_id"), page_cap=64
-        ).count(),
-    )
-
-    # robust/evaluation statistics: geometric median, Huff catchment, 2SFCA,
-    # segregation, bootstrap CI, clarity
-    from raptor_rag_spark.operators.geostats import (
-        accessibility_2sfca,
-        huff_model,
-        tile_geomedian,
-    )
-    from raptor_rag_spark.operators.pointpattern import segregation
-    from raptor_rag_spark.operators.ranking import clarity_score
-    from raptor_rag_spark.operators.sampling import bootstrap_ci
-    from raptor_rag_spark.functions.sqlgen import quality_score_cols
-
-    def _robust():
-        xy = pts.select("x", "y")
-        tile_geomedian(xy, res=2, rounds=4).count()
-        seeds = (
-            embs.orderBy("vec_id")
-            .limit(12)
-            .select(
-                F.col("vec_id").alias("sid"), x.alias("sx"), y.alias("sy"),
-                (F.lit(1.0) + (F.col("vec_id") % 5).cast("double")).alias("w"),
-            )
-        )
-        huff_model(xy, seeds.select("sid", "sx", "sy", "w"), res=4).count()
-        accessibility_2sfca(
-            xy, seeds.select("sid", "sx", "sy", F.col("w").alias("s")), d0=0.25, res=4
-        ).count()
-        segregation(
-            pts.select("x", "y", (F.pmod(F.col("node_id"), F.lit(3)) == 0)
-                       .cast("string").alias("cat")),
-            res=4,
-        ).count()
-        bootstrap_ci(
-            docs.select("doc_id", F.round(quality_score_cols(F.col("text")), 6).alias("q")),
-            "q",
-            n_boot=64,
-        ).count()
-
-    timed("robust_eval_stats", _robust)
-
-    def _clarity():
-        from raptor_rag_spark.plans.contract import BM25_QUERIES
-
-        qs = spark.createDataFrame(BM25_QUERIES, "query_id INT, qtext STRING")
-        clarity_score(
-            docs.select("doc_id", "text"), qs, fb_docs=10, max_df_ratio=(9, 10)
-        ).count()
-
-    timed("clarity_score", _clarity)
-
-    # round-4 operator family: interval join, sequence packing, RAKE,
-    # DDSketch quantiles, GWR, mixture resampling, attribution
-    from raptor_rag_spark.operators.asof import attribution_linear, interval_join
-    from raptor_rag_spark.operators.geostats import gwr_local, radiation_model
-    from raptor_rag_spark.operators.keywords import rake_keywords
-    from raptor_rag_spark.operators.sampling import mixture_sample, sequence_pack
-    from raptor_rag_spark.operators.sketches import dd_quantiles, dd_sketch
-
-    def _round4():
-        t = F.unix_timestamp("ts").cast("long")
-        left = events.filter("event_type = 'signup'").select(
-            F.col("event_id").alias("l_id"), t.alias("l_start"), (t + 7200).alias("l_end")
-        )
-        right = events.filter("event_type = 'error'").select(
-            F.col("event_id").alias("r_id"), (t - 600).alias("r_start"), (t + 600).alias("r_end")
-        )
-        interval_join(left, right, bucket_s=3600).count()
-        attribution_linear(events, window_s=3 * 86400).count()
-        sequence_pack(docs.select("doc_id", "text"), seq_len=2048).count()
-        rake_keywords(docs.select("doc_id", "text"), top_k=25).count()
-        toks = docs.select("doc_id", G.token_count_col(F.col("text")).cast("long").alias("nt"))
-        dd_quantiles(dd_sketch(toks, "nt"), qs=(0.5, 0.9, 0.99)).count()
-        mixture_sample(
-            docs.select("doc_id", "text", "source"),
-            {"src0": 0.4, "src1": 0.3, "src2": 0.2, "src3": 0.1},
-        ).count()
-
-    timed("round4_ops", _round4)
-
-    def _round4_geo():
-        from raptor_rag_spark.functions.sqlgen import quality_score_cols
-
-        gpts = embs.select(
-            x.alias("x"), y.alias("y"),
-            (F.pmod(F.col("vec_id"), F.lit(100)).cast("double") / 100.0).alias("v"),
-        )
-        gwr_local(gpts, res=4, bandwidth=0.08).count()
-        radiation_model(
-            events.join(
-                F.broadcast(embs.select("vec_id", x.alias("x0"), y.alias("y0"))),
-                events["user_id"] % 5000 == F.col("vec_id"),
-            ).select(
-                "user_id", "event_id", "ts",
-                F.col("x0").alias("x"), F.col("y0").alias("y"),
-            ),
-            res=3,
-        ).count()
-
-    timed("round4_geo", _round4_geo)
-
-    # round-4 batch 2: curation battery, segmentation, survival, drift,
-    # readability, sketch algebra — all corpus-pass operators
-    from raptor_rag_spark.operators.curation import c4_gopher_filters
-    from raptor_rag_spark.operators.sketches import hll_overlap
-    from raptor_rag_spark.operators.stats import kaplan_meier
-    from raptor_rag_spark.operators.textops import readability, text_tiling
-
-    def _round4b():
-        c4_gopher_filters(docs.select("doc_id", "text")).count()
-        text_tiling(docs.select("doc_id", "text")).count()
-        readability(docs.select("doc_id", "text")).count()
-        kaplan_meier(events).count()
-        a = docs.where("doc_id % 3 != 0").select("doc_id", "text")
-        b = docs.where("doc_id % 2 != 0").select("doc_id", "text")
-        hll_overlap(a, b, "text").count()
-
-    timed("round4_text_stats", _round4b)
-
-    # round-4 graph ops on the extracted host link graph
-    from raptor_rag_spark.operators.curation import extract_links
-    from raptor_rag_spark.operators.graph import betweenness, robustness_curve
-    from raptor_rag_spark.operators.webops import URL_RE as _URLRE
-    from raptor_rag_spark.operators.textops import benford_digits, stylometry_delta
-    from raptor_rag_spark.sources.pages import generate_pages
-
-    def _round4_graph():
-        pg = generate_pages(spark, 2000, partitions=cpus).cache()
-        pg.count()
-        lk = extract_links(pg)
-        betweenness(lk).count()
-        robustness_curve(lk).count()
-        stylometry_delta(pg, _URLRE).count()
-        benford_digits(pg, _URLRE).count()
-        pg.unpersist()
-
-    timed("round4_graph", _round4_graph)
-
-    # ---- two-size marginal scaling of the heaviest legs (r3 verdict #3) ----
-    # The suite's sf0.1 walls are fixed-cost dominated; the scale claim needs
-    # Δwall/Δdocs. Re-run the five most expensive legs on a MULTx replica of
-    # the same input (ids shifted per copy; embeddings deterministically
-    # jittered per copy so cell occupancy and bucket population grow with the
-    # corpus instead of stacking duplicates) and report, per leg:
-    #   per_doc_ratio  = (wall_big / MULT) / wall_small   (≤ ~1 ⇒ linear)
-    #   marginal_ratio = (wall_big - wall_small) / ((MULT-1) * wall_small)
-    # Gate: per_doc_ratio ≤ 1.3 ⇒ the leg's per-doc cost does not grow at 10x.
-    marginal = None
-    if os.environ.get("SPARK_GRAFT_MARGINAL", "1") != "0":
-        mult = max(int(os.environ.get("SPARK_GRAFT_MARGINAL_MULT", "10")), 2)
-        rep = spark.range(mult).select(F.col("id").alias("rep"))
-        docs_big = (
-            docs.select("doc_id", "text", "n_chars")
-            .crossJoin(F.broadcast(rep))
-            .withColumn("doc_id", F.col("doc_id") + F.col("rep") * F.lit(n_docs))
-            .drop("rep")
-            .repartition(cpus)
-            .cache()
-        )
-        n_docs_big = docs_big.count()
-        jit = F.transform(
-            F.col("embedding"),
-            lambda v, i: v + F.sin((i + F.lit(1)) * (F.col("rep") + F.lit(1))) * F.lit(0.03),
-        )
-        n_embs = embs.count()
-        embs_big = (
-            embs.crossJoin(F.broadcast(rep))
-            .withColumn("vec_id", F.col("vec_id") + F.col("rep") * F.lit(n_embs))
-            .withColumn("embedding", jit)
-            .drop("rep")
-            .repartition(cpus)
-            .cache()
-        )
-        embs_big.count()
-        xb, yb = G.xy_cols(F.col("embedding"), DIM)
-        pts_big = embs_big.select(
-            F.col("vec_id").alias("node_id"), xb.alias("x"), yb.alias("y")
-        ).cache()
-        pts_big.count()
-        n_events = events.count()
-        events_big = (
-            events.crossJoin(F.broadcast(rep))
-            .withColumn("event_id", F.col("event_id") + F.col("rep") * F.lit(n_events))
-            .drop("rep")
-            .repartition(cpus)
-            .cache()
-        )
-        events_big.count()
-
-        def _search_stack_on(d):
-            d2 = d.select("doc_id", "text")
-            postings = bm25_index(d2).localCheckpoint(eager=True)
-            a = bm25_rank(None, bq, top_k=10, max_df_ratio=(9, 10), postings=postings)
-            b = ql_rank(None, bq, top_k=10, postings=postings)
-            rrf_fuse(a, b, top_k=10).count()
-            rm3_rank(d2, bq, top_k=10, max_df_ratio=(9, 10), postings=postings).count()
-            cand = a.select("query_id", "doc_id", F.col("score").alias("rel"))
-            mmr_select(cand, d2, k=5, lam=0.7).count()
-            snippet_extract(d2, bq, window=20, cand=a).count()
-
-        from raptor_rag_spark.operators.pointpattern import box_dimension, join_counts, quadrat_test
-        from raptor_rag_spark.operators.projection import mercator_project
-        from raptor_rag_spark.operators.ranking import sdm_rank as _sdm
-        from raptor_rag_spark.operators.scanstat import spacetime_scan, spatial_scan
-        from raptor_rag_spark.operators.similarity import srp_pairs as _srp
-
-        def _scanstats_on(p):
-            p3 = p.select(
-                "x", "y", (F.pmod(F.col("node_id"), F.lit(11)) == 0).alias("is_case")
-            )
-            spatial_scan(p3, res=4, rmax=2, top_k=15).count()
-            join_counts(p3.withColumnRenamed("is_case", "mark"), res=4).count()
-            quadrat_test(p3.select("x", "y"), res=3).count()
-
-        def _scan2_on(ev, em, p):
-            exb, eyb = G.xy_cols(F.col("embedding"), DIM)
-            jx = ((F.col("event_id") % 199) - 99) / 1000.0
-            jy = ((F.col("event_id") % 211) - 105) / 1000.0
-            ev5 = ev.join(
-                F.broadcast(em.select("vec_id", exb.alias("x0"), eyb.alias("y0"))),
-                ev["user_id"] % 5000 == F.col("vec_id"),
-            ).select(
-                "ts",
-                F.greatest(F.least(F.col("x0") + jx, F.lit(1.0)), F.lit(0.0)).alias("x"),
-                F.greatest(F.least(F.col("y0") + jy, F.lit(1.0)), F.lit(0.0)).alias("y"),
-                (F.col("event_type") == "error").alias("is_case"),
-            )
-            spacetime_scan(ev5, res=4, rmax=2, wmax=7, top_k=15).count()
-            box_dimension(p.select("x", "y"), res_lo=2, res_hi=8).count()
-            lon = (F.col("x") - 0.5) * F.lit(2.0 * 3.141592653589793)
-            lat = (F.col("y") - 0.5) * F.lit(3.141592653589793)
-            mercator_project(
-                p.select(F.col("node_id").alias("vec_id"), lon.alias("lon"), lat.alias("lat")),
-                zoom=6,
-            ).count()
-
-        def _geostats_on(d, ev, em):
-            exb, eyb = G.xy_cols(F.col("embedding"), DIM)
-            sd_ellipse(em.select(exb.alias("x"), eyb.alias("y")), res=2).count()
-            jx = ((F.col("event_id") % 199) - 99) / 1000.0
-            jy = ((F.col("event_id") % 211) - 105) / 1000.0
-            ev3 = ev.join(
-                F.broadcast(em.select("vec_id", exb.alias("x0"), eyb.alias("y0"))),
-                ev["user_id"] % 5000 == F.col("vec_id"),
-            ).select(
-                "user_id", "event_id", "ts",
-                F.greatest(F.least(F.col("x0") + jx, F.lit(1.0)), F.lit(0.0)).alias("x"),
-                F.greatest(F.least(F.col("y0") + jy, F.lit(1.0)), F.lit(0.0)).alias("y"),
-            )
-            knox_test(ev3, s_eps=0.02, t_eps=3600, res=5).count()
-            gravity_model(ev3, res=3).count()
-            headtail_breaks(d, "n_chars", levels=4).count()
-
-        LEGS = {
-            "search_stack": (
-                lambda: _search_stack_on(docs),
-                lambda: _search_stack_on(docs_big),
-            ),
-            "sdm_rank": (
-                lambda: _sdm(docs.select("doc_id", "text"), bq).count(),
-                lambda: _sdm(docs_big.select("doc_id", "text"), bq).count(),
-            ),
-            "scan_pointpattern": (
-                lambda: _scanstats_on(pts),
-                lambda: _scanstats_on(pts_big),
-            ),
-            "scan_spacetime_fractal": (
-                lambda: _scan2_on(events, embs, pts),
-                lambda: _scan2_on(events_big, embs_big, pts_big),
-            ),
-            "geostats": (
-                lambda: _geostats_on(docs, events, embs),
-                lambda: _geostats_on(docs_big, events_big, embs_big),
-            ),
-            "srp_pairs": (
-                lambda: _srp(embs, min_sim=0.4).count(),
-                lambda: _srp(embs_big, min_sim=0.4).count(),
-            ),
-        }
-        marginal = {"mult": mult, "n_docs_small": n_docs, "n_docs_big": n_docs_big, "legs": {}}
-        for name, (small_fn, big_fn) in LEGS.items():
-            spark.sparkContext.setJobGroup(f"marginal:{name}", f"marginal:{name}")
-            t0 = time.time()
-            small_fn()  # fresh same-size run so both sizes share warm state
-            w1 = time.time() - t0
-            t0 = time.time()
-            big_fn()
-            wm = time.time() - t0
-            marginal["legs"][name] = {
-                "wall_small_s": round(w1, 3),
-                "wall_big_s": round(wm, 3),
-                "per_doc_ratio": round((wm / mult) / w1, 3) if w1 else None,
-                "marginal_ratio": round((wm - w1) / ((mult - 1) * w1), 3) if w1 else None,
-            }
-
-        # ---- 100x DENSITY variant for the pair-count statistic (r4 #7) ----
-        # knox pair counts grow with local density SQUARED (the statistic's
-        # definition); the max_cell hot-cell cap (geostats.knox_test) bounds
-        # the join at pathological density. Measure the CAPPED test at 1x and
-        # 100x density in the SAME spatial extent: per-event cost must stay
-        # ~flat (cap binds, join stays bounded by cap^2 per cell).
-        from raptor_rag_spark.operators.geostats import knox_test as _knox
-
-        dmult = 100
-        base_n = 2000
-        ev0 = events.limit(base_n)
-        jxd = ((F.col("event_id") % 199) - 99) / 1000.0
-        jyd = ((F.col("event_id") % 211) - 105) / 1000.0
-        exd, eyd = G.xy_cols(F.col("embedding"), DIM)
-        locs0 = F.broadcast(embs.select("vec_id", exd.alias("x0"), eyd.alias("y0")))
-
-        def _ev_at(ev_src):
-            return ev_src.join(
-                locs0, ev_src["user_id"] % 5000 == F.col("vec_id")
-            ).select(
-                "event_id", "ts",
-                F.greatest(F.least(F.col("x0") + jxd, F.lit(1.0)), F.lit(0.0)).alias("x"),
-                F.greatest(F.least(F.col("y0") + jyd, F.lit(1.0)), F.lit(0.0)).alias("y"),
-            ).localCheckpoint(eager=True)
-
-        repd = spark.range(dmult).select(F.col("id").alias("rep"))
-        evd = (
-            ev0.crossJoin(F.broadcast(repd))
-            .withColumn("event_id", F.col("event_id") + F.col("rep") * F.lit(base_n))
-            .drop("rep")
-            .repartition(cpus)
-        )
-        e_small, e_dense = _ev_at(ev0), _ev_at(evd)
-        spark.sparkContext.setJobGroup("marginal:knox_density", "marginal:knox_density")
-        t0 = time.time()
-        _knox(e_small, s_eps=0.02, t_eps=3600, res=5, max_cell=64).count()
-        wk1 = time.time() - t0
-        t0 = time.time()
-        _knox(e_dense, s_eps=0.02, t_eps=3600, res=5, max_cell=64).count()
-        wkd = time.time() - t0
-        marginal["legs"]["knox_density100_capped"] = {
-            "wall_small_s": round(wk1, 3),
-            "wall_big_s": round(wkd, 3),
-            "density_mult": dmult,
-            "per_doc_ratio": round((wkd / dmult) / wk1, 3) if wk1 else None,
-        }
-
-    total = round(sum(timings.values()), 3)
     build_s = timings["tree_build"]
     print(
         json.dumps(
             {
-                "metric": "tile-engine headline suite (build+retrieval+spatial+dedup+similarity+text)",
-                "value": total,
+                "metric": "registry timer: tree build/update, interactive retrieve and "
+                "oracle-checked registry legs (min of 3 runs each)",
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
-                "queries_cold": cold if runs > 1 else None,
-                "bench_runs": runs,
+                "checks": checks,
                 "sf": sf,
                 "cpus": cpus,
                 "n_docs": n_docs,
-                "n_tree_nodes": state["n_nodes"],
-                "dup_heavy_pairs": state.get("dup_heavy_pairs"),
-                "lake_files": state.get("lake_files"),
-                "marginal_scaling": marginal,
-                "retrieve_latency": state.get("retrieve_latency"),
+                "n_tree_nodes": tree.count(),
                 "pages_per_sec": round(n_docs / build_s, 2) if build_s else None,
+                "retrieve_latency": latency,
+                "marginal_scaling": marginal,
             }
         )
     )
+    return int(any(s.startswith("FAIL") for s in checks.values()))
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

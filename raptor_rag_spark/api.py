@@ -282,15 +282,11 @@ class RetrievalAugmentation:
         self, vector, model, top_k, max_tokens, collapse_tree, start_layer, num_layers
     ) -> tuple[str, list[dict]] | None:
         """(context, layer information) from the resident tree, or None when
-        the tree stays on Spark. A NaN distance (a zero vector) is also left
-        to the Spark plan, which alone decides that case: DIVIDE_BY_ZERO
-        under ANSI, a NULL distance ranked first without it."""
+        the tree stays on Spark."""
         resident = self._resident_tree(model)
         if resident is None:
             return None
         dist = resident.distances(vector)
-        if np.isnan(dist).any():
-            return None
         if collapse_tree:
             rows = resident.collapsed(dist, top_k, max_tokens)
         else:

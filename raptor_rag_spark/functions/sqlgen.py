@@ -191,6 +191,7 @@ def cosine_sim_sql(a: str, b: str, dim: int) -> str:
 # oracle. greatest() is a selection (no rounding), so n-ary is safe.
 
 DIST_METRICS = ("cosine", "L1", "L2", "Linf")
+MIN_DEN = "4.9E-324"  # the smallest positive double: the cosine zero-norm floor
 
 
 def _unsupported(metric: str) -> ValueError:
@@ -208,14 +209,23 @@ def dist_expr_cols(a: str, b: str, dim: int, metric: str = "cosine") -> Column:
     :func:`dist_sql` (left-assoc folds starting at 0.0, CAST AS DOUBLE per
     element, same metric dispatch), so results are bit-identical. ``a``/``b``
     are Spark SQL expression strings (a column name, or
-    ``embeddings['model']``)."""
+    ``embeddings['model']``).
+
+    Zero-norm rule, shared by all three twins: the cosine denominator is
+    floored at the smallest positive double (``MIN_DEN``). A nonzero
+    denominator is left as it is, so nonzero vectors keep the plain
+    division; a zero one (where the dot product is 0 too) gives a cosine of
+    0 and a distance of 1.0, as ``kernels.distances.pairwise_cosine_similarity``
+    treats a zero vector, with no DIVIDE_BY_ZERO under ANSI. A NULL vector
+    still gives a NULL distance (``greatest`` skips the NULL denominator,
+    the NULL dot product carries through)."""
     el = lambda v, i: f"CAST(element_at({v}, {i + 1}) AS DOUBLE)"  # noqa: E731
     if metric == "cosine":
         dot = " + ".join(f"{el(a, i)} * {el(b, i)}" for i in range(dim))
         na = " + ".join(f"{el(a, i)} * {el(a, i)}" for i in range(dim))
         nb = " + ".join(f"{el(b, i)} * {el(b, i)}" for i in range(dim))
         return F.expr(
-            f"1.0D - ((0.0D + {dot}) / (sqrt(0.0D + {na}) * sqrt(0.0D + {nb})))"
+            f"1.0D - ((0.0D + {dot}) / greatest(sqrt(0.0D + {na}) * sqrt(0.0D + {nb}), {MIN_DEN}D))"
         )
     if metric == "L1":
         terms = " + ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
@@ -234,7 +244,8 @@ def dist_expr_cols(a: str, b: str, dim: int, metric: str = "cosine") -> Column:
 def dist_sql(a: str, b: str, dim: int, metric: str = "cosine") -> str:
     el = lambda v, i: f"CAST({v}[{i + 1}] AS DOUBLE)"  # noqa: E731
     if metric == "cosine":
-        return f"(1.0 - {cosine_sim_sql(a, b, dim)})"
+        den = f"greatest({norm_sql(a, dim)} * {norm_sql(b, dim)}, {MIN_DEN})"
+        return f"(1.0 - ({dot_sql(a, b, dim)} / {den}))"
     if metric == "L1":
         terms = " + ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
         return f"(0.0 + {terms})"

@@ -27,9 +27,8 @@ def distance_matrix(
     ``sqlgen.dist_expr_cols`` (``acc = 0.0; acc = acc + term(d)`` for d in
     order, then the same closing ops), so the IEEE op sequence and the
     result are the JVM's bit for bit. No BLAS: a matrix product sums in its
-    own order. A zero vector gives a NaN cosine distance (0/0), as scipy
-    does; Spark raises DIVIDE_BY_ZERO there under ANSI and gives NULL
-    without it.
+    own order. When either norm is 0 the cosine distance is 1.0, the
+    zero-norm rule of ``dist_expr_cols`` and ``pairwise_cosine_similarity``.
     """
     q = np.asarray(query, dtype=np.float64)
     e = np.asarray(embeddings, dtype=np.float64)
@@ -49,8 +48,9 @@ def distance_matrix(
             acc = acc + q[d] * e[:, d]
             nq = nq + q[d] * q[d]
             ne = ne + e[:, d] * e[:, d]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            return 1.0 - (acc / (np.sqrt(nq) * np.sqrt(ne)))
+        # dist_expr_cols' zero-norm floor, the smallest positive double: a
+        # zero denominator gives 1.0, a nonzero one is kept as it is
+        return 1.0 - (acc / np.maximum(np.sqrt(nq) * np.sqrt(ne), 5e-324))
     for d in range(width):
         diff = q[d] - e[:, d]
         acc = acc + (np.abs(diff) if metric == "L1" else diff * diff)

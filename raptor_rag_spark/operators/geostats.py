@@ -231,6 +231,10 @@ def knox_test(
     stays internally consistent over the surviving subset), and the DuckDB
     twin applies the identical rule, so the capped statistic is still
     hash-exact (`knox_capped` in the contract registry proves it).
+
+    With no pairs (n < 2, or every point capped away) or a zero expectation,
+    ``x_exp``/``knox_ratio`` are NULL, as DuckDB's double division by 0 gives
+    in the twin, rather than DIVIDE_BY_ZERO.
     """
     assert 1.0 / (1 << res) >= s_eps, "cell width must cover s_eps"
     t = F.unix_timestamp("ts")
@@ -281,7 +285,7 @@ def knox_test(
     )
     s_row = sp.agg(
         F.count(F.lit(1)).cast("long").alias("ns"),
-        F.sum(F.when(F.col("dt") <= t_eps, 1).otherwise(0)).cast("long").alias("x_obs"),
+        F.count_if(F.col("dt") <= t_eps).alias("x_obs"),
     )
 
     probe_t = pts.select(
@@ -302,17 +306,16 @@ def knox_test(
 
     comb = n_row.crossJoin(F.broadcast(s_row)).crossJoin(F.broadcast(t_row))
     n_pairs = (F.col("n") * (F.col("n") - 1) / F.lit(2.0)).cast("long")
-    x_exp = (
-        F.col("ns").cast("double")
-        * F.col("nt").cast("double")
-        / F.col("n_pairs").cast("double")
+    x_exp = F.try_divide(
+        F.col("ns").cast("double") * F.col("nt").cast("double"),
+        F.col("n_pairs").cast("double"),
     )
     return (
         comb.withColumn("n_pairs", n_pairs)
         .withColumn("x_exp", F.round(x_exp, 6))
         .withColumn(
             "knox_ratio",
-            F.round(F.col("x_obs").cast("double") / x_exp, 6),
+            F.round(F.try_divide(F.col("x_obs").cast("double"), x_exp), 6),
         )
         .select("n", "n_pairs", "ns", "nt", "x_obs", "x_exp", "knox_ratio")
     )

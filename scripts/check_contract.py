@@ -19,11 +19,7 @@ import time
 import duckdb
 import pandas as pd
 
-# check the checkout this script lives in, whatever the working directory:
-# on the driver's path, and on the Python workers' (they inherit PYTHONPATH)
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -44,18 +40,62 @@ def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(rows), cols, h
 
 
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per sf table, as the oracles read
+    them. A table may be one parquet file or a directory of part files."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
+def check_query(name, run, con, sql: str | None) -> tuple[str, str, pd.DataFrame | None]:
+    """(status, message, Spark output) of one query: ``run()`` gives its
+    Spark output as a pandas frame, compared with the DuckDB oracle ``sql``
+    through :func:`canon`. status is "ok", "FAIL", or "weak" when ``sql``
+    is None (no oracle to compare with)."""
+    t0 = time.time()
+    try:
+        sdf = run()
+    except Exception as exc:  # noqa: BLE001
+        return "FAIL", f"{name}: spark error: {exc}", None
+    if sql is None:
+        return "weak", f"{name}: rows={len(sdf)} cols={sorted(sdf.columns)} ({time.time()-t0:.1f}s)", sdf
+    try:
+        odf = con.execute(sql).fetchdf()
+    except Exception as exc:  # noqa: BLE001
+        return "FAIL", f"{name}: duckdb error: {exc}", sdf
+    sn, sc, sh = canon(sdf)
+    on, oc, oh = canon(odf)
+    ok = (sn, sc, sh) == (on, oc, oh)
+    msg = f"{name}: spark({sn},{sh}) duck({on},{oh}) cols={'=' if sc == oc else (sc, oc)} ({time.time()-t0:.1f}s)"
+    if not ok and sn == on and sc == oc:
+        # value mismatch — show first differing rows
+        sm = sdf[sorted(sdf.columns)].sort_values(sorted(sdf.columns)).reset_index(drop=True)
+        om = odf[sorted(odf.columns)].sort_values(sorted(odf.columns)).reset_index(drop=True)
+        for i in range(min(len(sm), len(om))):
+            if not sm.iloc[i].equals(om.iloc[i]):
+                msg += f"\n      first diff row {i}:\n      spark: {sm.iloc[i].to_dict()}\n      duck : {om.iloc[i].to_dict()}"
+                break
+    return ("ok" if ok else "FAIL"), msg, sdf
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    # check the checkout this script lives in, whatever the working directory:
+    # on this process's path, and on the Python workers' (they inherit PYTHONPATH)
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
     import __spark_entry__ as E
     from raptor_rag_spark.session import get_spark
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     spark = get_spark("contract-check", cores=cores)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_views(sf_dir)
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -63,37 +103,9 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {exc}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"weak  {name}: rows={len(sdf)} cols={sorted(sdf.columns)} ({time.time()-t0:.1f}s)")
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            n_fail += 1
-            continue
-        sn, sc, sh = canon(sdf)
-        on, oc, oh = canon(odf)
-        ok = (sn, sc, sh) == (on, oc, oh)
-        status = "ok  " if ok else "FAIL"
-        if not ok:
-            n_fail += 1
-        print(f"{status}  {name}: spark({sn},{sh}) duck({on},{oh}) cols={'=' if sc == oc else (sc, oc)} ({time.time()-t0:.1f}s)")
-        if not ok and sn == on and sc == oc:
-            # value mismatch — show first differing rows
-            sm = sdf[sorted(sdf.columns)].sort_values(sorted(sdf.columns)).reset_index(drop=True)
-            om = odf[sorted(odf.columns)].sort_values(sorted(odf.columns)).reset_index(drop=True)
-            for i in range(min(len(sm), len(om))):
-                if not sm.iloc[i].equals(om.iloc[i]):
-                    print(f"      first diff row {i}:\n      spark: {sm.iloc[i].to_dict()}\n      duck : {om.iloc[i].to_dict()}")
-                    break
+        status, msg, _ = check_query(name, lambda: fn(spark, sf_dir).toPandas(), con, oracles.get(name))
+        n_fail += status == "FAIL"
+        print(f"{status:<4}  {msg}")
     print(f"\n{'ALL OK' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
 

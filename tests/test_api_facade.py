@@ -93,6 +93,21 @@ def test_resident_threshold_traversal_matches_spark_plan(ra, spark):
     assert resident == planned and resident[1]
 
 
+@pytest.mark.parametrize("collapse_tree", [True, False])
+def test_zero_vector_question_matches_spark_plan(ra, spark, collapse_tree):
+    """A question that embeds to the zero vector is 1.0 from every node
+    (the zero-norm rule), so both paths return the same context and layer
+    list instead of raising DIVIDE_BY_ZERO."""
+    from raptor_rag_spark.kernels.embedder import HashNgramEmbeddingModel
+
+    for q in ("", "!!"):
+        assert not any(HashNgramEmbeddingModel().create_embedding(q))
+        resident, planned = both_paths(
+            spark, lambda: ra.retrieve(q, collapse_tree=collapse_tree)
+        )
+        assert resident == planned and resident[1], (q, collapse_tree)
+
+
 @pytest.mark.parametrize("max_tokens", [0, 1])
 def test_empty_selection_returns_empty_context(ra, spark, max_tokens):
     """Nothing fits the budget: ("", []), or "" without layer information,

@@ -80,6 +80,18 @@ def test_knox_matches_bruteforce(spark):
     assert out["x_obs"] == x_obs
     assert out["x_exp"] == pytest.approx(ns * nt / (n * (n - 1) / 2), abs=1e-5)
 
+    # a cap that every cell exceeds leaves no pairs: NULL, as the DuckDB twin
+    import duckdb
+
+    from raptor_rag_spark.operators.geostats import knox_test_sql
+
+    capped = tuple(knox_test(df, s_eps=s_eps, t_eps=t_eps, res=5, max_cell=0).collect()[0])
+    con = duckdb.connect()
+    con.register("events_xy", df.toPandas())
+    sql = knox_test_sql("SELECT * FROM events_xy", s_eps, t_eps, 5, max_cell=0)
+    twin = con.execute(sql).fetchone()
+    assert capped == twin == (0, 0, 0, 0, 0, None, None)
+
 
 def test_gravity_model_conserves_total_flow(spark):
     import datetime

@@ -136,32 +136,42 @@ def test_collapsed_knn_matches_kernel(spark, leaves):
 
 @pytest.mark.parametrize("metric", ["cosine", "L1", "L2", "Linf"])
 def test_distance_matrix_is_dist_expr_cols_bit_for_bit(spark, metric):
-    """The numpy kernel is the Spark expression's fold, so the two agree
-    bit for bit: 128-wide vectors (both read the first 64 entries), a
-    duplicate vector (a tie) and a zero vector, read through a multi-model
-    map key. The zero vector's cosine is NaN in numpy; Spark gives NULL
-    with ANSI off and raises DIVIDE_BY_ZERO with it on."""
+    """The numpy kernel is the Spark expression's fold and the DuckDB
+    twin's, so the three agree bit for bit: 128-wide vectors (all read the
+    first 64 entries), a duplicate vector (a tie) and a zero vector, read
+    through a multi-model map key on Spark. The zero vector's cosine
+    distance is 1.0 on all three, with ANSI on. A NULL vector stays a NULL
+    distance on Spark and DuckDB (NaN in, NaN out in numpy)."""
+    import duckdb
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     rng = np.random.default_rng(11)
     q = rng.standard_normal(128).astype(np.float32)
     nodes = rng.standard_normal((6, 128)).astype(np.float32)
     nodes[1] = nodes[0]
     nodes[2] = 0.0
     rows = [(i, q.tolist(), {"alt": (-v).tolist(), "m": v.tolist()}) for i, v in enumerate(nodes)]
+    rows.append((len(nodes), q.tolist(), {"alt": q.tolist(), "m": None}))
     df = spark.createDataFrame(
         rows, "node_id long, q_embedding array<float>, embeddings map<string, array<float>>"
     )
     dist = G.dist_expr_cols("q_embedding", "embeddings['m']", 64, metric).alias("d")
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        got = [r["d"] for r in df.select("node_id", dist).orderBy("node_id").collect()]
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+    *got, got_null = [r["d"] for r in df.select("node_id", dist).orderBy("node_id").collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (node_id BIGINT, q FLOAT[], e FLOAT[])")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?, ?)",
+        [(i, q.tolist(), v.tolist()) for i, v in enumerate(nodes)] + [(len(nodes), q.tolist(), None)],
+    )
+    sql = f"SELECT {G.dist_sql('q', 'e', 64, metric)} FROM t ORDER BY node_id"
+    *duck, duck_null = [d for (d,) in con.execute(sql).fetchall()]
     mine = distance_matrix(q, nodes, metric, 64)
-    spark_d = np.array([np.nan if d is None else d for d in got])
-    assert np.array_equal(mine, spark_d, equal_nan=True)
+    assert np.array_equal(mine, got) and np.array_equal(mine, duck)
+    assert got_null is None and duck_null is None
+    assert np.isnan(distance_matrix(q, np.full(128, np.nan), metric, 64)).all()
     assert mine[0] == mine[1]
-    assert (got[2] is None) == np.isnan(mine[2]) == (metric == "cosine")
+    if metric == "cosine":
+        assert mine[2] == 1.0
 
 
 def test_knn_token_budget(spark, leaves):
