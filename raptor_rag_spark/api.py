@@ -5,12 +5,12 @@ add_documents / retrieve / answer_question / save lifecycle and the same
 guard behaviors (overwrite warning on re-add :171-173, ValueError when
 retrieving with no tree :187-189, type check on load :148-151), but the tree
 is a level-partitioned DataFrame built by the distributed plan, retrieval is
-a batch broadcast kNN join, and persistence is the manifest checkpoint (an
+one batch kNN operator, and persistence is the manifest checkpoint (an
 atomic, resumable commit per level) instead of a pickle blob (:234-239).
 
 Single questions on a small tree run on the driver: the first one collects
 the tree once (``kernels/resident.py``) and every later one is answered by
-one numpy fold, with no Spark job, byte-identical to the Spark plan.
+the same numpy kernel, with no Spark job, byte-identical to the Spark plan.
 "Small" is Spark's own broadcast bound: the tree's optimized-plan
 ``sizeInBytes`` at most ``spark.sql.autoBroadcastJoinThreshold`` (``-1``
 turns the driver path off). Batches, ``collapse_tree="cell"``, a configured
@@ -27,6 +27,7 @@ import logging
 import time
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -303,10 +304,8 @@ class RetrievalAugmentation:
     ):
         """The Spark plan of ``retrieve``: the context DataFrame for a
         batch, (context, layer information) for a single question."""
-        queries = self.spark.createDataFrame(
-            [(i, [float(v) for v in vec]) for i, vec in enumerate(vectors)],
-            "query_id long, q_embedding array<float>",
-        )
+        # a local frame: the kNN operators read it with no Spark job
+        queries = pd.DataFrame({"query_id": np.arange(len(vectors)), "q_embedding": list(vectors)})
         results = self._results(
             queries,
             top_k=top_k,
@@ -354,7 +353,7 @@ class RetrievalAugmentation:
 
     def _results(
         self,
-        queries: DataFrame,
+        queries: DataFrame | pd.DataFrame,
         top_k: int,
         max_tokens: int,
         collapse_tree: bool | str,
@@ -411,9 +410,10 @@ class RetrievalAugmentation:
         reference's one-question-at-a-time loop,
         raptor/retrieval_augmentation.py:180-201). Returns one row per
         question: (query_id, context, layer_information); the single kNN
-        broadcast join amortizes over every question, so retrieving 10^4
-        questions costs the same number of Spark actions as retrieving one.
-        No driver-side collects — callers compose further or write a sink."""
+        plan amortizes over every question, so retrieving 10^4 questions
+        costs the same number of Spark actions as retrieving one. The kNN
+        operator collects the query matrix once, as a broadcast build side
+        would; the contexts stay a DataFrame for callers to compose."""
         if self.tree is None:
             raise ValueError(
                 "There are no trees to retrieve, please add documents first."

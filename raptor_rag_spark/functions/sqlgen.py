@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..kernels.distances import check_metric
 from ..kernels.grid import COORD_BITS, RES_SHIFT
 from ..kernels.reduce import projection_weights
 from ..kernels.textstats import LANG_PROFILES, SHINGLE_N
@@ -146,27 +147,11 @@ def cell_parent_sql(cell_expr: str, steps: int = 1) -> str:
 
 # ---------------------------------------------------------------- cosine (pairwise, exact-order)
 
-def dot_cols(a: Column, b: Column, dim: int) -> Column:
-    """Left-assoc dot product of two ARRAY<FLOAT> columns."""
-    z = F.lit(0.0)
-    for i in range(dim):
-        z = z + F.element_at(a, i + 1).cast("double") * F.element_at(b, i + 1).cast("double")
-    return z
-
-
 def dot_sql(a: str, b: str, dim: int) -> str:
     terms = " + ".join(
         f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)" for i in range(dim)
     )
     return f"(0.0 + {terms})"
-
-
-def norm_cols(a: Column, dim: int) -> Column:
-    z = F.lit(0.0)
-    for i in range(dim):
-        e = F.element_at(a, i + 1).cast("double")
-        z = z + e * e
-    return F.sqrt(z)
 
 
 def norm_sql(a: str, dim: int) -> str:
@@ -176,72 +161,28 @@ def norm_sql(a: str, dim: int) -> str:
     return f"sqrt(0.0 + {terms})"
 
 
-def cosine_sim_cols(a: Column, b: Column, dim: int) -> Column:
-    return dot_cols(a, b, dim) / (norm_cols(a, dim) * norm_cols(b, dim))
-
-
 def cosine_sim_sql(a: str, b: str, dim: int) -> str:
-    return f"({dot_sql(a, b, dim)} / ({norm_sql(a, dim)} * {norm_sql(b, dim)}))"
+    return f"({dot_sql(a, b, dim)} / greatest({norm_sql(a, dim)} * {norm_sql(b, dim)}, {MIN_DEN}))"
 
 
 # ---------------------------------------------------------------- distances
-# Twin dispatch of the reference's metric table (raptor/utils.py:84-102):
+# DuckDB twin of the reference's metric table (raptor/utils.py:84-102):
 # cosine / L1 (cityblock) / L2 (euclidean) / Linf (chebyshev), as exact-order
-# expressions so distributed retrieval can rank by any metric with a DuckDB
-# oracle. greatest() is a selection (no rounding), so n-ary is safe.
+# expressions, the oracle of the engine's numpy fold
+# (kernels.distances.row_distances). greatest() is a selection (no
+# rounding), so n-ary is safe.
 
-DIST_METRICS = ("cosine", "L1", "L2", "Linf")
 MIN_DEN = "4.9E-324"  # the smallest positive double: the cosine zero-norm floor
 
 
-def _unsupported(metric: str) -> ValueError:
-    return ValueError(
-        f"Unsupported distance metric '{metric}'. Supported metrics are: {list(DIST_METRICS)}"
-    )
-
-
-def dist_expr_cols(a: str, b: str, dim: int, metric: str = "cosine") -> Column:
-    """Metric-dispatched distance built as ONE Spark-SQL string parse
-    instead of ~dim·6 py4j Column calls: building the expression takes
-    milliseconds, not ~1.3 s per call (measured on the warm single-question
-    retrieve path; the same string-parse rationale as srp_pairs' band
-    keys). The parsed tree evaluates the IEEE op sequence of its DuckDB twin
-    :func:`dist_sql` (left-assoc folds starting at 0.0, CAST AS DOUBLE per
-    element, same metric dispatch), so results are bit-identical. ``a``/``b``
-    are Spark SQL expression strings (a column name, or
-    ``embeddings['model']``).
-
-    Zero-norm rule, shared by all three twins: the cosine denominator is
-    floored at the smallest positive double (``MIN_DEN``). A nonzero
-    denominator is left as it is, so nonzero vectors keep the plain
-    division; a zero one (where the dot product is 0 too) gives a cosine of
-    0 and a distance of 1.0, as ``kernels.distances.pairwise_cosine_similarity``
-    treats a zero vector, with no DIVIDE_BY_ZERO under ANSI. A NULL vector
-    still gives a NULL distance (``greatest`` skips the NULL denominator,
-    the NULL dot product carries through)."""
-    el = lambda v, i: f"CAST(element_at({v}, {i + 1}) AS DOUBLE)"  # noqa: E731
-    if metric == "cosine":
-        dot = " + ".join(f"{el(a, i)} * {el(b, i)}" for i in range(dim))
-        na = " + ".join(f"{el(a, i)} * {el(a, i)}" for i in range(dim))
-        nb = " + ".join(f"{el(b, i)} * {el(b, i)}" for i in range(dim))
-        return F.expr(
-            f"1.0D - ((0.0D + {dot}) / greatest(sqrt(0.0D + {na}) * sqrt(0.0D + {nb}), {MIN_DEN}D))"
-        )
-    if metric == "L1":
-        terms = " + ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
-        return F.expr(f"0.0D + {terms}")
-    if metric == "L2":
-        terms = " + ".join(
-            f"({el(a, i)} - {el(b, i)}) * ({el(a, i)} - {el(b, i)})" for i in range(dim)
-        )
-        return F.expr(f"sqrt(0.0D + {terms})")
-    if metric == "Linf":
-        terms = ", ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
-        return F.expr(f"greatest({terms})")
-    raise _unsupported(metric)
-
-
 def dist_sql(a: str, b: str, dim: int, metric: str = "cosine") -> str:
+    """Left-assoc folds starting at 0.0, CAST AS DOUBLE per element.
+
+    Zero-norm rule: the cosine denominator is floored at the smallest
+    positive double (``MIN_DEN``). A nonzero denominator is left as it is;
+    a zero one (where the dot product is 0 too) gives a cosine of 0 and a
+    distance of 1.0. A NULL vector gives a NULL distance."""
+    check_metric(metric)
     el = lambda v, i: f"CAST({v}[{i + 1}] AS DOUBLE)"  # noqa: E731
     if metric == "cosine":
         den = f"greatest({norm_sql(a, dim)} * {norm_sql(b, dim)}, {MIN_DEN})"
@@ -254,10 +195,8 @@ def dist_sql(a: str, b: str, dim: int, metric: str = "cosine") -> str:
             f"({el(a, i)} - {el(b, i)}) * ({el(a, i)} - {el(b, i)})" for i in range(dim)
         )
         return f"sqrt(0.0 + {terms})"
-    if metric == "Linf":
-        terms = ", ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
-        return f"greatest({terms})"
-    raise _unsupported(metric)
+    terms = ", ".join(f"abs({el(a, i)} - {el(b, i)})" for i in range(dim))
+    return f"greatest({terms})"  # Linf
 
 
 # ---------------------------------------------------------------- twin exp (x <= 0)

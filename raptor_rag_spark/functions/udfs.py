@@ -1,21 +1,23 @@
 """Vectorized Arrow UDFs wrapping the numpy kernels.
 
 Only the kernels that genuinely cannot be column expressions live here
-(chunking, hash-ngram embedding, batched PIP). Everything else — cells,
-hashes, distances on fixed-dim arrays, text stats — is generated as JVM-side
-expressions in sqlgen.py, keeping the hot path inside whole-stage codegen
-(input_hint mandate: vectorized pandas/Arrow UDFs, no per-row Python).
+(chunking, hash-ngram embedding, batched PIP, vector folds: a 64-term
+expression per pair overran codegen's method limit). Cells, hashes and text
+stats are JVM-side expressions in sqlgen.py (input_hint mandate: vectorized
+pandas/Arrow UDFs, no per-row Python).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, StringType
 
 from ..kernels.chunker import split_text
+from ..kernels.distances import COS_SIM, row_distances
 from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
 from ..kernels.tokenizer import RegexTokenizer
+from ..kernels.topk import matrix
 
 
 def make_chunk_udf(max_tokens: int = 100, overlap: int = 0):
@@ -50,3 +52,16 @@ def make_embed_udf(dim: int = DEFAULT_DIM, model=None):
         return pd.Series(list(mat))
 
     return embed_udf
+
+
+def make_cosine_udf(dim: int = DEFAULT_DIM):
+    """(ARRAY<FLOAT>, ARRAY<FLOAT>) -> DOUBLE cosine similarity of each
+    row's two vectors (first ``dim`` entries): the float64 fold of the
+    DuckDB twin ``sqlgen.cosine_sim_sql``, bit for bit, so a zero vector's
+    similarity is 0.0 on both engines."""
+
+    @F.pandas_udf(DoubleType())
+    def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+        return pd.Series(row_distances(matrix(a, dim), matrix(b, dim), COS_SIM))
+
+    return cosine_udf

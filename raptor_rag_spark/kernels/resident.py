@@ -4,11 +4,11 @@
 later single question here. Every step mirrors its Spark plan, so the
 context string and layer list are the same byte for byte:
 
-- distances: ``distances.distance_matrix``, the float64 fold of
-  ``sqlgen.dist_expr_cols``;
-- ranking: ``np.lexsort((node_id, dist))`` is the ``(dist, node_id)``
-  window order of ``knn._rank_and_budget``; ``top_k`` keeps a prefix and
-  ``max_tokens`` filters on the running token sum;
+- distances: ``distances.distance_matrix``, the float64 fold the Spark
+  operator ``knn.exact_topk`` runs in each partition;
+- ranking: ``topk.select``, the same selection as that operator's
+  partitions and merge window (``(dist, node_id)`` order, ``top_k``
+  prefix, running-token ``max_tokens`` cut, threshold mode);
 - traversal: ``traverse.traversal_retrieve``'s rounds, from the whole start
   layer down the ``children`` ids, output ordered by ``(round, rank)``;
 - context: ``knn.retrieval_context``'s newline cleaning, ``concat_ws``
@@ -23,6 +23,7 @@ import numpy as np
 
 from .distances import distance_matrix
 from .grid import RES_SHIFT
+from .topk import select
 
 _NEWLINES = re.compile(r"\r\n|\r|\n")
 
@@ -34,7 +35,8 @@ class ResidentTree:
 
     def __init__(self, table, dim: int):
         """``table``: a pyarrow Table with those columns plus ``vector``
-        (one list of at least ``dim`` floats per node, all of one width)."""
+        (one list of at least ``dim`` floats per node, all of one width, or
+        NULL: a NaN row, which ranks as the Spark plan ranks a NULL)."""
         col = lambda name: table.column(name).to_numpy()  # noqa: E731
         self.node_id = col("node_id")
         self.level = col("level")
@@ -43,11 +45,11 @@ class ResidentTree:
         self.text = table.column("text").to_pylist()
         self.children = table.column("children").to_pylist()
         vectors = table.column("vector").combine_chunks()
-        flat = vectors.flatten().to_numpy()
+        valid = vectors.is_valid().to_numpy(zero_copy_only=False)
         self.dim = dim
-        self.vectors = (
-            flat.reshape(len(vectors), -1)[:, :dim] if len(vectors) else flat.reshape(0, dim)
-        )
+        self.vectors = np.full((len(vectors), dim), np.nan)
+        if valid.any():
+            self.vectors[valid] = vectors.flatten().to_numpy().reshape(int(valid.sum()), -1)[:, :dim]
 
     def levels_res(self) -> dict[int, int]:
         """{level: resolution}, as ``RetrievalAugmentation._warm`` collects it."""
@@ -57,19 +59,9 @@ class ResidentTree:
     def distances(self, query: np.ndarray) -> np.ndarray:
         return distance_matrix(query, self.vectors, "cosine", self.dim)
 
-    def _ranked(self, rows: np.ndarray, dist: np.ndarray) -> np.ndarray:
-        return rows[np.lexsort((self.node_id[rows], dist[rows]))]
-
     def collapsed(self, dist: np.ndarray, top_k: int | None, max_tokens: int | None) -> np.ndarray:
         """Row indices of the collapsed-tree selection, in rank order."""
-        if top_k is None and max_tokens is None:
-            raise ValueError("one of top_k or max_tokens must be set")
-        picked = self._ranked(np.arange(len(dist)), dist)
-        if top_k is not None:
-            picked = picked[: max(top_k, 0)]  # rank <= top_k
-        if max_tokens is not None:
-            picked = picked[np.cumsum(self.token_count[picked]) <= max_tokens]
-        return picked
+        return select(dist, self.node_id, self.token_count, top_k, max_tokens)
 
     def traversal(
         self,
@@ -85,13 +77,10 @@ class ResidentTree:
             raise ValueError("num_layers must be less than or equal to start_layer + 1")
         candidates = np.flatnonzero(self.level == start_layer)
         rounds = []
+        # reference quirk preserved: threshold mode keeps distance > threshold
+        cut = dict(threshold=threshold) if selection_mode == "threshold" else dict(top_k=top_k)
         for _ in range(num_layers):
-            ranked = self._ranked(candidates, dist)
-            if selection_mode == "threshold":
-                # reference quirk preserved: keeps distance > threshold
-                best = ranked[dist[ranked] > threshold]
-            else:
-                best = ranked[:top_k]
+            best = candidates[select(dist[candidates], self.node_id[candidates], **cut)]
             rounds.append(best)
             kids = [c for i in best for c in self.children[i] or ()]
             candidates = np.flatnonzero(np.isin(self.node_id, kids))

@@ -11,7 +11,7 @@ All four text paths are JVM-side expressions built from the sqlgen twins
   bucket-join; the self-join is on tiny bucket keys, never all-pairs);
 - SimHash: per-bit majority over distinct token hashes → 16-bit fingerprint;
   near-dup pairs = equal simhash (band of the fingerprint);
-- embedding cosine: exact-order cosine expression over candidate pairs;
+- embedding cosine: the exact-order kernel fold over candidate pairs;
 - clusters: pairs → connected components (iterative min-label propagation)
   → (doc_id, canonical_id); ``apply_dedup`` = the keep/drop anti-join.
 
@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
+from ..functions.udfs import make_cosine_udf
 from ..kernels.embedder import DEFAULT_DIM
 from ..kernels.textstats import MINHASH_PERMS
 
@@ -327,22 +328,14 @@ def embedding_neardup_pairs(
     if res is None:
         res = adaptive_res(vecs.count())
     x, y = G.xy_cols(F.col("embedding"), dim)
-    # staged verify (round-4 codegen-fallback fix): norms once per vector
-    # (not per pair), xy/cell trees materialized before the self-join, and a
-    # narrow barrier between the pair projection and the threshold filter so
-    # predicate pushdown can't re-inline the 64-term dot product — fused,
-    # those trees exceeded the JVM's 64 KB/method codegen limit.
+    # xy/cell trees materialized before the self-join; the kernel fold's
+    # similarity sits behind a barrier so the filter does not run it again
     bucketed = vecs.select(
-        id_col,
-        "embedding",
-        G.cell_col(x, y, res).alias("bucket"),
-        G.norm_cols(F.col("embedding"), dim).alias("__n__"),
+        id_col, "embedding", G.cell_col(x, y, res).alias("bucket")
     ).localCheckpoint(eager=False)
     a = bucketed.alias("a")
     b = bucketed.alias("b")
-    sim = G.dot_cols(F.col("a.embedding"), F.col("b.embedding"), dim) / (
-        F.col("a.__n__") * F.col("b.__n__")
-    )
+    sim = make_cosine_udf(dim)(F.col("a.embedding"), F.col("b.embedding"))
     comps = (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(

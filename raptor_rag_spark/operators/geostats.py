@@ -331,7 +331,8 @@ def knox_test_sql(
 ) -> str:
     """DuckDB twin of :func:`knox_test` (incl. the ``max_cell`` density
     cap, applied with the identical rule so the capped statistic is
-    hash-exact)."""
+    hash-exact). ``pts`` is MATERIALIZED: DuckDB 1.0 otherwise inlines it
+    at each of its five references and re-runs the events join each time."""
     n = 1 << res
     key = (
         f"(({res}::BIGINT << {RES_SHIFT}) | ((ix + dx)::BIGINT << {COORD_BITS})"
@@ -358,7 +359,7 @@ pts_raw AS (
          CAST(floor(CAST(CAST(floor(epoch(ts)) AS BIGINT) AS DOUBLE)
                     / {flit(float(t_eps))}) AS BIGINT) AS tb
   FROM ev),{cap_ctes}
-pts AS (SELECT * FROM {pts_src}),
+pts AS MATERIALIZED (SELECT * FROM {pts_src}),
 pc AS (
   SELECT pid, x, y, t, cell, tb,
          ((cell >> {COORD_BITS}) & {_MASK}) AS ix, (cell & {_MASK}) AS iy

@@ -1,11 +1,11 @@
-"""kNN retrieval joins — collapsed-tree, cell-pruned, and flat (leaf-only).
+"""kNN retrieval — collapsed-tree, cell-pruned, and flat (leaf-only).
 
 J1/J8 + W1 of SURVEY.md §2: the reference's per-query in-memory scan
 (raptor/tree_retriever.py:127-151; FAISS flat search faiss_retriever.py:140-145)
-becomes a *batch* broadcast join: the small query side is broadcast against
-the nodes table, cosine distance is a JVM column expression (exact-order
-arithmetic from sqlgen — no UDF in the hot path), ranking is a window, and
-the token budget is a cumulative-sum frame (rowsBetween unboundedPreceding).
+becomes one *batch* operator, ``exact_topk``, the ranking of every
+embedding kNN path: each Arrow batch of rows is scored against the shipped
+query matrix by the numpy kernel ``kernels.topk`` and pre-limited, and one
+window over the survivors gives the exact ranks and token budget.
 
 Semantics preserved from the reference:
 - rank ties broken by node order (argsort stability → orderBy(dist, node_id));
@@ -20,53 +20,106 @@ Scale path: ``cell_pruned_knn`` prunes candidates to the query's cell
 neighborhood at each level via an equi-join on cell_id (broadcast of
 query×neighborhood pairs) — the "broadcast-spatial-index kNN over cell-pruned
 candidates" of the north star. Approximate by design (embedding-space kNN
-pruned by tile locality); brute-force is the exact oracle path.
+pruned by tile locality); ``collapsed_knn`` is the exact path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
+from ..kernels import topk
+from ..kernels.distances import COS_SIM
 from ..kernels.embedder import DEFAULT_DIM
 from ..kernels.grid import COORD_BITS, RES_SHIFT
+from ..kernels.reduce import project_xy
 
 RESULT_COLS = ("query_id", "node_id", "level", "rank", "dist", "text", "token_count")
 
 
-def _distance(dim: int, metric: str = "cosine", model: str | None = None) -> F.Column:
-    """Metric-dispatched distance (reference raptor/utils.py:84-102 twin).
-    ``model`` selects a named vector from the multi-model ``embeddings`` map
-    (reference context_embedding_model routing,
-    retrieval_augmentation.py:56-64); None uses the flat cluster embedding."""
-    # ONE SQL-string parse (sqlgen.dist_expr_cols), not per-element py4j
-    # Column calls — bit-identical tree, ~1.3 s → ms of driver time per
-    # retrieve (the dominant warm-latency cost, round-5 audit)
-    emb = f"embeddings['{model}']" if model else "embedding"
-    return G.dist_expr_cols("q_embedding", emb, dim, metric)
+def local_queries(queries: DataFrame | pd.DataFrame) -> pd.DataFrame:
+    """(query_id, q_embedding) on the driver: a Spark frame is collected
+    once (the rows a broadcast build side held), a pandas one used as is."""
+    if isinstance(queries, DataFrame):
+        return queries.select("query_id", "q_embedding").toPandas()
+    return queries
 
 
-def _rank_and_budget(scored: DataFrame, top_k: int | None, max_tokens: int | None) -> DataFrame:
-    """``top_k=None`` is the budget-only mode (reference ``use_top_k=False``,
-    faiss_retriever.py:146-154): ALL candidates rank by distance and
-    accumulate until ``max_tokens`` with no k-cap. Both cutoffs are windows
-    over the same (dist, node_id) ordering — no extra shuffle either way."""
-    if top_k is None and max_tokens is None:
-        raise ValueError("one of top_k or max_tokens must be set")
-    w = Window.partitionBy("query_id").orderBy("dist", "node_id")
-    out = scored.withColumn("rank", F.row_number().over(w))
+def exact_topk(
+    rows: DataFrame,
+    queries: DataFrame | pd.DataFrame,
+    model: str | None = None,
+    id_col: str = "node_id",
+    metric: str = "cosine",
+    dim: int = DEFAULT_DIM,
+    top_k: int | None = None,
+    max_tokens: int | None = None,
+    threshold: float | None = None,
+    rounded: bool = False,
+) -> DataFrame:
+    """(query_id, ``id_col``, rank, score[, token_count]) of each query's
+    selection under the cuts of ``kernels.topk``. The score is ``dist``, or
+    ``cos_sim`` (highest first) for that metric; ``rounded`` ranks it
+    rounded to 6 decimals. ``model`` names a vector of the multi-model
+    ``embeddings`` map (reference retrieval_augmentation.py:56-64); None
+    reads ``embedding``. Only the columns the ranking reads cross into
+    Python: ``id_col``, the vector, ``token_count`` with ``max_tokens``, and
+    ``query_id`` when ``rows`` are given (query, row) pairs."""
+    topk.require_cut(top_k, max_tokens, threshold)
+    q = local_queries(queries)
+    q_ids, q_mat = q["query_id"].to_numpy("int64"), topk.matrix(q["q_embedding"], dim)
+    score = COS_SIM if metric == COS_SIM else "dist"
+    paired = ["query_id"] if "query_id" in rows.columns else []
+    budget = ["token_count"] if max_tokens is not None else []
+    vector = F.expr(f"embeddings['{model}']") if model else F.col("embedding")
+    src = rows.select(*paired, id_col, *budget, F.slice(vector, 1, dim).alias("__v"))
+    types = {f.name: f.dataType.simpleString() for f in src.schema}
+    schema = ", ".join([f"query_id bigint, {id_col} {types[id_col]}, {score} double"]
+                       + [f"{c} {types[c]}" for c in budget])
+    cut = dict(top_k=top_k, max_tokens=max_tokens, threshold=threshold,
+               slack=topk.ROUND_SLACK if rounded else 0.0)
+
+    def ranked(batches):  # no type hints: mapInPandas can't read stringified ones
+        for part in batches:  # each Arrow batch keeps its pre-limit superset
+            ids, tokens = part[id_col].to_numpy(), part["token_count"].to_numpy() if budget else None
+            qid, at, value = topk.partition_topk(
+                q_ids, q_mat, ids, topk.matrix(part["__v"], dim), tokens,
+                part["query_id"].to_numpy() if paired else None, metric, **cut,
+            )
+            out = pd.DataFrame({"query_id": qid, id_col: ids[at], score: value})
+            if budget:
+                out["token_count"] = tokens[at]
+            yield out
+
+    out = src.mapInPandas(ranked, schema)
+    if rounded:
+        out = out.withColumn(score, F.round(score, 6))
+    w = Window.partitionBy("query_id").orderBy(F.desc(score) if metric == COS_SIM else score, id_col)
+    out = out.withColumn("rank", F.row_number().over(w))
     if top_k is not None:
         out = out.filter(F.col("rank") <= top_k)
     if max_tokens is not None:
         cum = F.sum("token_count").over(w.rowsBetween(Window.unboundedPreceding, 0))
         out = out.withColumn("cum_tokens", cum).filter(F.col("cum_tokens") <= max_tokens)
-    return out.select(*RESULT_COLS)
+    return out.select("query_id", id_col, "rank", score, *budget)
+
+
+def with_nodes(
+    ranked: DataFrame, nodes: DataFrame, cols: tuple[str, ...] = RESULT_COLS, broadcast: bool = True
+) -> DataFrame:
+    """``ranked`` with the node columns of ``cols`` it lacks, joined back by
+    node_id; the selection is the small side."""
+    extra = [c for c in cols if c not in ranked.columns]
+    side = F.broadcast(ranked) if broadcast else ranked
+    return nodes.select("node_id", *extra).join(side, "node_id").select(*cols)
 
 
 def collapsed_knn(
     nodes: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame,
     top_k: int | None = 10,
     max_tokens: int | None = 3500,
     dim: int = DEFAULT_DIM,
@@ -74,16 +127,16 @@ def collapsed_knn(
     model: str | None = None,
 ) -> DataFrame:
     """Exact kNN over all levels (collapsed tree). queries: (query_id,
-    q_embedding). Broadcast-nested-loop on the tiny query side."""
-    scored = nodes.join(F.broadcast(queries)).withColumn(
-        "dist", _distance(dim, distance_metric, model)
+    q_embedding), Spark or pandas; ``model`` as in ``exact_topk``."""
+    ranked = exact_topk(
+        nodes, queries, model, metric=distance_metric, dim=dim, top_k=top_k, max_tokens=max_tokens
     )
-    return _rank_and_budget(scored, top_k, max_tokens)
+    return with_nodes(ranked, nodes)
 
 
 def flat_knn(
     nodes: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame,
     top_k: int | None = 5,
     max_tokens: int | None = 3500,
     dim: int = DEFAULT_DIM,
@@ -96,43 +149,20 @@ def flat_knn(
     )
 
 
-def query_homes(queries: DataFrame, resolutions: list[int], dim: int = DEFAULT_DIM) -> DataFrame:
-    """(query_id, res, ix, iy) home-cell coordinates per resolution — pure
-    column expressions (no driver round trip), one row per query×resolution.
-
-    The 64-term projection fold is instantiated ONCE, at the finest
-    resolution; coarser homes are integer right-shifts of the finest coords
-    (floor(x·2^r) == floor(x·2^rmax) >> (rmax−r), and the [0, 2^r−1] clamp
-    commutes with the shift), bit-identical to clamping per resolution.
-    Before this, each of the R resolutions embedded its own copy of the
-    ix/iy fold — 2R copies of a ~130-node branchy expression in one
-    WholeStageCodegen method, which blew janino's 64 KB limit and dropped
-    the whole stage to interpreted mode (measured: 4 codegen failures and
-    seconds of compile+fallback per retrieval call)."""
-    res_list = sorted(set(resolutions))
-    rmax = res_list[-1]
-    n = 1 << rmax
-    x, y = G.xy_cols(F.col("q_embedding"), dim)
-    ix0 = F.greatest(F.least(F.floor(x * F.lit(float(n))).cast("long"), F.lit(n - 1)), F.lit(0))
-    iy0 = F.greatest(F.least(F.floor(y * F.lit(float(n))).cast("long"), F.lit(n - 1)), F.lit(0))
-    per_res = [
-        F.struct(
-            F.lit(res).alias("res"),
-            F.shiftrightunsigned(F.col("__ix0"), rmax - res).alias("ix"),
-            F.shiftrightunsigned(F.col("__iy0"), rmax - res).alias("iy"),
-        )
-        for res in res_list
-    ]
-    return (
-        queries.select("query_id", ix0.alias("__ix0"), iy0.alias("__iy0"))
-        .select("query_id", F.explode(F.array(*per_res)).alias("h"))
-        .select(
-            "query_id",
-            F.col("h.res").alias("res"),
-            F.col("h.ix").alias("ix"),
-            F.col("h.iy").alias("iy"),
-        )
-    )
+def query_homes(
+    spark: SparkSession, queries: pd.DataFrame, resolutions: list[int], dim: int = DEFAULT_DIM
+) -> DataFrame:
+    """(query_id, res, ix, iy) home cells per resolution of the local query
+    rows, one row per query×resolution: ``reduce.project_xy`` is the fold of
+    ``sqlgen.xy_cols`` bit for bit, and x·2^res is exact, so the cells are
+    those of the Spark expression."""
+    xy = project_xy(topk.matrix(queries["q_embedding"], dim))
+    rows = []
+    for res in sorted(set(resolutions)):
+        n = 1 << res
+        cells = np.clip(np.floor(xy * float(n)), 0, n - 1).astype(np.int64).tolist()
+        rows += [(q, res, ix, iy) for q, (ix, iy) in zip(queries["query_id"].tolist(), cells)]
+    return spark.createDataFrame(rows, "query_id long, res int, ix long, iy long")
 
 
 def ring_cells(homes: DataFrame, radius_col: F.Column, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -258,7 +288,7 @@ def _choose_radii(
 
 def cell_pruned_knn(
     nodes: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame,
     levels_res: dict[int, int],
     top_k: int = 10,
     max_tokens: int | None = 3500,
@@ -279,7 +309,7 @@ def cell_pruned_knn(
     nodes — the operator can never return fewer than top_k results while a
     full level exists, closing the silent tile-boundary recall hole. No
     per-iteration driver round trips: one cell-counts materialization, one
-    metadata-scale density collect, then a single declarative plan.
+    metadata-scale density collect, then one plan ranked by ``exact_topk``.
 
     Approximate BY DESIGN for full-embedding-space metrics: candidates are
     pruned by 2D tile locality but ranked by ``distance_metric`` in the
@@ -293,18 +323,12 @@ def cell_pruned_knn(
     the right level automatically.
     """
     resolutions = sorted(set(levels_res.values()))
+    queries = local_queries(queries)
     if cell_counts is None:
         cell_counts = corpus_cell_counts(nodes)
     need = oversample * top_k
-    # materialize the tiny homes table (queries × resolutions rows of plain
-    # ints): query_homes embeds the 64-term projection fold, and threading
-    # that expression tree through the ring explodes/filters below multiplies
-    # it ~6x per reference — measured as minutes of driver-side Catalyst
-    # optimization. Checkpointing cuts the lineage to flat integer columns.
-    homes = (
-        query_homes(queries, resolutions, dim)
-        .join(F.broadcast(_initial_radius(cell_counts, resolutions, need, max_radius)), "res")
-        .localCheckpoint(eager=True)
+    homes = query_homes(nodes.sparkSession, queries, resolutions, dim).join(
+        F.broadcast(_initial_radius(cell_counts, resolutions, need, max_radius)), "res"
     )
     ring_homes, pending = _choose_radii(homes, cell_counts, need, max_radius)
     cand = ring_cells(ring_homes, F.col("radius")).select("query_id", "cell_id")
@@ -319,11 +343,10 @@ def cell_pruned_knn(
         F.broadcast(pending.select("query_id", "res")), "res"
     ).drop("res")
     pruned = pruned.unionByName(fb.select(*pruned.columns))
-
-    scored = pruned.join(F.broadcast(queries), "query_id").withColumn(
-        "dist", _distance(dim, distance_metric)
+    ranked = exact_topk(
+        pruned, queries, metric=distance_metric, dim=dim, top_k=top_k, max_tokens=max_tokens
     )
-    return _rank_and_budget(scored, top_k, max_tokens)
+    return with_nodes(ranked, nodes)
 
 
 def grid_knn(

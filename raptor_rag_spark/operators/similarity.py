@@ -1,20 +1,25 @@
 """Similarity search over embedding columns: exact top-k and bucketed ANN.
 
-- ``brute_force_topk``: broadcast the (small) query side, exact-order cosine
-  expression, window top-k — the exact baseline with a DuckDB oracle.
+- ``brute_force_topk``: every vector against every query through the exact
+  kernel of ``knn.exact_topk`` — the exact baseline with a DuckDB oracle.
 - ``ivf_topk``: IVF-style approximate path — vectors are bucketed by their
   home tile at a coarse resolution (the xy projection is the coarse
   quantizer); each query probes its own tile + 8 neighbors. Bounded
   candidates ⇒ scales linearly with probes, not corpus size.
+
+Both rank the score rounded to 6 decimals, as their oracles do.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
+from ..functions.udfs import make_cosine_udf
+from ..kernels.distances import COS_SIM
 from ..kernels.embedder import DEFAULT_DIM
+from .knn import exact_topk, local_queries, query_homes, ring_cells
 
 
 def brute_force_topk(
@@ -24,16 +29,9 @@ def brute_force_topk(
     dim: int = DEFAULT_DIM,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """queries: (query_id, q_embedding). Exact cosine top-k per query."""
-    sim = G.cosine_sim_cols(F.col("q_embedding"), F.col("embedding"), dim)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), id_col)
-    return (
-        vecs.join(F.broadcast(queries))
-        .withColumn("cos_sim", F.round(sim, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "cos_sim")
-    )
+    """queries: (query_id, q_embedding). Exact cosine top-k per query. With
+    a ``query_id`` column, ``vecs`` is given (query, vector) pairs."""
+    return brute_force_topk_dist(vecs, queries, k, dim, COS_SIM, id_col)
 
 
 def brute_force_topk_dist(
@@ -47,15 +45,9 @@ def brute_force_topk_dist(
     """Exact top-k by ascending distance under any supported metric
     (cosine/L1/L2/Linf — reference raptor/utils.py:84-102 dispatch, here as
     the distributed retrieval path rather than a dead kernel)."""
-    d = G.dist_expr_cols("q_embedding", "embedding", dim, metric)
-    w = Window.partitionBy("query_id").orderBy("dist", id_col)
-    return (
-        vecs.join(F.broadcast(queries))
-        .withColumn("dist", F.round(d, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "dist")
-    )
+    return exact_topk(
+        vecs, queries, id_col=id_col, metric=metric, dim=dim, top_k=k, rounded=True
+    ).withColumnRenamed(id_col, "neighbor_id")
 
 
 def ivf_topk(
@@ -68,27 +60,15 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate top-k: probe the query's coarse tile + 8 neighbors.
 
-    Probe cells are pure column expressions (explode of the 3×3 ring) — no
-    driver round trip, so the query side can itself be a large DataFrame."""
-    from .knn import query_homes, ring_cells
-
+    Probe cells are the 3×3 ring around each query's home cell (from the
+    collected query rows); the exact kernel scores the candidate pairs."""
     x, y = G.xy_cols(F.col("embedding"), dim)
     bucketed = vecs.select(id_col, "embedding", G.cell_col(x, y, res).alias("bucket"))
-
-    probes = ring_cells(query_homes(queries, [res], dim), F.lit(1)).select(
+    queries = local_queries(queries)
+    probes = ring_cells(query_homes(vecs.sparkSession, queries, [res], dim), F.lit(1)).select(
         "query_id", F.col("cell_id").alias("bucket")
     )
-    cand = bucketed.join(F.broadcast(probes), "bucket").join(
-        F.broadcast(queries), "query_id"
-    )
-    sim = G.cosine_sim_cols(F.col("q_embedding"), F.col("embedding"), dim)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), id_col)
-    return (
-        cand.withColumn("cos_sim", F.round(sim, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "cos_sim")
-    )
+    return brute_force_topk(bucketed.join(F.broadcast(probes), "bucket"), queries, k, dim, id_col)
 
 
 # ------------------------------------------------------- SRP-LSH (cosine LSH)
@@ -206,38 +186,16 @@ def srp_pairs(
         .select("a_id", "b_id")
         .distinct()
     )
-    # exact-cosine verify, staged (round-4 codegen-fallback fix): norms are
-    # computed ONCE PER VECTOR before the pair join (they were per-pair —
-    # redundant work AND, fused with the dot product and the >= filter's
-    # pushed-down copy, a >64 KB generated method). The per-pair projection
-    # is dot/(na*nb) over leaf norm columns; the narrow barrier keeps the
-    # filter from re-inlining the 64-term dot into its predicate.
-    ea = vecs.select(
-        F.col(id_col).alias("a_id"),
-        F.col("embedding").alias("ea"),
-        G.norm_cols(F.col("embedding"), dim).alias("__na__"),
-    )
-    eb = vecs.select(
-        F.col(id_col).alias("b_id"),
-        F.col("embedding").alias("eb"),
-        G.norm_cols(F.col("embedding"), dim).alias("__nb__"),
-    )
+    # exact-cosine verify with the kernel fold; the barrier keeps the filter
+    # from evaluating the UDF a second time
+    e = vecs.select(id_col, "embedding")
     comps = (
-        cand.join(ea, "a_id")
-        .join(eb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            (
-                G.dot_cols(F.col("ea"), F.col("eb"), dim)
-                / (F.col("__na__") * F.col("__nb__"))
-            ).alias("cos_sim"),
-        )
+        cand.join(e.toDF("a_id", "ea"), "a_id")
+        .join(e.toDF("b_id", "eb"), "b_id")
+        .select("a_id", "b_id", make_cosine_udf(dim)("ea", "eb").alias("cos_sim"))
         .localCheckpoint(eager=False)
     )
-    return comps.where(F.col("cos_sim") >= F.lit(min_sim)).select(
-        "a_id", "b_id", "cos_sim"
-    )
+    return comps.where(F.col("cos_sim") >= F.lit(min_sim))
 
 
 def srp_pairs_sql(

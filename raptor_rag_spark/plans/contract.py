@@ -23,6 +23,7 @@ listed in QUERIES without an oracle → the driver records a rows-only check
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,6 +47,17 @@ DEC2 = "decimal(28,15)"
 
 def ld(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+_SCRATCH_ROOT: list[tempfile.TemporaryDirectory] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for a query's lake, index or bucketed tables, under
+    one root per process, which is deleted when the process exits."""
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.TemporaryDirectory(prefix="raptor_contract_", ignore_cleanup_errors=True))
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0].name)
 
 
 # --------------------------------------------------------------------------
@@ -2532,7 +2544,7 @@ def q_tree_flat_knn(spark, sf_dir):
 def q_tree_flat_budget(spark, sf_dir):
     """Budget-only FAISS mode (reference ``use_top_k=False``,
     faiss_retriever.py:146-154): rank ALL leaves by distance and accumulate
-    until max_context_tokens with NO k-cap — top_k=None in _rank_and_budget."""
+    until max_context_tokens with NO k-cap — top_k=None in knn.exact_topk."""
     from ..operators.knn import flat_knn
 
     return flat_knn(_tree(spark, sf_dir), _tree_queries(spark, sf_dir), top_k=None, max_tokens=800)
@@ -3666,11 +3678,10 @@ def q_bucketed_join(spark, sf_dir):
     source — the co-located big-big join layout for artifacts written once
     and joined many times."""
     import hashlib
-    import tempfile
 
     from ..sources.bucketed import bucketed_join, save_bucketed
 
-    base = tempfile.mkdtemp(prefix="contract_bkt_")
+    base = scratch_dir("contract_bkt_")
     docs = ld(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
     left = docs.select("doc_id", "source")

@@ -38,6 +38,7 @@ from .contract import (  # noqa: F401  (shared helpers; see module docstring)
     _tree,
     ld,
     pip_join,
+    scratch_dir,
 )
 
 # --------------------------------------------------------------------------
@@ -2301,8 +2302,6 @@ def _sql_hex_density() -> str:
 def _lake_of(spark, sf_dir: str):
     """Build (once per (session, sf_dir)) a 4-commit lake table over the
     documents parquet, sliced by doc_id range so file stats are disjoint."""
-    import tempfile
-
     from ..sources.lakehouse import LakeTable
 
     cache = getattr(_lake_of, "_cache", {})
@@ -2311,7 +2310,7 @@ def _lake_of(spark, sf_dir: str):
         return cache[key]
     docs = ld(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    t = LakeTable(tempfile.mkdtemp(prefix="laketbl_"), stats_cols=("doc_id",))
+    t = LakeTable(scratch_dir("laketbl_"), stats_cols=("doc_id",))
     cuts = [0, mx // 4, mx // 2, (3 * mx) // 4, mx + 1]
     snaps = []
     for lo, hi in zip(cuts[:-1], cuts[1:]):
@@ -2374,8 +2373,6 @@ def q_lake_zorder_scan(spark, sf_dir):
     """Z-order data skipping: embeddings xy written as a z-clustered lake
     snapshot, then a bbox read that prunes files from Morton-range manifest
     stats; must equal a plain coordinate filter over the source table."""
-    import tempfile
-
     from ..sources.lakehouse import LakeTable
 
     cache = getattr(q_lake_zorder_scan, "_cache", {})
@@ -2384,7 +2381,7 @@ def q_lake_zorder_scan(spark, sf_dir):
         e = ld(spark, sf_dir, "embeddings")
         x, y = G.xy_cols(F.col("embedding"), DIM)
         pts = e.select("vec_id", x.alias("x"), y.alias("y"))
-        t = LakeTable(tempfile.mkdtemp(prefix="lakez_"), stats_cols=(LakeTable.ZKEY,))
+        t = LakeTable(scratch_dir("lakez_"), stats_cols=(LakeTable.ZKEY,))
         t.append_zordered(pts, res=8, n_files=16)
         cache[key] = t
         q_lake_zorder_scan._cache = cache
@@ -2408,8 +2405,6 @@ def q_bm25_incremental(spark, sf_dir):
     built from the first half of the corpus, second half folded in as a
     snapshot append (every BM25 statistic is additive over postings). Must
     hash-match the full-corpus oracle — incremental maintenance is exact."""
-    import tempfile
-
     from ..sources.searchindex import SearchIndex
 
     cache = getattr(q_bm25_incremental, "_cache", {})
@@ -2417,7 +2412,7 @@ def q_bm25_incremental(spark, sf_dir):
     if key not in cache:
         docs = ld(spark, sf_dir, "documents").select("doc_id", "text")
         mx = docs.agg(F.max("doc_id")).collect()[0][0]
-        idx = SearchIndex(tempfile.mkdtemp(prefix="bm25idx_"))
+        idx = SearchIndex(scratch_dir("bm25idx_"))
         idx.build(docs.where(F.col("doc_id") < mx // 2))
         idx.add_documents(docs.where(F.col("doc_id") >= mx // 2))
         cache[key] = idx
@@ -2434,8 +2429,6 @@ def q_tile_incremental(spark, sf_dir):
     aggregates), then read rolled up TWO levels coarser than maintained.
     Must hash-match a full recompute over the union corpus — incremental
     view maintenance and the pyramid rollup are both exact."""
-    import tempfile
-
     from ..sources.lakehouse import LakeTable
     from ..sources.tilestats import TileStatsTable
 
@@ -2446,9 +2439,9 @@ def q_tile_incremental(spark, sf_dir):
         x, y = G.xy_cols(F.col("embedding"), DIM)
         pts = e.select("vec_id", x.alias("x"), y.alias("y"))
         mx = pts.agg(F.max("vec_id")).collect()[0][0]
-        corpus = LakeTable(tempfile.mkdtemp(prefix="tilecorpus_"))
+        corpus = LakeTable(scratch_dir("tilecorpus_"))
         s1 = corpus.append(pts.where(F.col("vec_id") < mx // 2))
-        stats = TileStatsTable(tempfile.mkdtemp(prefix="tilestats_"), res=6)
+        stats = TileStatsTable(scratch_dir("tilestats_"), res=6)
         stats.build(corpus.read(spark, s1))
         s2 = corpus.append(pts.where(F.col("vec_id") >= mx // 2))
         stats.refresh_from(corpus, s1, s2)
@@ -2474,15 +2467,13 @@ def q_bm25_delete(spark, sf_dir):
     == 0 retired via negated-tf postings, sources/searchindex.py): must
     hash-match a fresh oracle over the corpus WITHOUT those docs — the
     O(deleted) delete path is exact, no live-postings rewrite."""
-    import tempfile
-
     from ..sources.searchindex import SearchIndex
 
     cache = getattr(q_bm25_delete, "_cache", {})
     key = (id(spark), sf_dir)
     if key not in cache:
         docs = ld(spark, sf_dir, "documents").select("doc_id", "text")
-        idx = SearchIndex(tempfile.mkdtemp(prefix="bm25del_"))
+        idx = SearchIndex(scratch_dir("bm25del_"))
         idx.build(docs)
         idx.delete_documents(docs.where(F.col("doc_id") % 7 == 0).select("doc_id"))
         cache[key] = idx

@@ -235,6 +235,36 @@ def test_multi_model_embeddings_build_and_route(spark):
     assert nodes_a != nodes_b  # different model → different ranking
 
 
+def test_missing_map_key_ranks_as_null_on_both_paths(ra, spark):
+    """A node whose ``embeddings`` map lacks the context model's key has a
+    NULL vector. Both paths rank it first (ties by id), where the Spark
+    window ranks NULLs, and give the same contexts and layers; the driver
+    copy reads every other vector in its own row."""
+    from raptor_rag_spark.config import TreeRetrieverConfig
+    from raptor_rag_spark.kernels.embedder import HashNgramEmbeddingModel
+
+    cfg = ClusterTreeConfig(
+        max_tokens=64, num_layers=2, max_resolution=6,
+        embedding_models={"m": HashNgramEmbeddingModel()}, cluster_embedding_model="m",
+    )
+    has_key = F.col("node_id") % 7 != 0
+    vec = lambda key: F.create_map(F.lit(key), F.col("embedding"))  # noqa: E731
+    tree = ra.tree.withColumn("embeddings", F.when(has_key, vec("m")).otherwise(vec("x")))
+    r = RetrievalAugmentation(
+        spark, config=cfg, tree=tree,
+        retriever_config=TreeRetrieverConfig(context_embedding_model="m"),
+    )
+    missing = sorted(x["node_id"] for x in tree.filter(~has_key).select("node_id").collect())
+    assert missing
+    for kwargs in (dict(top_k=5, max_tokens=None), dict(collapse_tree=False)):
+        resident, planned = both_paths(spark, lambda: r.retrieve("spark join data", **kwargs))
+        assert resident == planned, kwargs
+    _, layers = resident
+    collapsed = r.retrieve("spark join data", top_k=5, max_tokens=None)[1]
+    assert [d["node_index"] for d in collapsed][: len(missing)] == missing[:5]
+    assert layers
+
+
 def test_integration_adapters(spark):
     """J7 adapters: result→node materialization join yields documents whose
     text matches the tree nodes, in selection order with rank-based scores."""

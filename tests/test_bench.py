@@ -36,3 +36,39 @@ def test_bench_legs_are_registry_queries_and_import_starts_no_spark():
     assert len(set(got["legs"])) == len(got["legs"])
     assert set(got["marginal"]) <= set(got["legs"])
     assert set(got["legs"] + [got["density"]]) <= set(got["queries"]) & set(got["oracles"])
+
+
+SCRATCH_PROBE = """
+import sys
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from raptor_rag_spark.plans import contract
+from raptor_rag_spark.session import get_spark
+
+vecs = np.random.default_rng(3).standard_normal((40, 64)).astype(np.float32)
+pq.write_table(
+    pa.table({"vec_id": np.arange(40), "embedding": pa.array(list(vecs), pa.list_(pa.float32()))}),
+    sys.argv[1] + "/embeddings.parquet",
+)
+spark = get_spark(cores=2)
+contract.QUERIES["tile_incremental"](spark, sys.argv[1]).count()
+print(contract._SCRATCH_ROOT[0].name)
+"""
+
+
+def test_registry_query_tables_are_removed_at_exit(tmp_path):
+    """A registry query that keeps lake tables (``tile_incremental``) puts
+    them under one per-process root in the temp dir, and that root is gone
+    once the process exits."""
+    tmp, sf = tmp_path / "tmp", tmp_path / "sf"
+    tmp.mkdir()
+    sf.mkdir()
+    env = dict(os.environ, PYTHONPATH=ROOT, TMPDIR=str(tmp))
+    out = subprocess.run(
+        [sys.executable, "-c", SCRATCH_PROBE, str(sf)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, check=True,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp)
+    assert list(tmp.iterdir()) == []

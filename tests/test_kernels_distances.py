@@ -6,8 +6,8 @@ import pytest
 from raptor_rag_spark.kernels.distances import (
     distances_from_embeddings,
     indices_of_nearest_neighbors_from_distances,
+    distance_matrix,
     l2_normalize,
-    pairwise_cosine_similarity,
 )
 
 
@@ -51,7 +51,7 @@ def test_empty_embeddings():
 
 def test_pairwise_cosine_shape_and_values():
     a = np.eye(3)
-    sim = pairwise_cosine_similarity(a, a)
+    sim = distance_matrix(a, a, "cos_sim")
     assert sim.shape == (3, 3)
     assert np.allclose(np.diag(sim), 1.0)
     assert sim[0, 1] == pytest.approx(0.0)
@@ -61,3 +61,29 @@ def test_l2_normalize_zero_safe():
     out = l2_normalize(np.array([[0.0, 0.0], [3.0, 4.0]]))
     assert np.allclose(out[0], 0.0)
     assert np.linalg.norm(out[1]) == pytest.approx(1.0)
+
+
+def test_topk_select_order_nulls_and_slack():
+    """The selection of every kNN path: (score, id) order with NaN as a
+    NULL score (first ascending, last descending, ties by id), the top_k
+    prefix widened by ``slack`` around the k-th raw score, the running
+    token cut, and threshold mode (NULL fails it)."""
+    from raptor_rag_spark.kernels.topk import ROUND_SLACK, select
+
+    score = np.array([0.5, np.nan, 0.2, 0.2, np.nan, 0.2000015, 0.2000025])
+    ids = np.array([5, 4, 3, 2, 1, 7, 6])
+    tokens = np.array([1, 1, 1, 1, 1, 1, 1])
+    assert select(score, ids, top_k=7).tolist() == [4, 1, 3, 2, 5, 6, 0]
+    assert select(score, ids, top_k=7, desc=True).tolist() == [0, 6, 5, 3, 2, 4, 1]
+    assert select(score, ids, top_k=3).tolist() == [4, 1, 3]  # k-th is a number...
+    assert select(score, ids, top_k=3, slack=ROUND_SLACK).tolist() == [4, 1, 3, 2, 5]
+    assert select(score, ids, top_k=1, slack=ROUND_SLACK).tolist() == [4]  # ...or NULL
+    assert select(score, ids, top_k=2, slack=ROUND_SLACK, desc=True).tolist() == [0, 6, 5]
+    assert select(score, ids, top_k=3, slack=ROUND_SLACK, desc=True).tolist() == [0, 6, 5, 3, 2]
+    assert select(score, ids, tokens, max_tokens=3).tolist() == [4, 1, 3]
+    assert select(score, ids, tokens, top_k=2, max_tokens=3).tolist() == [4, 1]
+    assert select(score, ids, tokens, max_tokens=3, prelimit=True).tolist() == [4, 1, 3, 2]
+    assert select(score, ids, 2 * tokens, max_tokens=3, prelimit=True).tolist() == [4, 1]
+    assert select(score, ids, threshold=0.2).tolist() == [5, 6, 0]
+    with pytest.raises(ValueError, match="one of top_k or max_tokens"):
+        select(score, ids)

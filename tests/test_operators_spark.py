@@ -134,44 +134,177 @@ def test_collapsed_knn_matches_kernel(spark, leaves):
         assert np.array_equal(mine["dist"].to_numpy(), dists[order])  # bit for bit
 
 
-@pytest.mark.parametrize("metric", ["cosine", "L1", "L2", "Linf"])
-def test_distance_matrix_is_dist_expr_cols_bit_for_bit(spark, metric):
-    """The numpy kernel is the Spark expression's fold and the DuckDB
-    twin's, so the three agree bit for bit: 128-wide vectors (all read the
-    first 64 entries), a duplicate vector (a tie) and a zero vector, read
-    through a multi-model map key on Spark. The zero vector's cosine
-    distance is 1.0 on all three, with ANSI on. A NULL vector stays a NULL
-    distance on Spark and DuckDB (NaN in, NaN out in numpy)."""
+METRICS = ["cosine", "L1", "L2", "Linf"]
+
+
+def kernel_fixture(spark):
+    """Nine 128-wide float32 nodes in a multi-model map (the kernel reads
+    ``embeddings['m']``, first 64 entries): two duplicate vectors (a tie), a
+    zero vector and a NULL one; node ids out of row order; two queries, one
+    equal to a node. Returns (nodes frame, queries frame, DuckDB connection
+    with tables n(node_id, e, token_count) and q(query_id, q), the query
+    and node vectors)."""
     import duckdb
 
-    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     rng = np.random.default_rng(11)
-    q = rng.standard_normal(128).astype(np.float32)
-    nodes = rng.standard_normal((6, 128)).astype(np.float32)
-    nodes[1] = nodes[0]
-    nodes[2] = 0.0
-    rows = [(i, q.tolist(), {"alt": (-v).tolist(), "m": v.tolist()}) for i, v in enumerate(nodes)]
-    rows.append((len(nodes), q.tolist(), {"alt": q.tolist(), "m": None}))
-    df = spark.createDataFrame(
-        rows, "node_id long, q_embedding array<float>, embeddings map<string, array<float>>"
+    vecs = rng.standard_normal((9, 128)).astype(np.float32)
+    vecs[1] = vecs[0]
+    vecs[2] = 0.0
+    qs = np.stack([rng.standard_normal(128).astype(np.float32), vecs[4]])
+    ids = [70, 30, 50, 10, 90, 20, 80, 40, 60]
+    toks = [12, 7, 30, 5, 18, 9, 25, 14, 3]
+    m = [v.tolist() for v in vecs]
+    m[5] = None
+    rows = [(i, {"alt": (-v).tolist(), "m": e}, t) for i, v, e, t in zip(ids, vecs, m, toks)]
+    nodes = spark.createDataFrame(
+        rows, "node_id long, embeddings map<string, array<float>>, token_count int"
     )
-    dist = G.dist_expr_cols("q_embedding", "embeddings['m']", 64, metric).alias("d")
-    *got, got_null = [r["d"] for r in df.select("node_id", dist).orderBy("node_id").collect()]
+    queries = spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(qs)], "query_id long, q_embedding array<float>"
+    )
     con = duckdb.connect()
-    con.execute("CREATE TABLE t (node_id BIGINT, q FLOAT[], e FLOAT[])")
-    con.executemany(
-        "INSERT INTO t VALUES (?, ?, ?)",
-        [(i, q.tolist(), v.tolist()) for i, v in enumerate(nodes)] + [(len(nodes), q.tolist(), None)],
+    con.execute("CREATE TABLE n (node_id BIGINT, e FLOAT[], token_count INT)")
+    con.executemany("INSERT INTO n VALUES (?, ?, ?)", list(zip(ids, m, toks)))
+    con.execute("CREATE TABLE q (query_id BIGINT, q FLOAT[])")
+    con.executemany("INSERT INTO q VALUES (?, ?)", [(i, q.tolist()) for i, q in enumerate(qs)])
+    return nodes, queries, con, qs, vecs
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_distance_matrix_is_dist_expr_cols_bit_for_bit(spark, metric):
+    """The numpy kernel is the DuckDB twin's fold, so they agree bit for
+    bit: 128-wide vectors (all read the first 64 entries), a duplicate
+    vector (a tie) and a zero vector, one query and a (Q, d) block. The
+    Spark operator ``exact_topk`` (reading a multi-model map key) gives the
+    same bits. The zero vector's cosine distance is 1.0, with ANSI on. A
+    NULL vector stays a NULL distance on Spark and DuckDB (NaN in, NaN out
+    in numpy)."""
+    from raptor_rag_spark.operators.knn import exact_topk
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    nodes, queries, con, qs, vecs = kernel_fixture(spark)
+    sql = f"""SELECT query_id, node_id, {G.dist_sql('q', 'e', 64, metric)} AS d
+              FROM q, n ORDER BY query_id, node_id"""
+    duck = {(a, b): d for a, b, d in con.execute(sql).fetchall()}
+    got = exact_topk(nodes, queries, "m", metric=metric, top_k=len(vecs)).collect()
+    assert {(r["query_id"], r["node_id"]): r["dist"] for r in got} == duck
+    ids = [70, 30, 50, 10, 90, 20, 80, 40, 60]
+    block = distance_matrix(qs, vecs, metric, 64)
+    for j, q in enumerate(qs):
+        mine = distance_matrix(q, vecs, metric, 64)
+        assert np.array_equal(mine, block[j])
+        want = [duck[(j, i)] for i in ids]
+        assert want[5] is None
+        assert np.array_equal(np.delete(mine, 5), np.delete(np.array(want, dtype=float), 5))
+        assert mine[0] == mine[1]
+        if metric == "cosine":
+            assert mine[2] == 1.0
+    assert np.isnan(distance_matrix(qs[0], np.full(128, np.nan), metric, 64)).all()
+
+
+def ranked_by_duckdb(con, metric, top_k=None, max_tokens=None, threshold=None):
+    """The expected selection, ranked in Python over DuckDB's distances:
+    (dist, node_id) order with NULLs first, then the cut."""
+    sql = f"SELECT query_id, node_id, token_count, {G.dist_sql('q', 'e', 64, metric)} FROM q, n"
+    by_q = {}
+    for qid, nid, tok, d in con.execute(sql).fetchall():
+        by_q.setdefault(qid, []).append((d is not None, d or 0.0, nid, tok, d))
+    out = []
+    for qid, rows in by_q.items():
+        rows.sort()
+        if threshold is not None:
+            rows = [r for r in rows if r[4] is not None and r[4] > threshold]
+        if top_k is not None:
+            rows = rows[:top_k]
+        if max_tokens is not None:
+            rows = [r for r, c in zip(rows, np.cumsum([r[3] for r in rows])) if c <= max_tokens]
+        out += [(qid, r[2], rank, r[4]) for rank, r in enumerate(rows, 1)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_exact_topk_pre_limit_rules(spark, metric):
+    """Every cut of the kernel operator equals a global ranking of DuckDB's
+    distances: ties between duplicate vectors broken by node id, the zero
+    vector, a NULL map entry ranked first, and each pre-limit rule (top_k,
+    budget-only, both, threshold) — binding in one partition, merged across
+    three, and with more partitions than nodes (empty ones)."""
+    from raptor_rag_spark.operators.knn import exact_topk
+
+    nodes, queries, con, _, _ = kernel_fixture(spark)
+    thr = float(np.median([d for (d,) in con.execute(
+        f"SELECT {G.dist_sql('q', 'e', 64, metric)} FROM q, n WHERE e IS NOT NULL").fetchall()]))
+    for parts in (nodes.coalesce(1), nodes.repartition(3), nodes.repartition(16)):
+        for cut in (dict(top_k=4), dict(max_tokens=40), dict(top_k=6, max_tokens=50), dict(threshold=thr)):
+            got = exact_topk(parts, queries, "m", metric=metric, **cut)
+            rows = sorted(tuple(r)[:4] for r in got.collect())
+            assert rows == ranked_by_duckdb(con, metric, **cut), cut
+
+
+def test_exact_topk_chunks_query_matrix(spark, leaves, monkeypatch):
+    """More queries than one distance block holds: the partition kernel
+    scores them chunk by chunk and gives the per-query ranking of one
+    numpy block."""
+    from raptor_rag_spark.kernels import topk
+    from raptor_rag_spark.operators.knn import exact_topk
+
+    rows = leaves.select("node_id", "embedding").collect()
+    ids = np.array([r["node_id"] for r in rows])
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    rng = np.random.default_rng(5)
+    qs = rng.standard_normal((topk.BLOCK // len(rows) + 40, 64)).astype(np.float32)
+    queries = pd.DataFrame({"query_id": np.arange(len(qs)), "q_embedding": list(qs)})
+    got = exact_topk(leaves.coalesce(1), queries, top_k=3).toPandas()
+    want = []
+    for j, d in enumerate(distance_matrix(qs, mat)):
+        order = np.lexsort((ids, d))[:3]
+        want += [(j, int(ids[i]), rank, d[i]) for rank, i in enumerate(order, 1)]
+    mine = got[["query_id", "node_id", "rank", "dist"]].to_numpy(object).tolist()
+    assert sorted(map(tuple, mine)) == sorted(want)
+    # the same chunking on the driver, seven queries to a block
+    monkeypatch.setattr(topk, "BLOCK", 7 * len(ids))
+    qid, at, dist = topk.partition_topk(np.arange(len(qs)), qs, ids, mat, top_k=3)
+    picked = zip(qid.tolist(), ids[at].tolist(), dist.tolist())
+    assert sorted(picked) == sorted((a, b, d) for a, b, _, d in want)
+
+
+def test_emb_topk_zero_vector_both_engines(spark):
+    """The similarity search paths against their DuckDB oracles over
+    embeddings with a zero vector (one of the queries) and a duplicate: the
+    zero vector's cosine similarity is 0.0 on both engines (no
+    DIVIDE_BY_ZERO on Spark, no NULL on DuckDB), ties rank by id, and the
+    rounded-score pre-limit keeps every row that can rank ≤ k."""
+    import duckdb
+    import pyarrow as pa
+
+    from raptor_rag_spark.operators.similarity import brute_force_topk, brute_force_topk_dist, ivf_topk
+    from raptor_rag_spark.plans.contract import _sql_emb_ivf_topk, _sql_emb_topk, _sql_emb_topk_metric
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").filter("vec_id < 80").toPandas()
+    vecs = [np.asarray(v, dtype=np.float32) for v in emb["embedding"]]
+    vecs[2] = np.zeros_like(vecs[2])
+    vecs[7] = vecs[3]
+    ids = emb["vec_id"].tolist()
+    table = pa.table({"vec_id": ids, "embedding": pa.array([v.tolist() for v in vecs], pa.list_(pa.float32()))})
+    con = duckdb.connect()
+    con.register("embeddings", table)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in zip(ids, vecs)], "vec_id long, embedding array<float>"
+    ).repartition(3)
+    queries = df.filter("vec_id < 5").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    sql = f"SELECT {G.dist_sql('q', 'e', 64, metric)} FROM t ORDER BY node_id"
-    *duck, duck_null = [d for (d,) in con.execute(sql).fetchall()]
-    mine = distance_matrix(q, nodes, metric, 64)
-    assert np.array_equal(mine, got) and np.array_equal(mine, duck)
-    assert got_null is None and duck_null is None
-    assert np.isnan(distance_matrix(q, np.full(128, np.nan), metric, 64)).all()
-    assert mine[0] == mine[1]
-    if metric == "cosine":
-        assert mine[2] == 1.0
+    cases = [
+        (brute_force_topk(df, queries, k=5), _sql_emb_topk(5, 5)),
+        (brute_force_topk_dist(df, queries, k=5, metric="L2"), _sql_emb_topk_metric("L2", 5, 5)),
+        (ivf_topk(df, queries, k=5, res=3), _sql_emb_ivf_topk(5, 5, 3)),
+    ]
+    for got, sql in cases:
+        mine = sorted(tuple(r) for r in got.collect())
+        assert mine == sorted(con.execute(sql).fetchall()), sql[:60]
+    zero = [r for r in brute_force_topk(df, queries, k=5).collect() if r["query_id"] == ids[2]]
+    assert [r["cos_sim"] for r in zero] == [0.0] * 5
+    assert [r["neighbor_id"] for r in zero] == sorted(ids)[:5]
 
 
 def test_knn_token_budget(spark, leaves):

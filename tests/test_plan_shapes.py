@@ -78,8 +78,11 @@ def test_collapsed_knn_broadcasts_queries(spark, tiny_tree_df, tiny_queries_df):
     from raptor_rag_spark.operators.knn import collapsed_knn
 
     plan = explain_str(collapsed_knn(tiny_tree_df, tiny_queries_df, top_k=3))
-    assert "Broadcast" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    # the query matrix travels with the kernel function: no join crosses
+    # queries with nodes, and the node frame never shuffles onto query keys
+    assert "MapInPandas" in plan, plan
+    for join in ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert join not in plan, plan
 
 
 def test_cell_pruned_knn_broadcasts_candidates(spark, tiny_tree_df, tiny_queries_df):
