@@ -229,15 +229,3 @@ def hex_parent_packed_py(cell: int) -> int:
     else:
         pq, pr = qr, rr
     return ((res - 1) << RES_SHIFT) | ((pq + OFF) << COORD_BITS) | (pr + OFF)
-
-
-def hex_parent_packed_sql(cell_expr: str) -> str:
-    """DuckDB twin of :func:`hex_parent_packed_col` (``cell_expr`` should be
-    a simple column reference)."""
-    res = f"(({cell_expr}) >> {RES_SHIFT})"
-    q = f"(((({cell_expr}) >> {COORD_BITS}) & {COORD_MASK}) - {OFF})"
-    r = f"((({cell_expr}) & {COORD_MASK}) - {OFF})"
-    pq, pr = hex_parent_sql(q, r)
-    return (
-        f"((({res} - 1) << {RES_SHIFT}) | (({pq} + {OFF}) << {COORD_BITS}) | ({pr} + {OFF}))"
-    )

@@ -461,11 +461,6 @@ def asin_py(z: float) -> float:
     return atan2_py(z, math.sqrt(max((1.0 - z) * (1.0 + z), 0.0)))
 
 
-def asin_col(z: Column) -> Column:
-    x = F.sqrt(F.greatest((F.lit(1.0) - z) * (F.lit(1.0) + z), F.lit(0.0)))
-    return atan2_col(z, x)
-
-
 def asin_sql(z: str, x_alias: str = "asx", ratio_alias: str = "atr") -> tuple[str, str, str]:
     """(x_stage, ratio_stage, result): stage sqrt((1-z)(1+z)) as ``x_alias``,
     then the atan2 ratio as ``ratio_alias``, then select the result —

@@ -1,7 +1,7 @@
 """Vectorized Arrow UDFs wrapping the numpy kernels.
 
 Only the kernels that genuinely cannot be column expressions live here
-(chunking, hash-ngram embedding, batched PIP, vector folds: a 64-term
+(hash-ngram embedding, batched PIP, vector folds: a 64-term
 expression per pair overran codegen's method limit). Cells, hashes and text
 stats are JVM-side expressions in sqlgen.py (input_hint mandate: vectorized
 pandas/Arrow UDFs, no per-row Python).
@@ -11,27 +11,11 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, FloatType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
-from ..kernels.chunker import split_text
 from ..kernels.distances import COS_SIM, row_distances
 from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
-from ..kernels.tokenizer import RegexTokenizer
 from ..kernels.topk import matrix
-
-
-def make_chunk_udf(max_tokens: int = 100, overlap: int = 0):
-    """text -> ARRAY<STRING> chunk UDF (UDTF-shape; posexplode downstream).
-
-    Reference role: BaseTextSplitter / split_text (raptor/utils.py:18-81).
-    """
-    tokenizer = RegexTokenizer()
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def chunk_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: split_text(t or "", tokenizer, max_tokens, overlap))
-
-    return chunk_udf
 
 
 def make_embed_udf(dim: int = DEFAULT_DIM, model=None):

@@ -34,17 +34,6 @@ def _feature_hash(feature: str) -> int:
     return int.from_bytes(digest[:8], "big")
 
 
-def _features(text: str) -> list[str]:
-    """Lowercased word tokens + char trigrams of each token."""
-    words = _WORD_RE.findall(text.lower().replace("\n", " "))
-    feats: list[str] = []
-    for w in words:
-        feats.append("w:" + w)
-        padded = f"^{w}$"
-        feats.extend("g:" + padded[i : i + 3] for i in range(len(padded) - 2))
-    return feats
-
-
 # word -> dense bucket-delta vector, persistent per worker process. Evicted
 # by byte budget, oldest-half first (vocab of real corpora is Zipfian; the
 # budget guards adversarial inputs without 1GB/worker blowups or full-cache

@@ -55,10 +55,6 @@ def cell_decode(cell):
     return res, ix, iy
 
 
-def cell_res(cell):
-    return np.asarray(cell, dtype=np.int64) >> RES_SHIFT
-
-
 def cell_parent(cell, steps: int = 1):
     """Parent cell ``steps`` resolutions coarser. Pure bit arithmetic."""
     res, ix, iy = cell_decode(cell)

@@ -54,29 +54,3 @@ NODES_SCHEMA_DDL = (
     "text STRING, embedding ARRAY<FLOAT>, x DOUBLE, y DOUBLE, "
     "children ARRAY<LONG>, token_count INT, n_leaves LONG"
 )
-
-
-def tree_from_rows(rows) -> Tree:
-    """Build a Tree view from collected ``nodes`` DataFrame rows."""
-    all_nodes: dict[int, Node] = {}
-    layer_to_nodes: dict[int, list[Node]] = {}
-    max_level = 0
-    for r in rows:
-        node = Node(
-            text=r["text"],
-            index=r["node_id"],
-            children=set(r["children"] or []),
-            embeddings={"default": list(r["embedding"] or [])},
-        )
-        all_nodes[node.index] = node
-        layer_to_nodes.setdefault(r["level"], []).append(node)
-        max_level = max(max_level, r["level"])
-    for lvl in layer_to_nodes:
-        layer_to_nodes[lvl].sort(key=lambda n: n.index)
-    return Tree(
-        all_nodes=all_nodes,
-        root_nodes={n.index: n for n in layer_to_nodes.get(max_level, [])},
-        leaf_nodes={n.index: n for n in layer_to_nodes.get(0, [])},
-        num_layers=max_level,
-        layer_to_nodes=layer_to_nodes,
-    )

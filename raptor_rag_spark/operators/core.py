@@ -27,23 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
-from ..functions.udfs import make_chunk_udf, make_embed_udf
+from ..functions.udfs import make_embed_udf
 from ..kernels.chunker import split_text
 from ..kernels.embedder import DEFAULT_DIM, HashNgramEmbeddingModel
 from ..kernels.reduce import project_xy
 from ..kernels.textstats import portable_hash63
 from ..kernels.tokenizer import RegexTokenizer
-
-
-def chunk_documents(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_tokens: int = 100, overlap: int = 0
-) -> DataFrame:
-    """One row per chunk: (doc id, chunk_idx, text)."""
-    chunk_udf = make_chunk_udf(max_tokens, overlap)
-    return df.select(
-        F.col(id_col),
-        F.posexplode(chunk_udf(F.col(text_col))).alias("chunk_idx", "chunk_text"),
-    ).withColumnsRenamed({"chunk_text": "text"})
 
 
 def with_embedding(

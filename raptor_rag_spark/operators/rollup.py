@@ -6,21 +6,31 @@ parent cell one resolution coarser; each group becomes one parent node whose
 text is a deterministic extractive summary, embedding is the summary's
 embedding, children = sorted member ids. Hot cells (token sum >
 max_length_in_cluster, reference's recluster gate at
-raptor/cluster_utils.py:116-122) are *salted* into deterministic sub-buckets —
-the explicit skew handling the north rule demands: the salt map is tiny
-(only hot cells) and broadcast, and the member gather shuffles on
-(cell, salt), so a hot cell's buckets go to different tasks and the
-expensive grouped-map runs on bounded groups.
+raptor/cluster_utils.py:116-122) are *salted* into deterministic sub-buckets
+``node_id % salt_bucket_count(...)``. The level below picks one of two
+regimes by Spark's own broadcast test (its optimized-plan ``sizeInBytes``
+against ``spark.sql.autoBroadcastJoinThreshold``):
+
+- a level under the bound (every coarse level: the top of the hierarchy is
+  metadata-scale) is gathered, salted and summarized in ONE task — no
+  pre-pass, no broadcast, no shuffle, so the level's commit is its only job;
+- a larger level is the explicit skew handling the north rule demands: the
+  salt map is tiny (only hot cells) and broadcast, and the member gather
+  shuffles on (cell, salt), so a hot cell's buckets go to different tasks and
+  the expensive summarize runs on bounded groups.
+
+Both regimes call one per-group summarizer and give bit-identical rows.
 
 ``tile_stats`` is A5 (per-level tile rollup → raster bands): pure JVM
 aggregations, no UDF.
 
-Determinism: each applyInPandas group sorts members by node_id before any
-float reduction, so results are independent of partitioning/parallelism.
+Determinism: each group's members are ordered by (node_id, text, x, y) before
+any float reduction, so results are independent of partitioning/parallelism.
 """
 
 from __future__ import annotations
 
+import logging
 import math
 
 import numpy as np
@@ -33,13 +43,21 @@ from ..kernels.embedder import DEFAULT_DIM
 from ..kernels.summarize import extractive_summary, get_text
 from ..kernels.textstats import portable_hash63
 from ..kernels.tokenizer import RegexTokenizer
+from ..session import plan_bytes_and_broadcast_bound
 from .core import batch_embedder
+
+logger = logging.getLogger(__name__)
 
 NODES_SCHEMA = (
     "node_id LONG, level INT, cell_id LONG, url STRING, chunk_idx INT, text STRING, "
     "embedding ARRAY<FLOAT>, x DOUBLE, y DOUBLE, children ARRAY<LONG>, "
     "token_count INT, n_leaves LONG"
 )
+_NODE_COLS = [
+    "node_id", "level", "cell_id", "url", "chunk_idx", "text",
+    "embedding", "x", "y", "children", "token_count", "n_leaves",
+]
+_MEMBER_COLS = ["node_id", "text", "x", "y"]
 
 
 def parent_cell(cell: F.Column, lattice: str) -> F.Column:
@@ -70,6 +88,22 @@ def _salt_map(nodes: DataFrame, parent_cell: F.Column, max_length_in_cluster: in
     )
 
 
+def _salted_groups(pdf: pd.DataFrame, max_length_in_cluster: int):
+    """The (cell, salt) groups of one whole level held in ``pdf``, as the
+    salted shuffle forms them: a hot cell's node goes to bucket
+    ``node_id % salt_bucket_count(...)``, a cold one to 0, and each group's
+    members are ordered as ``sort_array`` orders their structs."""
+    cells = pdf.groupby("parent_cell")["token_count"].agg(["sum", "size"])
+    buckets = {
+        cell: salt_bucket_count(tok, n, max_length_in_cluster) if tok > max_length_in_cluster else 1
+        for cell, tok, n in zip(cells.index, cells["sum"], cells["size"])
+    }
+    pdf = pdf.assign(salt=pdf["node_id"] % pdf["parent_cell"].map(buckets))
+    pdf = pdf.sort_values(["parent_cell", "salt", *_MEMBER_COLS])
+    for (cell, salt), g in pdf.groupby(["parent_cell", "salt"], sort=False):
+        yield cell, salt, g["node_id"], g["text"].tolist(), g["x"], g["y"], g["n_leaves"].sum()
+
+
 def build_parent_nodes(
     nodes: DataFrame,
     next_level: int,
@@ -82,21 +116,75 @@ def build_parent_nodes(
 ) -> DataFrame:
     """One parent node per (parent cell, salt bucket) of the given nodes.
 
-    Two-stage shape chosen for scale: the shuffle-side grouping is a pure JVM
-    hash aggregation (``collect_list`` of (node_id, text, x, y) structs,
-    sorted in-engine → partition-order independent), and the Python kernel
-    runs ONCE PER ARROW BATCH of grouped rows via ``mapInPandas`` — the
-    summary embeddings are computed vectorized across all groups in the batch
-    instead of one applyInPandas call (and one embed call) per group, which
-    is ~10× less Python overhead when cells are small.
+    A level under the broadcast bound runs in one task: its rows are
+    coalesced into one partition, and one ``mapInPandas`` call salts,
+    groups and summarizes them all. A larger level is gathered by a pure
+    JVM hash aggregation on (parent_cell, salt) (``collect_list`` of
+    (node_id, text, x, y) structs, sorted in-engine → partition-order
+    independent). Either way the Python kernel runs once per Arrow batch of
+    groups: the summary embeddings are computed vectorized across all
+    groups in the batch instead of one call per group.
 
     With >1 entry in ``models``, every parent also gets the full per-model
     ``embeddings`` map computed on its summary text (reference
     tree_builder.py:125-127: parent embeddings are re-embedded per model)."""
     embed, multi = batch_embedder(models, cluster_model, dim)
     pcell = parent_cell(F.col("cell_id"), lattice)
-    salt_df = F.broadcast(_salt_map(nodes, pcell, max_length_in_cluster))
+    schema = NODES_SCHEMA + (", embeddings MAP<STRING, ARRAY<FLOAT>>" if multi else "")
+    cols = _NODE_COLS + (["embeddings"] if multi else [])
+    tokenizer = RegexTokenizer()
 
+    def summarize(groups) -> pd.DataFrame:
+        """One parent row per (cell, salt, ids, texts, xs, ys, n_leaves)
+        group, its members in sorted order."""
+        rows = []
+        summaries = []
+        for cell, salt, ids, texts, xs, ys, n_leaves in groups:
+            summary = extractive_summary(get_text(texts), summarization_length, tokenizer)
+            summaries.append(summary)
+            cell, salt = int(cell), int(salt)
+            rows.append(
+                {
+                    "node_id": portable_hash63(f"L{next_level}|{cell}|{salt}"),
+                    "level": next_level,
+                    "cell_id": cell,
+                    "url": None,
+                    "chunk_idx": None,
+                    "text": summary,
+                    "x": float(np.mean(np.array(xs, dtype=np.float64))),
+                    "y": float(np.mean(np.array(ys, dtype=np.float64))),
+                    "children": sorted(int(i) for i in ids),
+                    "token_count": tokenizer.count(summary),
+                    "n_leaves": int(n_leaves),
+                }
+            )
+        vecs = embed(summaries)  # one vectorized call per model per batch
+        for i, row in enumerate(rows):
+            for name, col in vecs.items():
+                row[name] = col[i]
+        return pd.DataFrame(rows, columns=cols)
+
+    size, bound = plan_bytes_and_broadcast_bound(nodes)
+    if size <= bound:
+        logger.info(
+            "level %d summarized in one task: plan sizeInBytes %d <= autoBroadcastJoinThreshold %d",
+            next_level, size, bound,
+        )
+
+        def summarize_level(batches):
+            pdfs = [pdf for pdf in batches if not pdf.empty]
+            if pdfs:  # pd.concat refuses an empty list
+                groups = _salted_groups(pd.concat(pdfs, ignore_index=True), max_length_in_cluster)
+                yield summarize(groups)
+
+        level = nodes.select(*_MEMBER_COLS, "token_count", "n_leaves", pcell.alias("parent_cell"))
+        return level.coalesce(1).mapInPandas(summarize_level, schema)
+
+    logger.info(
+        "level %d gathered by a salted shuffle: plan sizeInBytes %d > autoBroadcastJoinThreshold %d",
+        next_level, size, bound,
+    )
+    salt_df = F.broadcast(_salt_map(nodes, pcell, max_length_in_cluster))
     staged = (
         nodes.withColumn("parent_cell", pcell)
         .join(salt_df, "parent_cell", "left")
@@ -108,54 +196,23 @@ def build_parent_nodes(
             ).otherwise(F.lit(0)),
         )
     )
-
     grouped = staged.groupBy("parent_cell", "salt").agg(
-        F.sort_array(F.collect_list(F.struct("node_id", "text", "x", "y"))).alias("members"),
+        F.sort_array(F.collect_list(F.struct(*_MEMBER_COLS))).alias("members"),
         F.sum("n_leaves").alias("n_leaves_sum"),
     )
 
-    tokenizer = RegexTokenizer()
-
     def summarize_batches(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            summaries = []
-            for _, r in pdf.iterrows():
-                members = r["members"]  # sorted by node_id (struct sort order)
-                texts = [m["text"] for m in members]
-                summary = extractive_summary(
-                    get_text(texts), summarization_length, tokenizer
+            if not pdf.empty:
+                yield summarize(
+                    (
+                        r.parent_cell, r.salt,
+                        *([m[c] for m in r.members] for c in _MEMBER_COLS),
+                        r.n_leaves_sum,
+                    )
+                    for r in pdf.itertuples(index=False)
                 )
-                summaries.append(summary)
-                cell, salt = int(r["parent_cell"]), int(r["salt"])
-                rows.append(
-                    {
-                        "node_id": portable_hash63(f"L{next_level}|{cell}|{salt}"),
-                        "level": next_level,
-                        "cell_id": cell,
-                        "url": None,
-                        "chunk_idx": None,
-                        "text": summary,
-                        "x": float(np.mean(np.array([m["x"] for m in members]))),
-                        "y": float(np.mean(np.array([m["y"] for m in members]))),
-                        "children": sorted(int(m["node_id"]) for m in members),
-                        "token_count": tokenizer.count(summary),
-                        "n_leaves": int(r["n_leaves_sum"]),
-                    }
-                )
-            cols = [
-                "node_id", "level", "cell_id", "url", "chunk_idx", "text",
-                "embedding", "x", "y", "children", "token_count", "n_leaves",
-            ]
-            vecs = embed(summaries)  # one vectorized call per model per batch
-            for i, row in enumerate(rows):
-                for name, col in vecs.items():
-                    row[name] = col[i]
-            yield pd.DataFrame(rows, columns=cols + (["embeddings"] if multi else []))
 
-    schema = NODES_SCHEMA + (", embeddings MAP<STRING, ARRAY<FLOAT>>" if multi else "")
     return grouped.mapInPandas(summarize_batches, schema)
 
 
@@ -284,6 +341,9 @@ def level_stats(nodes: DataFrame) -> DataFrame:
 
 
 def salt_bucket_count(tok_sum: int, n_members: int, max_length_in_cluster: int) -> int:
-    """Python twin of the salt sizing: a hot cell's node goes to bucket
-    ``node_id % salt_bucket_count(...)`` (for tests)."""
+    """The number of salt buckets of a hot cell (token sum over
+    ``max_length_in_cluster``): its node goes to bucket
+    ``node_id % salt_bucket_count(...)``. The one-task path of
+    ``build_parent_nodes`` sizes buckets with it; ``_salt_map`` is its Spark
+    twin."""
     return min(math.ceil(tok_sum / max_length_in_cluster), n_members)

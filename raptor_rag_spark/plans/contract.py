@@ -23,7 +23,6 @@ listed in QUERIES without an oracle → the driver records a rows-only check
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,25 +38,31 @@ from ..operators.knn import cell_pruned_knn, collapsed_knn, retrieval_context
 from ..operators.pipjoin import pip_join, soft_assignments
 from ..operators.rollup import level_stats, tile_stats, tile_vectorize
 from ..operators.traverse import traversal_retrieve
+from .contract_base import (  # noqa: F401  (re-exported for the registry's callers)
+    BM25_QUERIES,
+    DEC2,
+    DIM,
+    DUMP_DIR,
+    KDE_BW,
+    KDE_HOT_T,
+    KDE_RES,
+    PIP_POLYS,
+    _NODES_PQ,
+    _PAGES_PQ,
+    _PAGES_SQL,
+    _SCRATCH_ROOT,
+    _TREE_CACHE,
+    _dump_path,
+    _pages,
+    _pip_parity_sql,
+    _sql_bm25,
+    _sql_kde_heatmap,
+    _tree,
+    ld,
+    scratch_dir,
+)
 
-DIM = 64  # driver testdata embeddings dim (embeddings.parquet)
 DEC = "decimal(28,6)"
-DEC2 = "decimal(28,15)"
-
-
-def ld(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_SCRATCH_ROOT: list[tempfile.TemporaryDirectory] = []
-
-
-def scratch_dir(prefix: str) -> str:
-    """A new directory for a query's lake, index or bucketed tables, under
-    one root per process, which is deleted when the process exits."""
-    if not _SCRATCH_ROOT:
-        _SCRATCH_ROOT.append(tempfile.TemporaryDirectory(prefix="raptor_contract_", ignore_cleanup_errors=True))
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0].name)
 
 
 # --------------------------------------------------------------------------
@@ -1659,13 +1664,6 @@ WHERE ix + dx.v >= 0 AND ix + dx.v < {n} AND iy + dy.v >= 0 AND iy + dy.v < {n}
 """
 
 
-PIP_POLYS: list[tuple[int, list[list[float]]]] = [
-    (1, [[0.12, 0.11], [0.88, 0.15], [0.91, 0.87], [0.09, 0.83]]),
-    (2, [[0.02, 0.03], [0.51, 0.07], [0.48, 0.52], [0.04, 0.49]]),
-    (3, [[0.41, 0.42], [0.79, 0.33], [0.92, 0.81], [0.52, 0.71], [0.44, 0.63]]),
-]
-
-
 def q_pip_join(spark, sf_dir):
     """Exact ray-cast PIP join of projected points vs polygon rings (New-J)."""
     e = ld(spark, sf_dir, "embeddings")
@@ -1673,26 +1671,6 @@ def q_pip_join(spark, sf_dir):
     pts = e.select(F.col("vec_id").alias("node_id"), x.alias("x"), y.alias("y"))
     polys = spark.createDataFrame(PIP_POLYS, "cell_id long, ring array<array<double>>")
     return pip_join(pts, polys)
-
-
-def _pip_parity_sql(ring: list[list[float]]) -> str:
-    """Unrolled even-odd crossing test, same float ops as kernels.grid
-    point_in_polygon: ((xj-xi)*(y-yi))/(yj-yi)+xi, crossings XOR-folded."""
-    terms = []
-    m = len(ring)
-    j = m - 1
-    for i in range(m):
-        xi, yi = ring[i]
-        xj, yj = ring[j]
-        crosses = f"(({yi!r} > y) <> ({yj!r} > y))"
-        x_at_y = f"(({xj!r} - {xi!r}) * (y - {yi!r}) / ({yj!r} - {yi!r}) + {xi!r})"
-        terms.append(f"CASE WHEN {crosses} THEN (x < {x_at_y}) ELSE FALSE END")
-        j = i
-    # SQL comparisons don't chain; fold the XOR with explicit parens
-    out = terms[0]
-    for t in terms[1:]:
-        out = f"({out} <> {t})"
-    return out
 
 
 def _sql_pip_join() -> str:
@@ -1779,9 +1757,6 @@ SELECT doc_id, score, rank FROM (
 """
 
 
-BM25_QUERIES = [(0, "spark join merge sort"), (1, "customer order data"), (2, "window agg filter part")]
-
-
 def q_bm25_rank(spark, sf_dir):
     """Full-text BM25 ranking over the corpus: inverted-index postings +
     per-query top-k (webtext IR surface beyond the reference's lexical
@@ -1824,49 +1799,6 @@ def q_wand_rank(spark, sf_dir):
     docs = ld(spark, sf_dir, "documents").select("doc_id", "text")
     qs = spark.createDataFrame(BM25_QUERIES, "query_id INT, qtext STRING")
     return maxscore_rank(docs, qs, top_k=10, max_df_ratio=(9, 10))
-
-
-def _sql_bm25(top_k: int = 10, ratio: tuple[int, int] = (9, 10)) -> str:
-    from ..operators.ranking import B, K1
-
-    ws = G.words_sql("text")
-    qvals = ", ".join(f"({i}, '{t}')" for i, t in BM25_QUERIES)
-    contrib = (
-        f"{G.ln_sql('idf_arg')} * ((tf * {K1 + 1.0!r}) / "
-        f"(tf + {K1!r} * ({1.0 - B!r} + {B!r} * (dl / avgdl))))"
-    )
-    return f"""
-WITH words AS (SELECT doc_id, {ws} AS ws FROM documents),
-postings AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(ws) AS term FROM words) GROUP BY doc_id, term),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl_l FROM postings GROUP BY doc_id),
-stats AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n_docs, CAST(count(*) AS BIGINT) AS n_long,
-         CAST(sum(CAST(dl_l AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-  FROM dl),
-dfreq AS (
-  SELECT term, df FROM (SELECT term, CAST(count(*) AS BIGINT) AS df FROM postings GROUP BY term), stats
-  WHERE df * {ratio[1]} <= n_long * {ratio[0]}),
-qterms AS (
-  SELECT DISTINCT query_id, unnest({G.words_sql('qtext')}) AS term
-  FROM (VALUES {qvals}) q(query_id, qtext)),
-matched AS MATERIALIZED (
-  SELECT q.query_id, p.doc_id, CAST(p.tf AS DOUBLE) AS tf, CAST(l.dl_l AS DOUBLE) AS dl,
-         s.n_docs, s.avgdl,
-         ((s.n_docs - CAST(d.df AS DOUBLE) + 0.5) / (CAST(d.df AS DOUBLE) + 0.5) + 1.0) AS idf_arg
-  FROM postings p
-  JOIN qterms q USING (term) JOIN dfreq d USING (term)
-  CROSS JOIN stats s JOIN dl l ON p.doc_id = l.doc_id),
-scored AS (
-  SELECT query_id, doc_id,
-         CAST(sum(CAST({contrib} AS DECIMAL(28,15))) AS DOUBLE) AS score
-  FROM matched GROUP BY query_id, doc_id)
-SELECT query_id, doc_id, score, rank FROM (
-  SELECT query_id, doc_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM scored) WHERE rank <= {top_k}
-"""
 
 
 def q_ql_rank(spark, sf_dir):
@@ -1988,9 +1920,6 @@ def _sql_lm_score() -> str:
     return lm_scores_sql()
 
 
-KDE_RES, KDE_BW = 5, 0.05
-
-
 def q_kde_heatmap(spark, sf_dir):
     """Truncated-Gaussian KDE raster over the embedding plane (the heatmap
     layer of the geospatial recast). Bounded per-point fan-out + one groupBy;
@@ -2000,15 +1929,6 @@ def q_kde_heatmap(spark, sf_dir):
     e = ld(spark, sf_dir, "embeddings")
     x, y = G.xy_cols(F.col("embedding"), DIM)
     return kde_heatmap(e.select(x.alias("x"), y.alias("y")), res=KDE_RES, bandwidth=KDE_BW)
-
-
-def _sql_kde_heatmap() -> str:
-    from ..operators.heatmap import kde_heatmap_sql
-
-    vx, vy = G.xy_sql("embedding", DIM)
-    return kde_heatmap_sql(
-        f"SELECT {vx} AS x, {vy} AS y FROM embeddings", res=KDE_RES, bandwidth=KDE_BW
-    )
 
 
 def q_kde_focal(spark, sf_dir):
@@ -2247,9 +2167,6 @@ def _sql_collocations() -> str:
     from ..operators.textops import collocations_sql
 
     return collocations_sql()
-
-
-KDE_HOT_T = 1.5
 
 
 def q_kde_hotspots(spark, sf_dir):
@@ -2572,39 +2489,8 @@ def q_stream_sessionize(spark, sf_dir):
 # parquet-dump pattern; only gmm_cluster stays rows-only)
 # --------------------------------------------------------------------------
 
-_TREE_CACHE: dict[tuple[int, str], DataFrame] = {}
 QUERY_TEXTS = ["spark join merge sort", "customer order data", "window agg filter"]
 
-# The built tree passes through Python kernels (chunker/embedder), so DuckDB
-# cannot recompute it from the raw tables — but it CAN read the engine's own
-# parquet output. Each tree query therefore dumps the (deterministic) tree +
-# query embeddings under .tree_dumps/ and the oracle re-derives the query
-# result from those same bits with twin SQL — upgrading the tree retrieval /
-# rollup family from rows-only to exact checks (the dump is rewritten by the
-# Spark side of each driver run before the oracle reads it).
-DUMP_DIR = "/root/repo/.tree_dumps"
-
-
-def _dump_path(name: str, sf_dir: str) -> str:
-    import os
-
-    return os.path.join(DUMP_DIR, f"{os.path.basename(sf_dir.rstrip('/'))}_{name}")
-
-
-def _tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _TREE_CACHE:
-        from ..config import ClusterTreeConfig
-        from .build_tree import build_tree
-
-        docs = ld(spark, sf_dir, "documents")
-        cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=8)
-        tree = build_tree(docs, cfg)
-        path = _dump_path("nodes", sf_dir)
-        tree.write.mode("overwrite").parquet(path)
-        # read back: Spark queries and DuckDB oracles consume identical bits
-        _TREE_CACHE[key] = spark.read.parquet(path).cache()
-    return _TREE_CACHE[key]
 
 
 def _tree_queries(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.01") -> DataFrame:
@@ -2622,9 +2508,7 @@ def _tree_queries(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.01") ->
     return _TREE_CACHE[key]
 
 
-# oracles run at sf0.01 (the driver contract's compare scale)
-_NODES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_nodes/*.parquet')"
-_QUERIES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_queries/*.parquet')"
+_QUERIES_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_queries/*.parquet')"
 
 
 def _sql_collapsed_knn(
@@ -2801,7 +2685,7 @@ def _hex_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _TREE_CACHE[key]
 
 
-_HEXNODES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_hexnodes/*.parquet')"
+_HEXNODES_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_hexnodes/*.parquet')"
 
 
 def q_tree_hex_stats(spark, sf_dir):
@@ -3095,7 +2979,7 @@ FROM res GROUP BY query_id
 """
 
 
-_GMM_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_gmm/*.parquet')"
+_GMM_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_gmm/*.parquet')"
 
 
 def _sql_gmm_cluster(threshold: float = 0.1) -> str:
@@ -3132,22 +3016,6 @@ SELECT ev.group_key, ev.node_id, ev.cluster_id, nc.n_clusters
 FROM ev JOIN tot USING (group_key, node_id, g) JOIN nc USING (group_key)
 WHERE ev.e > {threshold!r} * tot.tot
 """
-
-
-_PAGES_PQ = "read_parquet('/root/repo/.tree_dumps/pages/*.parquet')"
-
-
-def _pages(spark: SparkSession) -> DataFrame:
-    """Synthetic pages, dumped + read back so the oracle sees identical bits
-    (same pattern as the tree dump)."""
-    key = (id(spark), "pages")
-    if key not in _TREE_CACHE:
-        from ..sources.pages import generate_pages
-
-        path = f"{DUMP_DIR}/pages"
-        generate_pages(spark, 200, partitions=8).write.mode("overwrite").parquet(path)
-        _TREE_CACHE[key] = spark.read.parquet(path).cache()
-    return _TREE_CACHE[key]
 
 
 def q_pages_extract(spark, sf_dir):
@@ -3220,7 +3088,6 @@ WHERE h.avg_tokens >= 40.0 AND p.lang = 'en'
 # URL canonicalization, link-graph extraction (operators/curation.py)
 # --------------------------------------------------------------------------
 
-_PAGES_SQL = f"SELECT * FROM {_PAGES_PQ}"
 
 
 def q_para_dedup(spark, sf_dir):

@@ -7,27 +7,27 @@ KDE-raster / scan-statistics / geostatistics / link-graph / lakehouse /
 trajectory query+oracle pairs, and plans/contract.py re-imports every public
 and ``_sql_*`` name so the registry and all external callers are unchanged.
 
-NOTE: import plans.contract, not this module directly — it is populated as
-part of contract's own import (shared helpers come from the contract
-namespace mid-initialization, the same late-import pattern the registry
-uses).
+Shared helpers come from ``plans/contract_base.py``, so this module can be
+imported on its own.
 """
 
 from __future__ import annotations
 
-from .contract import (  # noqa: F401  (shared helpers; see module docstring)
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from ..functions import sqlgen as G
+from ..operators import dedup as D
+from ..operators import similarity as S
+from ..operators.pipjoin import pip_join
+from .contract_base import (
     BM25_QUERIES,
-    D,
     DEC2,
     DIM,
-    F,
-    G,
     KDE_BW,
     KDE_HOT_T,
     KDE_RES,
     PIP_POLYS,
-    S,
-    Window,
     _NODES_PQ,
     _PAGES_PQ,
     _PAGES_SQL,
@@ -37,7 +37,6 @@ from .contract import (  # noqa: F401  (shared helpers; see module docstring)
     _sql_kde_heatmap,
     _tree,
     ld,
-    pip_join,
     scratch_dir,
 )
 

@@ -867,10 +867,6 @@ class _RefsMixin:
 
 
 # graft the mixin (kept separate so the core class above stays readable)
-class LakeTableWithRefs(_RefsMixin, LakeTable):
-    pass
-
-
 for _m in ("create_tag", "create_branch", "ref_snapshot", "read_ref",
            "append_to_branch", "publish"):
     setattr(LakeTable, _m, getattr(_RefsMixin, _m))

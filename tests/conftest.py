@@ -8,6 +8,7 @@ local[4] with AQE + Arrow enabled (the bench runs local[8]/local[32]).
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -121,3 +122,17 @@ class SparkJobs:
 def spark_jobs(spark):
     """``with spark_jobs() as jobs: ...`` then ``len(jobs)``."""
     return lambda: SparkJobs(spark)
+
+
+@contextmanager
+def spark_plan_only(spark):
+    """A broadcast bound of -1 inside the block: every question runs the
+    Spark plan (the tree stays off the driver) and every tree level is
+    gathered by the salted shuffle."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

@@ -1,9 +1,8 @@
 """RetrievalAugmentation facade tests — mirror the reference lifecycle
 behaviors (raptor/retrieval_augmentation.py guards + retrieve shapes)."""
 
-from contextlib import contextmanager
-
 import pytest
+from conftest import spark_plan_only
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.api import RetrievalAugmentation
@@ -12,19 +11,6 @@ from raptor_rag_spark.config import ClusterTreeConfig
 pytestmark = pytest.mark.spark
 
 SF = "/root/testdata/sf0.001"
-
-
-@contextmanager
-def spark_plan_only(spark):
-    """Every question runs the Spark plan: a broadcast bound of -1 keeps
-    the tree off the driver."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def both_paths(spark, fn):

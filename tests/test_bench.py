@@ -72,3 +72,24 @@ def test_registry_query_tables_are_removed_at_exit(tmp_path):
     root = out.stdout.strip().splitlines()[-1]
     assert os.path.dirname(root) == str(tmp)
     assert list(tmp.iterdir()) == []
+
+
+def test_contract_modules_import_in_either_order():
+    """The registry's spatial twins import on their own, in a fresh process,
+    before or after the registry itself, and give the registry the same
+    queries either way."""
+    probe = (
+        "import importlib, sys\n"
+        "first = importlib.import_module(sys.argv[1])\n"
+        "from raptor_rag_spark.plans import contract\n"
+        "print(len(contract.QUERIES), contract.COMPACT_RES)\n"
+    )
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", probe, f"raptor_rag_spark.plans.{first}"],
+            cwd=ROOT, env=env, capture_output=True, text=True, check=True,
+        ).stdout
+        for first in ("contract_spatial", "contract")
+    ]
+    assert outs[0] == outs[1] and outs[0].split()[1] == "4", outs

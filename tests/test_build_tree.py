@@ -4,7 +4,10 @@ Mirrors the reference's cluster_tree_builder contracts (stop rule, children
 coverage, per-level layering) plus the north rule's resume requirement.
 """
 
+from contextlib import nullcontext
+
 import pytest
+from conftest import spark_plan_only
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import ClusterTreeConfig
@@ -210,7 +213,13 @@ def test_hot_cell_salting(spark, docs):
     # force salting: tiny max_length_in_cluster makes every cell hot
     from raptor_rag_spark.operators.core import leaf_nodes
 
-    leaves = leaf_nodes(docs, max_tokens=64, res=3)
+    leaves = leaf_nodes(docs, max_tokens=64, res=3).localCheckpoint(eager=True)
+    for bound in (nullcontext(), spark_plan_only(spark)):  # one task, salted shuffle
+        with bound:
+            _check_hot_cell_salting(leaves)
+
+
+def _check_hot_cell_salting(leaves):
     parents_salted = build_parent_nodes(leaves, 1, max_length_in_cluster=100)
     parents_plain = build_parent_nodes(leaves, 1, max_length_in_cluster=10**9)
     n_salted, n_plain = parents_salted.count(), parents_plain.count()
@@ -244,9 +253,10 @@ def test_hot_cell_salting(spark, docs):
 
 
 def test_hot_cell_buckets_spread_over_tasks(spark, docs):
-    """Salting must spread a hot cell's work, not only cap its group size:
-    with nine in ten leaves in one cell, that cell's salt buckets are
-    summarized in more than one task (shuffle partition)."""
+    """Over the broadcast bound, salting must spread a hot cell's work, not
+    only cap its group size: with nine in ten leaves in one cell, that
+    cell's salt buckets are summarized in more than one task (shuffle
+    partition)."""
     from raptor_rag_spark.kernels.grid import cell_parent
     from raptor_rag_spark.operators.core import leaf_nodes
 
@@ -255,7 +265,8 @@ def test_hot_cell_buckets_spread_over_tasks(spark, docs):
     skewed = leaves.withColumn(
         "cell_id", F.when(F.col("node_id") % 10 != 0, F.lit(hot_cell)).otherwise(F.col("cell_id"))
     )
-    parents = build_parent_nodes(skewed, 1, max_length_in_cluster=100)
+    with spark_plan_only(spark):  # over the bound: the salted shuffle
+        parents = build_parent_nodes(skewed, 1, max_length_in_cluster=100)
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")  # else AQE folds this tiny input into one task
@@ -267,6 +278,62 @@ def test_hot_cell_buckets_spread_over_tasks(spark, docs):
     assert len(tasks) > 4  # the hot cell is salted into several buckets
     assert len(set(tasks)) > 1
     leaves.unpersist()
+
+
+@pytest.mark.parametrize("lattice", ["quad", "hex"])
+@pytest.mark.parametrize("max_length_in_cluster", [3500, 100])
+def test_one_task_levels_match_salted_shuffle(spark, docs, lattice, max_length_in_cluster):
+    """A tree whose levels are all under the broadcast bound (each gathered
+    and summarized in one task) is row-for-row, bit-for-bit the tree the
+    salted shuffle builds at bound -1: every column, the per-model
+    ``embeddings`` map included, with hot cells salted at 100 tokens."""
+    cfg = ClusterTreeConfig(
+        max_tokens=64, num_layers=3, max_resolution=6, lattice=lattice,
+        max_length_in_cluster=max_length_in_cluster,
+        embedding_models={"default": HashNgramEmbeddingModel(), "narrow": HashNgramEmbeddingModel(dim=16)},
+    )
+
+    def rows():
+        tree = build_tree(docs, cfg).withColumn("embeddings", F.map_entries("embeddings"))
+        return tree.toPandas().sort_values("node_id").reset_index(drop=True)
+
+    one_task = rows()
+    with spark_plan_only(spark):
+        shuffled = rows()
+    assert one_task["level"].max() == 3
+    assert list(one_task.columns) == list(shuffled.columns)
+    for c in one_task.columns:
+        assert one_task[c].map(repr).tolist() == shuffled[c].map(repr).tolist(), c
+
+
+def test_empty_level_gives_no_parents_on_both_paths(spark, docs):
+    """A level with no rows gives no parent on either path; the one-task
+    path sees no Arrow batch at all."""
+    from raptor_rag_spark.operators.core import leaf_nodes
+
+    leaves = leaf_nodes(docs, max_tokens=64, res=3).localCheckpoint(eager=True)
+    empty = leaves.filter(F.col("node_id") < F.lit(0) - F.col("token_count"))
+    assert build_parent_nodes(empty, 1).count() == 0
+    with spark_plan_only(spark):
+        assert build_parent_nodes(empty, 1).count() == 0
+
+
+def test_small_parent_level_commits_in_one_job(spark, docs, tmp_path, spark_jobs, monkeypatch):
+    """A checkpointed build of levels under the broadcast bound commits each
+    parent level in one Spark job: the level's write, with no salt-map
+    pre-pass, broadcast or member shuffle before it."""
+    real_write, jobs_per_level = TreeCheckpoint.write_level, {}
+
+    def spy_write(self, df, level, extra=None):
+        with spark_jobs() as jobs:
+            out = real_write(self, df, level, extra)
+        jobs_per_level[level] = len(jobs)
+        return out
+
+    monkeypatch.setattr(TreeCheckpoint, "write_level", spy_write)
+    build_tree(docs, ClusterTreeConfig(**CFG), checkpoint_dir=str(tmp_path / "tree"))
+    parents = {lv: n for lv, n in jobs_per_level.items() if lv > 0}
+    assert len(parents) >= 2 and set(parents.values()) == {1}, jobs_per_level
 
 
 def test_tile_and_level_stats(tree):
@@ -380,9 +447,11 @@ def test_update_tree_matches_full_rebuild(spark):
             for r in rows
         )
 
-    full = build_tree(docs.filter("doc_id < 40"), cfg)
-    updated = update_tree(build_tree(base, cfg), extra, cfg)
-    assert sig(updated) == sig(full)
+    for bound in (nullcontext(), spark_plan_only(spark)):  # one task, salted shuffle
+        with bound:
+            full = build_tree(docs.filter("doc_id < 40"), cfg)
+            updated = update_tree(build_tree(base, cfg), extra, cfg)
+            assert sig(updated) == sig(full)
     # the stock config and the same model named explicitly build one tree
     explicit = ClusterTreeConfig(
         max_tokens=64, num_layers=3, max_resolution=6,
@@ -611,6 +680,8 @@ def test_update_tree_hex_lattice_matches_rebuild(spark):
             for r in rows
         )
 
-    full = build_tree(docs.filter("doc_id < 40"), cfg)
-    updated = update_tree(build_tree(base, cfg), extra, cfg)
-    assert sig(updated) == sig(full)
+    for bound in (nullcontext(), spark_plan_only(spark)):  # one task, salted shuffle
+        with bound:
+            full = build_tree(docs.filter("doc_id < 40"), cfg)
+            updated = update_tree(build_tree(base, cfg), extra, cfg)
+            assert sig(updated) == sig(full)

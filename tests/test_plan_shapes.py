@@ -137,10 +137,13 @@ def test_leaf_pipeline_single_python_pass(spark, pages_pq):
 
 
 def test_parent_level_gathers_members_on_cell_and_salt(spark, pages_pq):
-    """The member gather of a tree level shuffles on (parent_cell, salt), so
-    a hot cell's salt buckets hash to different tasks; only the tiny
-    per-cell salt map is aggregated on parent_cell alone and broadcast."""
+    """Over the broadcast bound (pinned to -1 here), the member gather of a
+    tree level shuffles on (parent_cell, salt), so a hot cell's salt buckets
+    hash to different tasks; only the tiny per-cell salt map is aggregated
+    on parent_cell alone and broadcast."""
     import re
+
+    from conftest import spark_plan_only
 
     from raptor_rag_spark.operators.core import leaf_nodes
     from raptor_rag_spark.operators.rollup import build_parent_nodes
@@ -148,9 +151,29 @@ def test_parent_level_gathers_members_on_cell_and_salt(spark, pages_pq):
     docs = spark.read.parquet(pages_pq).select(
         F.abs(F.hash("url")).cast("long").alias("doc_id"), "text"
     )
-    plan = explain_str(build_parent_nodes(leaf_nodes(docs, "doc_id", "text", 64, 8), 1), "simple")
+    with spark_plan_only(spark):
+        parents = build_parent_nodes(leaf_nodes(docs, "doc_id", "text", 64, 8), 1)
+    plan = explain_str(parents, "simple")
     assert re.search(r"Exchange hashpartitioning\(parent_cell#\d+L, salt#\d+, ", plan), plan
     assert "BroadcastExchange" in plan, plan
+
+
+def test_small_parent_level_runs_in_one_task_without_exchange(spark, pages_pq):
+    """Under the broadcast bound a tree level is gathered and summarized in
+    one task: one MapInPandas over a coalesced scan, no Exchange of any
+    kind (no salt-map broadcast, no member shuffle)."""
+    from raptor_rag_spark.operators.core import leaf_nodes
+    from raptor_rag_spark.operators.rollup import build_parent_nodes
+
+    docs = spark.read.parquet(pages_pq).select(
+        F.abs(F.hash("url")).cast("long").alias("doc_id"), "text"
+    )
+    leaves = leaf_nodes(docs, "doc_id", "text", 64, 8).localCheckpoint(eager=True)
+    parents = build_parent_nodes(leaves, 1)
+    plan = explain_str(parents, "simple")
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1 and "Coalesce 1" in plan, plan
+    assert parents.rdd.getNumPartitions() == 1
 
 
 def test_phrase_search_broadcasts_phrases(spark, pages_pq):
