@@ -43,7 +43,7 @@ from .operators.core import with_embedding
 from .operators.knn import collapsed_knn, retrieval_context
 from .operators.traverse import traversal_retrieve
 from .plans.build_tree import build_tree, load_tree
-from .session import plan_bytes_and_broadcast_bound
+from .session import broadcast_bound
 from .sources.checkpoint import TreeCheckpoint
 
 logger = logging.getLogger(__name__)
@@ -97,6 +97,7 @@ class RetrievalAugmentation:
         self._levels_res: dict[int, int] | None = None
         self._cell_counts: DataFrame | None = None
         self._resident: ResidentTree | None = None
+        self._tree_bytes: int | None = None
         self._over_bound_logged = False
 
     def _resident_tree(self, model: str | None) -> ResidentTree | None:
@@ -105,12 +106,15 @@ class RetrievalAugmentation:
         ``spark.sql.autoBroadcastJoinThreshold``: the statistic and bound
         Spark itself uses to collect a relation for a broadcast. Reading
         both runs no job; a bound of -1 keeps every question on Spark."""
-        size, bound = plan_bytes_and_broadcast_bound(self._tree)
-        if size > bound:
+        if self._tree_bytes is None:
+            stats = self._tree._jdf.queryExecution().optimizedPlan().stats()
+            self._tree_bytes = int(stats.sizeInBytes())
+        bound = broadcast_bound(self.spark)
+        if self._tree_bytes > bound:
             if not self._over_bound_logged:
                 logger.info(
                     "tree stays on Spark: plan sizeInBytes %d > autoBroadcastJoinThreshold %d",
-                    size, bound,
+                    self._tree_bytes, bound,
                 )
                 self._over_bound_logged = True
             return None
@@ -126,7 +130,7 @@ class RetrievalAugmentation:
             self._max_level = max(self._levels_res, default=None)
             logger.info(
                 "resident tree loaded: %d rows, %d Arrow bytes, plan sizeInBytes %d, %.0f ms",
-                table.num_rows, table.nbytes, size,
+                table.num_rows, table.nbytes, self._tree_bytes,
                 (time.perf_counter() - t0) * 1e3,
             )
         return self._resident

@@ -8,8 +8,10 @@ embedding, children = sorted member ids. Hot cells (token sum >
 max_length_in_cluster, reference's recluster gate at
 raptor/cluster_utils.py:116-122) are *salted* into deterministic sub-buckets
 ``node_id % salt_bucket_count(...)``. The level below picks one of two
-regimes by Spark's own broadcast test (its optimized-plan ``sizeInBytes``
-against ``spark.sql.autoBroadcastJoinThreshold``):
+regimes by its measured size: the bytes its members carry into the gather
+(``member_bytes``, summed by the job that committed the level) against
+``spark.sql.autoBroadcastJoinThreshold``, the bound under which Spark itself
+collects a relation:
 
 - a level under the bound (every coarse level: the top of the hierarchy is
   metadata-scale) is gathered, salted and summarized in ONE task — no
@@ -43,7 +45,7 @@ from ..kernels.embedder import DEFAULT_DIM
 from ..kernels.summarize import extractive_summary, get_text
 from ..kernels.textstats import portable_hash63
 from ..kernels.tokenizer import RegexTokenizer
-from ..session import plan_bytes_and_broadcast_bound
+from ..session import broadcast_bound
 from .core import batch_embedder
 
 logger = logging.getLogger(__name__)
@@ -58,6 +60,16 @@ _NODE_COLS = [
     "embedding", "x", "y", "children", "token_count", "n_leaves",
 ]
 _MEMBER_COLS = ["node_id", "text", "x", "y"]
+_GATHER_COLS = [*_MEMBER_COLS, "token_count", "n_leaves"]  # and parent_cell
+
+
+def member_bytes() -> F.Column:
+    """The bytes one node carries into its parent level's gather: its text's
+    UTF-8 bytes plus 8 for each other gathered column (node_id, x, y,
+    token_count, n_leaves and the parent cell). Summed over a level, it is
+    the measured size ``build_parent_nodes`` holds against the broadcast
+    bound."""
+    return F.octet_length("text") + F.lit(48)
 
 
 def parent_cell(cell: F.Column, lattice: str) -> F.Column:
@@ -113,17 +125,21 @@ def build_parent_nodes(
     models: dict | None = None,
     cluster_model: str = "default",
     lattice: str = "quad",
+    level_bytes: int | None = None,
 ) -> DataFrame:
     """One parent node per (parent cell, salt bucket) of the given nodes.
 
-    A level under the broadcast bound runs in one task: its rows are
-    coalesced into one partition, and one ``mapInPandas`` call salts,
-    groups and summarizes them all. A larger level is gathered by a pure
-    JVM hash aggregation on (parent_cell, salt) (``collect_list`` of
-    (node_id, text, x, y) structs, sorted in-engine → partition-order
-    independent). Either way the Python kernel runs once per Arrow batch of
-    groups: the summary embeddings are computed vectorized across all
-    groups in the batch instead of one call per group.
+    ``level_bytes`` is the nodes' ``member_bytes`` sum: the tree build
+    passes the figure the level's commit observed; without it, one job
+    measures it here. A level whose sum is at most the broadcast bound runs
+    in one task: its rows are coalesced into one partition, and one
+    ``mapInPandas`` call salts, groups and summarizes them all. A larger
+    level is gathered by a pure JVM hash aggregation on (parent_cell, salt)
+    (``collect_list`` of (node_id, text, x, y) structs, sorted in-engine →
+    partition-order independent). Either way the Python kernel runs once
+    per Arrow batch of groups: the summary embeddings are computed
+    vectorized across all groups in the batch instead of one call per
+    group.
 
     With >1 entry in ``models``, every parent also gets the full per-model
     ``embeddings`` map computed on its summary text (reference
@@ -164,11 +180,13 @@ def build_parent_nodes(
                 row[name] = col[i]
         return pd.DataFrame(rows, columns=cols)
 
-    size, bound = plan_bytes_and_broadcast_bound(nodes)
-    if size <= bound:
+    if level_bytes is None:
+        level_bytes = nodes.select(F.sum(member_bytes())).first()[0] or 0
+    bound = broadcast_bound(nodes.sparkSession)
+    if level_bytes <= bound:
         logger.info(
-            "level %d summarized in one task: plan sizeInBytes %d <= autoBroadcastJoinThreshold %d",
-            next_level, size, bound,
+            "level %d summarized in one task: member bytes %d <= autoBroadcastJoinThreshold %d",
+            next_level, level_bytes, bound,
         )
 
         def summarize_level(batches):
@@ -177,12 +195,12 @@ def build_parent_nodes(
                 groups = _salted_groups(pd.concat(pdfs, ignore_index=True), max_length_in_cluster)
                 yield summarize(groups)
 
-        level = nodes.select(*_MEMBER_COLS, "token_count", "n_leaves", pcell.alias("parent_cell"))
+        level = nodes.select(*_GATHER_COLS, pcell.alias("parent_cell"))
         return level.coalesce(1).mapInPandas(summarize_level, schema)
 
     logger.info(
-        "level %d gathered by a salted shuffle: plan sizeInBytes %d > autoBroadcastJoinThreshold %d",
-        next_level, size, bound,
+        "level %d gathered by a salted shuffle: member bytes %d > autoBroadcastJoinThreshold %d",
+        next_level, level_bytes, bound,
     )
     salt_df = F.broadcast(_salt_map(nodes, pcell, max_length_in_cluster))
     staged = (

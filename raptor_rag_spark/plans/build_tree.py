@@ -16,8 +16,9 @@ One level loop (``_grow``, inherently iterative, like Spark's own iterative
 algorithms) runs a build, a resumed build and an incremental update; they
 differ only in the step that makes a level from the one below — a full
 build is the update in which every cell is dirty. Each level is committed
-by one Spark job that also observes the level's row count for the stop
-rule: checkpointed, the level's write (reading it back runs no job);
+by one Spark job that also observes the level's row count, for the stop
+rule, and its ``member_bytes`` sum, which picks how the next level gathers
+it: checkpointed, the level's write (reading it back runs no job);
 otherwise an eager ``localCheckpoint``, which truncates the lineage and
 registers no cached plan in the SparkSession. Metrics are appended once, at
 the end.
@@ -28,12 +29,12 @@ from __future__ import annotations
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ClusterTreeConfig
 from ..operators.core import leaf_nodes
-from ..operators.rollup import build_parent_nodes, parent_cell
+from ..operators.rollup import build_parent_nodes, member_bytes, parent_cell
 from ..sources.checkpoint import TreeCheckpoint
 from ..sources.metrics import MetricsTable
 
@@ -53,40 +54,58 @@ def _leaves(docs: DataFrame, cfg: ClusterTreeConfig, id_col: str, text_col: str)
     )
 
 
-def _parents(nodes: DataFrame, level: int, cfg: ClusterTreeConfig) -> DataFrame:
+def _parents(nodes: DataFrame, level: int, cfg: ClusterTreeConfig, size: int) -> DataFrame:
     return build_parent_nodes(
         nodes,
         next_level=level,
         summarization_length=cfg.summarization_length,
         max_length_in_cluster=cfg.max_length_in_cluster,
+        level_bytes=size,
         **_operator_kwargs(cfg),
     )
 
 
+def _sizes() -> list[Column]:
+    """A level's row count (the stop rule) and ``member_bytes`` sum (how its
+    parent level is gathered)."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.sum(member_bytes()), F.lit(0)).alias("bytes"),
+    ]
+
+
 def _commit(
     df: DataFrame, level: int, ckpt: TreeCheckpoint | None = None, extra: dict | None = None
-) -> tuple[DataFrame, int]:
-    """Materialize one level in one Spark job; returns it and its row count,
-    observed by that same job."""
-    if ckpt:
-        rows = ckpt.write_level(df, level, extra=extra).rows
-        return ckpt.read_level(df.sparkSession, level), rows
+) -> tuple[DataFrame, int, int]:
+    """Materialize one level in one Spark job; returns it, its row count and
+    its ``member_bytes`` sum, observed by that same job."""
     observed = Observation()
-    df = df.observe(observed, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    return df, observed.get["rows"]
+    df = df.observe(observed, *_sizes())
+    if ckpt:
+        ckpt.write_level(df, level, extra=extra)
+        df = ckpt.read_level(df.sparkSession, level)
+    else:
+        df = df.localCheckpoint(eager=True)
+    return df, observed.get["rows"], observed.get["bytes"]
 
 
 def _grow(
-    cfg: ClusterTreeConfig, levels: list[DataFrame], rows: int, step, ckpt: TreeCheckpoint | None = None
+    cfg: ClusterTreeConfig,
+    levels: list[DataFrame],
+    rows: int,
+    size: int,
+    step,
+    ckpt: TreeCheckpoint | None = None,
 ) -> list[DataFrame]:
     """RAPTOR's level loop: on top of the committed ``levels``, the last one
-    holding ``rows`` nodes, commit ``step(level, below)`` one resolution
-    coarser at a time until the stop rule fires."""
+    holding ``rows`` nodes of ``size`` member bytes, commit
+    ``step(level, below, size)`` one resolution coarser at a time until the
+    stop rule fires."""
     for level in range(len(levels), cfg.num_layers + 1):
         res = cfg.max_resolution - level
         if rows <= cfg.reduction_dimension + 1 or res < 0:
             break  # reference stop rule (cluster_tree_builder.py:91-94)
-        below, rows = _commit(step(level, levels[-1]), level, ckpt, {"res": res})
+        below, rows, size = _commit(step(level, levels[-1], size), level, ckpt, {"res": res})
         levels.append(below)
     return levels
 
@@ -118,12 +137,15 @@ def build_tree(
     start = ckpt.resume_level() if ckpt else 0
     if start:
         levels = [ckpt.read_level(spark, lv) for lv in range(start)]
-        rows = ckpt.manifest(start - 1)["rows"]
+        # its manifest keeps its rows but not its bytes: one job measures both
+        rows, size = levels[-1].agg(*_sizes()).first()
     else:
         extra = {"stage": "leaves", "res": cfg.max_resolution}
-        leaves, rows = _commit(_leaves(docs, cfg, id_col, text_col), 0, ckpt, extra)
+        leaves, rows, size = _commit(_leaves(docs, cfg, id_col, text_col), 0, ckpt, extra)
         levels = [leaves]
-    levels = _grow(cfg, levels, rows, lambda level, below: _parents(below, level, cfg), ckpt)
+    levels = _grow(
+        cfg, levels, rows, size, lambda level, below, size: _parents(below, level, cfg, size), ckpt
+    )
 
     if ckpt:
         ckpt.mark_complete(len(levels))
@@ -182,22 +204,27 @@ def update_tree(
     # per level (kept branch + level filter); untruncated, each level's plan
     # re-embeds the whole build lineage and a 1% update runs slower than a
     # full rebuild (150 s vs 10 s at sf0.01). The same job observes the base
-    # leaf count and top level, so the leaf level is not copied again
+    # leaf count, member bytes and top level, so the leaf level is not copied
+    # again
     base = Observation()
+    leaf = F.col("level") == 0
     tree = tree.observe(
-        base, F.count(F.when(F.col("level") == 0, 1)).alias("rows"), F.max("level").alias("top")
+        base,
+        F.count(F.when(leaf, 1)).alias("rows"),
+        F.coalesce(F.sum(F.when(leaf, member_bytes())), F.lit(0)).alias("bytes"),
+        F.max("level").alias("top"),
     ).localCheckpoint(eager=True)
-    new_leaves, new_rows = _commit(_leaves(new_docs, cfg, id_col, text_col), 0)
+    new_leaves, new_rows, new_bytes = _commit(_leaves(new_docs, cfg, id_col, text_col), 0)
     leaves = tree.filter(F.col("level") == 0).unionByName(new_leaves)
     # a base tree shallower than the union build (the stop rule is monotone
     # in corpus size) keeps no node above base_max: those levels are all dirty
     base_max = base.get["top"] or 0
     dirty = new_leaves.select(F.col("cell_id").alias("dirty_cell"))
 
-    def step(level: int, below: DataFrame) -> DataFrame:
+    def step(level: int, below: DataFrame, size: int) -> DataFrame:
         nonlocal dirty
         if level > base_max:
-            return _parents(below, level, cfg)
+            return _parents(below, level, cfg, size)
         # one-column DataFrame of this level's cells with a new descendant;
         # eager localCheckpoint keeps each level's plan O(1), not O(level)
         # distincts
@@ -213,6 +240,8 @@ def update_tree(
         kept = tree.filter(F.col("level") == level).join(
             cells, F.col("cell_id") == F.col("dirty_cell"), "left_anti"
         )
-        return kept.unionByName(_parents(affected, level, cfg))
+        # the level below bounds the affected nodes' bytes
+        return kept.unionByName(_parents(affected, level, cfg, size))
 
-    return _union(_grow(cfg, [leaves], base.get["rows"] + new_rows, step))
+    rows, size = base.get["rows"] + new_rows, base.get["bytes"] + new_bytes
+    return _union(_grow(cfg, [leaves], rows, size, step))

@@ -42,22 +42,14 @@ from .contract_base import (  # noqa: F401  (re-exported for the registry's call
     BM25_QUERIES,
     DEC2,
     DIM,
-    DUMP_DIR,
     KDE_BW,
     KDE_HOT_T,
     KDE_RES,
     PIP_POLYS,
-    _NODES_PQ,
-    _PAGES_PQ,
-    _PAGES_SQL,
     _SCRATCH_ROOT,
-    _TREE_CACHE,
-    _dump_path,
-    _pages,
     _pip_parity_sql,
     _sql_bm25,
     _sql_kde_heatmap,
-    _tree,
     ld,
     scratch_dir,
 )
@@ -2489,8 +2481,39 @@ def q_stream_sessionize(spark, sf_dir):
 # parquet-dump pattern; only gmm_cluster stays rows-only)
 # --------------------------------------------------------------------------
 
+_TREE_CACHE: dict[tuple[int, str], DataFrame] = {}
 QUERY_TEXTS = ["spark join merge sort", "customer order data", "window agg filter"]
 
+# The built tree passes through Python kernels (chunker/embedder), so DuckDB
+# cannot recompute it from the raw tables — but it CAN read the engine's own
+# parquet output. Each tree query therefore dumps the (deterministic) tree +
+# query embeddings under .tree_dumps/ and the oracle re-derives the query
+# result from those same bits with twin SQL — upgrading the tree retrieval /
+# rollup family from rows-only to exact checks (the dump is rewritten by the
+# Spark side of each driver run before the oracle reads it).
+DUMP_DIR = "/root/repo/.tree_dumps"
+
+
+def _dump_path(name: str, sf_dir: str) -> str:
+    import os
+
+    return os.path.join(DUMP_DIR, f"{os.path.basename(sf_dir.rstrip('/'))}_{name}")
+
+
+def _tree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (id(spark), sf_dir)
+    if key not in _TREE_CACHE:
+        from ..config import ClusterTreeConfig
+        from .build_tree import build_tree
+
+        docs = ld(spark, sf_dir, "documents")
+        cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=8)
+        tree = build_tree(docs, cfg)
+        path = _dump_path("nodes", sf_dir)
+        tree.write.mode("overwrite").parquet(path)
+        # read back: Spark queries and DuckDB oracles consume identical bits
+        _TREE_CACHE[key] = spark.read.parquet(path).cache()
+    return _TREE_CACHE[key]
 
 
 def _tree_queries(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.01") -> DataFrame:
@@ -2508,7 +2531,9 @@ def _tree_queries(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.01") ->
     return _TREE_CACHE[key]
 
 
-_QUERIES_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_queries/*.parquet')"
+# oracles run at sf0.01 (the driver contract's compare scale)
+_NODES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_nodes/*.parquet')"
+_QUERIES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_queries/*.parquet')"
 
 
 def _sql_collapsed_knn(
@@ -2685,7 +2710,7 @@ def _hex_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _TREE_CACHE[key]
 
 
-_HEXNODES_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_hexnodes/*.parquet')"
+_HEXNODES_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_hexnodes/*.parquet')"
 
 
 def q_tree_hex_stats(spark, sf_dir):
@@ -2979,7 +3004,7 @@ FROM res GROUP BY query_id
 """
 
 
-_GMM_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_gmm/*.parquet')"
+_GMM_PQ = "read_parquet('/root/repo/.tree_dumps/sf0.01_gmm/*.parquet')"
 
 
 def _sql_gmm_cluster(threshold: float = 0.1) -> str:
@@ -3016,6 +3041,22 @@ SELECT ev.group_key, ev.node_id, ev.cluster_id, nc.n_clusters
 FROM ev JOIN tot USING (group_key, node_id, g) JOIN nc USING (group_key)
 WHERE ev.e > {threshold!r} * tot.tot
 """
+
+
+_PAGES_PQ = "read_parquet('/root/repo/.tree_dumps/pages/*.parquet')"
+
+
+def _pages(spark: SparkSession) -> DataFrame:
+    """Synthetic pages, dumped + read back so the oracle sees identical bits
+    (same pattern as the tree dump)."""
+    key = (id(spark), "pages")
+    if key not in _TREE_CACHE:
+        from ..sources.pages import generate_pages
+
+        path = f"{DUMP_DIR}/pages"
+        generate_pages(spark, 200, partitions=8).write.mode("overwrite").parquet(path)
+        _TREE_CACHE[key] = spark.read.parquet(path).cache()
+    return _TREE_CACHE[key]
 
 
 def q_pages_extract(spark, sf_dir):
@@ -3088,6 +3129,7 @@ WHERE h.avg_tokens >= 40.0 AND p.lang = 'en'
 # URL canonicalization, link-graph extraction (operators/curation.py)
 # --------------------------------------------------------------------------
 
+_PAGES_SQL = f"SELECT * FROM {_PAGES_PQ}"
 
 
 def q_para_dedup(spark, sf_dir):

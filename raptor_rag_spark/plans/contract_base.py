@@ -1,13 +1,11 @@
 """Helpers shared by the contract registry (``plans/contract.py``) and its
 spatial twins (``plans/contract_spatial.py``): table loading, the scratch
-and dump directories, the cached tree and pages dumps, and the constants and
-SQL fragments both modules' queries use. Both import from here, so either
-can be imported first.
+directory, and the constants and SQL fragments both modules' queries use.
+Both import from here at load time, so either can be imported first.
 """
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,62 +120,3 @@ def _sql_kde_heatmap() -> str:
 
 
 KDE_HOT_T = 1.5
-
-
-_TREE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-# The built tree passes through Python kernels (chunker/embedder), so DuckDB
-# cannot recompute it from the raw tables — but it CAN read the engine's own
-# parquet output. Each tree query therefore dumps the (deterministic) tree +
-# query embeddings under the checkout's .tree_dumps/ and the oracle
-# re-derives the query result from those same bits with twin SQL — upgrading
-# the tree retrieval / rollup family from rows-only to exact checks (the dump
-# is rewritten by the Spark side of each contract run before the oracle
-# reads it).
-DUMP_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tree_dumps"
-)
-
-
-def _dump_path(name: str, sf_dir: str) -> str:
-    return os.path.join(DUMP_DIR, f"{os.path.basename(sf_dir.rstrip('/'))}_{name}")
-
-
-def _tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _TREE_CACHE:
-        from ..config import ClusterTreeConfig
-        from .build_tree import build_tree
-
-        docs = ld(spark, sf_dir, "documents")
-        cfg = ClusterTreeConfig(max_tokens=64, num_layers=3, max_resolution=8)
-        tree = build_tree(docs, cfg)
-        path = _dump_path("nodes", sf_dir)
-        tree.write.mode("overwrite").parquet(path)
-        # read back: Spark queries and DuckDB oracles consume identical bits
-        _TREE_CACHE[key] = spark.read.parquet(path).cache()
-    return _TREE_CACHE[key]
-
-
-# oracles run at sf0.01 (the contract's compare scale)
-_NODES_PQ = f"read_parquet('{DUMP_DIR}/sf0.01_nodes/*.parquet')"
-
-
-_PAGES_PQ = f"read_parquet('{DUMP_DIR}/pages/*.parquet')"
-
-
-def _pages(spark: SparkSession) -> DataFrame:
-    """Synthetic pages, dumped + read back so the oracle sees identical bits
-    (same pattern as the tree dump)."""
-    key = (id(spark), "pages")
-    if key not in _TREE_CACHE:
-        from ..sources.pages import generate_pages
-
-        path = f"{DUMP_DIR}/pages"
-        generate_pages(spark, 200, partitions=8).write.mode("overwrite").parquet(path)
-        _TREE_CACHE[key] = spark.read.parquet(path).cache()
-    return _TREE_CACHE[key]
-
-
-_PAGES_SQL = f"SELECT * FROM {_PAGES_PQ}"

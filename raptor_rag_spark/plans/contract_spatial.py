@@ -7,8 +7,10 @@ KDE-raster / scan-statistics / geostatistics / link-graph / lakehouse /
 trajectory query+oracle pairs, and plans/contract.py re-imports every public
 and ``_sql_*`` name so the registry and all external callers are unchanged.
 
-Shared helpers come from ``plans/contract_base.py``, so this module can be
-imported on its own.
+Shared helpers come from ``plans/contract_base.py``. The tree and pages
+dumps are plans/contract.py's, read through ``_dumps()`` when a twin runs:
+contract imports this module, so neither may need the other while loading,
+and either can be imported first.
 """
 
 from __future__ import annotations
@@ -17,9 +19,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import sqlgen as G
-from ..operators import dedup as D
-from ..operators import similarity as S
-from ..operators.pipjoin import pip_join
 from .contract_base import (
     BM25_QUERIES,
     DEC2,
@@ -28,17 +27,20 @@ from .contract_base import (
     KDE_HOT_T,
     KDE_RES,
     PIP_POLYS,
-    _NODES_PQ,
-    _PAGES_PQ,
-    _PAGES_SQL,
-    _pages,
     _pip_parity_sql,
     _sql_bm25,
     _sql_kde_heatmap,
-    _tree,
     ld,
     scratch_dir,
 )
+
+
+def _dumps():
+    """The registry module, which owns the tree and pages dumps."""
+    from . import contract
+
+    return contract
+
 
 # --------------------------------------------------------------------------
 # cell-set compaction / polyfill / spatial autocorrelation / host PageRank
@@ -285,14 +287,14 @@ def q_triangle_count(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.graph import triangle_count
 
-    return triangle_count(extract_links(_pages(spark)))
+    return triangle_count(extract_links(_dumps()._pages(spark)))
 
 
 def _sql_triangle_count() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.graph import triangle_count_sql
 
-    return triangle_count_sql(extract_links_sql(_PAGES_SQL))
+    return triangle_count_sql(extract_links_sql(_dumps()._PAGES_SQL))
 
 
 def q_bigram_lm(spark, sf_dir):
@@ -354,14 +356,14 @@ def q_kcore(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.graph import kcore
 
-    return kcore(extract_links(_pages(spark)), k=2, rounds=8)
+    return kcore(extract_links(_dumps()._pages(spark)), k=2, rounds=8)
 
 
 def _sql_kcore() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.graph import kcore_sql
 
-    return kcore_sql(extract_links_sql(_PAGES_SQL), k=2, rounds=8)
+    return kcore_sql(extract_links_sql(_dumps()._PAGES_SQL), k=2, rounds=8)
 
 
 def q_skyline(spark, sf_dir):
@@ -827,7 +829,7 @@ def q_crawl_diff(spark, sf_dir):
     full-outer join on the unique url key + one host rollup."""
     from ..operators.webops import crawl_diff, snapshot_b
 
-    pages = _pages(spark)
+    pages = _dumps()._pages(spark)
     return crawl_diff(pages.select("url", "text"), snapshot_b(pages))
 
 
@@ -835,7 +837,7 @@ def _sql_crawl_diff() -> str:
     from ..operators.webops import crawl_diff_sql, snapshot_b_sql
 
     return crawl_diff_sql(
-        f"SELECT url, text FROM ({_PAGES_SQL})", snapshot_b_sql(_PAGES_SQL)
+        f"SELECT url, text FROM ({_dumps()._PAGES_SQL})", snapshot_b_sql(_dumps()._PAGES_SQL)
     )
 
 
@@ -845,14 +847,14 @@ def q_robots_filter(spark, sf_dir):
     struct-ordered max per url (operators/webops.py)."""
     from ..operators.webops import robots_filter, robots_rules
 
-    pages = _pages(spark)
+    pages = _dumps()._pages(spark)
     return robots_filter(pages, robots_rules(pages))
 
 
 def _sql_robots_filter() -> str:
     from ..operators.webops import robots_filter_sql, robots_rules_sql
 
-    return robots_filter_sql(_PAGES_SQL, robots_rules_sql(_PAGES_SQL))
+    return robots_filter_sql(_dumps()._PAGES_SQL, robots_rules_sql(_dumps()._PAGES_SQL))
 
 
 def q_tile_labels(spark, sf_dir):
@@ -931,7 +933,7 @@ def q_crawl_frontier(spark, sf_dir):
     from ..operators.graph import link_pagerank
     from ..operators.webops import crawl_frontier
 
-    pages = _pages(spark)
+    pages = _dumps()._pages(spark)
     ranks = link_pagerank(extract_links(pages), iterations=5).select("host", "rank")
     return crawl_frontier(pages, ranks)
 
@@ -941,8 +943,8 @@ def _sql_crawl_frontier() -> str:
     from ..operators.graph import link_pagerank_sql
     from ..operators.webops import crawl_frontier_sql
 
-    ranks = f"SELECT host, rank FROM ({link_pagerank_sql(extract_links_sql(_PAGES_SQL), iterations=5)})"
-    return crawl_frontier_sql(_PAGES_SQL, ranks)
+    ranks = f"SELECT host, rank FROM ({link_pagerank_sql(extract_links_sql(_dumps()._PAGES_SQL), iterations=5)})"
+    return crawl_frontier_sql(_dumps()._PAGES_SQL, ranks)
 
 
 def q_kde_terrain(spark, sf_dir):
@@ -1197,14 +1199,14 @@ def q_host_pagerank(spark, sf_dir):
     curation pipeline, run on the metadata-scale host table."""
     from ..operators.graph import host_pagerank
 
-    return host_pagerank(_pages(spark), iterations=5)
+    return host_pagerank(_dumps()._pages(spark), iterations=5)
 
 
 def _sql_host_pagerank() -> str:
     from ..operators.graph import host_pagerank_sql
     from ..operators.webops import URL_RE
 
-    return host_pagerank_sql(f"SELECT url FROM {_PAGES_PQ}", URL_RE, iterations=5)
+    return host_pagerank_sql(f"SELECT url FROM {_dumps()._PAGES_PQ}", URL_RE, iterations=5)
 
 
 def q_tree_rouge(spark, sf_dir):
@@ -1215,7 +1217,7 @@ def q_tree_rouge(spark, sf_dir):
     identical tree-dump bits."""
     from ..operators.evalmetrics import rouge_l_pairs
 
-    tree = _tree(spark, sf_dir)
+    tree = _dumps()._tree(spark, sf_dir)
     parents = (
         tree.where(F.col("level") == 1)
         .select(F.col("node_id").alias("pair_id"), F.col("text").alias("prediction"), "children")
@@ -1247,9 +1249,9 @@ def _sql_tree_rouge() -> str:
     pairs = f"""
 WITH parents AS (
   SELECT node_id AS pair_id, text AS prediction, children
-  FROM {_NODES_PQ} WHERE level = 1 ORDER BY node_id LIMIT 12),
+  FROM {_dumps()._NODES_PQ} WHERE level = 1 ORDER BY node_id LIMIT 12),
 kids AS (SELECT pair_id, unnest(children) AS cid FROM parents),
-leaf AS (SELECT node_id AS cid, text AS ctext FROM {_NODES_PQ} WHERE level = 0),
+leaf AS (SELECT node_id AS cid, text AS ctext FROM {_dumps()._NODES_PQ} WHERE level = 0),
 gold AS (
   SELECT pair_id, string_agg(ctext, ' ' ORDER BY cid) AS gold
   FROM kids JOIN leaf USING (cid) GROUP BY pair_id)
@@ -1338,13 +1340,13 @@ def q_host_anomaly(spark, sf_dir):
     alert for redesigns, outages, and crawler traps."""
     from ..operators.webops import host_anomaly
 
-    return host_anomaly(_pages(spark), min_prior_weeks=3)
+    return host_anomaly(_dumps()._pages(spark), min_prior_weeks=3)
 
 
 def _sql_host_anomaly() -> str:
     from ..operators.webops import host_anomaly_sql
 
-    return host_anomaly_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}", min_prior_weeks=3)
+    return host_anomaly_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}", min_prior_weeks=3)
 
 
 def q_host_recency(spark, sf_dir):
@@ -1354,13 +1356,13 @@ def q_host_recency(spark, sf_dir):
     prior."""
     from ..operators.webops import host_recency
 
-    return host_recency(_pages(spark))
+    return host_recency(_dumps()._pages(spark))
 
 
 def _sql_host_recency() -> str:
     from ..operators.webops import host_recency_sql
 
-    return host_recency_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}")
+    return host_recency_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}")
 
 
 def q_term_bursts(spark, sf_dir):
@@ -1369,13 +1371,13 @@ def q_term_bursts(spark, sf_dir):
     point set, term-cardinality everything after, TakeOrdered top-k."""
     from ..operators.webops import term_bursts
 
-    return term_bursts(_pages(spark))
+    return term_bursts(_dumps()._pages(spark))
 
 
 def _sql_term_bursts() -> str:
     from ..operators.webops import term_bursts_sql
 
-    return term_bursts_sql(f"SELECT warc_ts, text FROM {_PAGES_PQ}")
+    return term_bursts_sql(f"SELECT warc_ts, text FROM {_dumps()._PAGES_PQ}")
 
 
 def q_anchor_text(spark, sf_dir):
@@ -1384,13 +1386,13 @@ def q_anchor_text(spark, sf_dir):
     top-k window; the highest-precision ranking feature a crawl yields."""
     from ..operators.curation import anchor_text_profile
 
-    return anchor_text_profile(_pages(spark))
+    return anchor_text_profile(_dumps()._pages(spark))
 
 
 def _sql_anchor_text() -> str:
     from ..operators.curation import anchor_text_profile_sql
 
-    return anchor_text_profile_sql(_PAGES_SQL)
+    return anchor_text_profile_sql(_dumps()._PAGES_SQL)
 
 
 def q_host_distances(spark, sf_dir):
@@ -1401,14 +1403,14 @@ def q_host_distances(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.graph import host_distances
 
-    return host_distances(extract_links(_pages(spark)))
+    return host_distances(extract_links(_dumps()._pages(spark)))
 
 
 def _sql_host_distances() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.graph import host_distances_sql
 
-    return host_distances_sql(extract_links_sql(_PAGES_SQL))
+    return host_distances_sql(extract_links_sql(_dumps()._PAGES_SQL))
 
 
 GEO_LAT0, GEO_LON0 = 0.7, -2.1  # reference point for the geodesic query
@@ -2227,14 +2229,14 @@ def q_host_communities(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.graph import host_communities
 
-    return host_communities(extract_links(_pages(spark)))
+    return host_communities(extract_links(_dumps()._pages(spark)))
 
 
 def _sql_host_communities() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.graph import host_communities_sql
 
-    return host_communities_sql(extract_links_sql(_PAGES_SQL))
+    return host_communities_sql(extract_links_sql(_dumps()._PAGES_SQL))
 
 
 def q_path_rollup(spark, sf_dir):
@@ -2243,13 +2245,13 @@ def q_path_rollup(spark, sf_dir):
     groupBy — the drill-down surface over site structure."""
     from ..operators.webops import path_rollup
 
-    return path_rollup(_pages(spark))
+    return path_rollup(_dumps()._pages(spark))
 
 
 def _sql_path_rollup() -> str:
     from ..operators.webops import path_rollup_sql
 
-    return path_rollup_sql(f"SELECT url, text FROM {_PAGES_PQ}")
+    return path_rollup_sql(f"SELECT url, text FROM {_dumps()._PAGES_PQ}")
 
 
 def q_hex_cells(spark, sf_dir):
@@ -3166,14 +3168,14 @@ def q_hyperball(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.hyperball import hyperball
 
-    return hyperball(extract_links(_pages(spark)), rounds=4)
+    return hyperball(extract_links(_dumps()._pages(spark)), rounds=4)
 
 
 def _sql_hyperball() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.hyperball import hyperball_sql
 
-    return hyperball_sql(extract_links_sql(_PAGES_SQL), rounds=4)
+    return hyperball_sql(extract_links_sql(_dumps()._PAGES_SQL), rounds=4)
 
 
 def q_lof(spark, sf_dir):
@@ -3632,14 +3634,14 @@ def q_graph_structure(spark, sf_dir):
     from ..operators.curation import extract_links
     from ..operators.graph import graph_structure
 
-    return graph_structure(extract_links(_pages(spark)))
+    return graph_structure(extract_links(_dumps()._pages(spark)))
 
 
 def _sql_graph_structure() -> str:
     from ..operators.curation import extract_links_sql
     from ..operators.graph import graph_structure_sql
 
-    return graph_structure_sql(extract_links_sql(_PAGES_SQL))
+    return graph_structure_sql(extract_links_sql(_dumps()._PAGES_SQL))
 
 
 def q_bootstrap_ci(spark, sf_dir):
@@ -3852,13 +3854,13 @@ def q_doc_novelty(spark, sf_dir):
     first seen in its own week — the freshness prioritization signal."""
     from ..operators.drift import doc_novelty
 
-    return doc_novelty(_pages(spark))
+    return doc_novelty(_dumps()._pages(spark))
 
 
 def _sql_doc_novelty() -> str:
     from ..operators.drift import doc_novelty_sql
 
-    return doc_novelty_sql(f"SELECT url, warc_ts, text FROM {_PAGES_PQ}")
+    return doc_novelty_sql(f"SELECT url, warc_ts, text FROM {_dumps()._PAGES_PQ}")
 
 
 def q_tile_quantiles(spark, sf_dir):
@@ -3896,14 +3898,14 @@ def q_host_mad(spark, sf_dir):
     from ..operators.drift import host_mad_anomaly
     from ..operators.webops import URL_RE
 
-    return host_mad_anomaly(_pages(spark), URL_RE)
+    return host_mad_anomaly(_dumps()._pages(spark), URL_RE)
 
 
 def _sql_host_mad() -> str:
     from ..operators.drift import host_mad_anomaly_sql
     from ..operators.webops import URL_RE
 
-    return host_mad_anomaly_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}", URL_RE)
+    return host_mad_anomaly_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}", URL_RE)
 
 
 def q_host_forecast(spark, sf_dir):
@@ -3913,14 +3915,14 @@ def q_host_forecast(spark, sf_dir):
     from ..operators.drift import host_ses_forecast
     from ..operators.webops import URL_RE
 
-    return host_ses_forecast(_pages(spark), URL_RE)
+    return host_ses_forecast(_dumps()._pages(spark), URL_RE)
 
 
 def _sql_host_forecast() -> str:
     from ..operators.drift import host_ses_forecast_sql
     from ..operators.webops import URL_RE
 
-    return host_ses_forecast_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}", URL_RE)
+    return host_ses_forecast_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}", URL_RE)
 
 
 def q_host_cusum(spark, sf_dir):
@@ -3931,14 +3933,14 @@ def q_host_cusum(spark, sf_dir):
     from ..operators.drift import host_cusum
     from ..operators.webops import URL_RE
 
-    return host_cusum(_pages(spark), URL_RE)
+    return host_cusum(_dumps()._pages(spark), URL_RE)
 
 
 def _sql_host_cusum() -> str:
     from ..operators.drift import host_cusum_sql
     from ..operators.webops import URL_RE
 
-    return host_cusum_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}", URL_RE)
+    return host_cusum_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}", URL_RE)
 
 
 def q_raster_upsample(spark, sf_dir):
@@ -4229,13 +4231,13 @@ def q_term_drift(spark, sf_dir):
     the distribution-shift alarm for a recrawled corpus."""
     from ..operators.drift import term_drift
 
-    return term_drift(_pages(spark))
+    return term_drift(_dumps()._pages(spark))
 
 
 def _sql_term_drift() -> str:
     from ..operators.drift import term_drift_sql
 
-    return term_drift_sql(f"SELECT warc_ts, text FROM {_PAGES_PQ}")
+    return term_drift_sql(f"SELECT warc_ts, text FROM {_dumps()._PAGES_PQ}")
 
 
 def q_theil_sen(spark, sf_dir):
@@ -4245,14 +4247,14 @@ def q_theil_sen(spark, sf_dir):
     from ..operators.drift import theil_sen_hosts
     from ..operators.webops import URL_RE
 
-    return theil_sen_hosts(_pages(spark), URL_RE)
+    return theil_sen_hosts(_dumps()._pages(spark), URL_RE)
 
 
 def _sql_theil_sen() -> str:
     from ..operators.drift import theil_sen_hosts_sql
     from ..operators.webops import URL_RE
 
-    return theil_sen_hosts_sql(f"SELECT url, warc_ts FROM {_PAGES_PQ}", URL_RE)
+    return theil_sen_hosts_sql(f"SELECT url, warc_ts FROM {_dumps()._PAGES_PQ}", URL_RE)
 
 
 def q_host_gini(spark, sf_dir):
@@ -4262,14 +4264,14 @@ def q_host_gini(spark, sf_dir):
     from ..operators.drift import host_gini
     from ..operators.webops import URL_RE
 
-    return host_gini(_pages(spark), URL_RE)
+    return host_gini(_dumps()._pages(spark), URL_RE)
 
 
 def _sql_host_gini() -> str:
     from ..operators.drift import host_gini_sql
     from ..operators.webops import URL_RE
 
-    return host_gini_sql(f"SELECT url FROM {_PAGES_PQ}", URL_RE)
+    return host_gini_sql(f"SELECT url FROM {_dumps()._PAGES_PQ}", URL_RE)
 
 
 def q_join_counts(spark, sf_dir):
@@ -4349,5 +4351,3 @@ def _sql_textrank() -> str:
     from ..operators.keywords import textrank_keywords_sql
 
     return textrank_keywords_sql("SELECT text FROM documents")
-
-

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def _default_heap() -> str:
@@ -133,11 +133,8 @@ def warm_python_workers(spark: SparkSession, tasks_per_core: int = 4) -> None:
     spark.range(0, n, 1, n).mapInPandas(_warm, "x long").count()
 
 
-def plan_bytes_and_broadcast_bound(df: DataFrame) -> tuple[int, int]:
-    """``df``'s optimized-plan ``sizeInBytes`` and the session's
-    ``spark.sql.autoBroadcastJoinThreshold``: the statistic and bound Spark
-    itself uses to decide a relation is small enough to collect for a
-    broadcast. Reading both runs no job; a bound of -1 means nothing fits."""
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    bound = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return int(size), int(bound)
+def broadcast_bound(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes: the
+    bound under which Spark itself collects a relation for a broadcast, read
+    without a job. A bound of -1 means nothing fits."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())

@@ -336,6 +336,31 @@ def test_small_parent_level_commits_in_one_job(spark, docs, tmp_path, spark_jobs
     assert len(parents) >= 2 and set(parents.values()) == {1}, jobs_per_level
 
 
+def test_uncheckpointed_level_over_bound_takes_the_shuffle(spark, docs):
+    """The one-task rule holds a level's measured member bytes, observed by
+    its commit, against the bound, not the optimizer's estimate: an
+    uncheckpointed level's ``localCheckpoint`` keeps the estimate of the plan
+    that made it, which here undercounts the leaves. With the bound between
+    the two, the level is over it and is gathered by the salted shuffle."""
+    import raptor_rag_spark.plans.build_tree as bt
+    from raptor_rag_spark.operators.rollup import member_bytes
+
+    leaves, rows, size = bt._commit(bt._leaves(docs, ClusterTreeConfig(**CFG), "doc_id", "text"), 0)
+    estimate = int(leaves._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert rows == leaves.count() and size == leaves.select(F.sum(member_bytes())).first()[0]
+    assert estimate < size
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str((estimate + size) // 2))
+    try:
+        # the build's figure, and the one a direct call measures itself
+        for parents in (build_parent_nodes(leaves, 1, level_bytes=size), build_parent_nodes(leaves, 1)):
+            plan = parents._sc._jvm.PythonSQLUtils.explainString(parents._jdf.queryExecution(), "simple")
+            assert "Exchange hashpartitioning(parent_cell" in plan and "Coalesce 1" not in plan, plan
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_tile_and_level_stats(tree):
     tiles = tile_stats(tree)
     assert tiles.filter("n <= 0").count() == 0
